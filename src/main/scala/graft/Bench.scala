@@ -1,26 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.io.Stage
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Codegen-class cache sized to the suite (round-20, guide §1.2
-      // step 3): Spark's default LRU holds 100 generated classes while
-      // the ~300 declared queries compile far more distinct whole-stage
-      // units — the warm pass's compilations were fully evicted before
-      // the measured pass could reuse them, so EVERY pass re-ran janino
-      // on every query. Measured on the 60 most expensive lines at 32
-      // cpus: min-of-two total 127.5s → 97.1s with the cache sized to
-      // fit. This caches compiled CODE only (keyed by generated source)
-      // — every invocation still computes results from the parquet
-      // inputs. Not scale-dependent: a long-lived production session
-      // running many plan shapes wants the same setting.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     // ERROR, not WARN: stray WARN lines (task retries, shutdown races) land
     // after the JSON line when stdout/stderr are merged by the caller.
     spark.sparkContext.setLogLevel("ERROR")
@@ -30,11 +15,6 @@ object Bench {
     // The monitor tags every codegen WARN/ERROR with the query that was
     // executing so a fallback is a named number, not a mystery trace.
     graft.tools.CodegenMonitor.install()
-    // State metrics are listener-collected (round-13): registering before
-    // the first stream starts means every micro-batch's progress event is
-    // seen exactly once — recentProgress's bounded buffer undercounted
-    // :late totals past 100 batches.
-    graft.streaming.StateMetrics.ensureListener(spark)
     // JIT/codegen warmup. Spark's whole-stage-codegen cache is keyed by
     // generated source, which depends on the plan shape but not the data
     // scale — so one pass of every query at the smallest SF compiles and
@@ -106,19 +86,40 @@ object Bench {
       System.err.println(
         s"[bench] shuffle partitions: $shufP ($benchRows rows, $cpus cpus)")
     }
+    // Shared memoized stages (SparkEntry.stages) are built and timed as
+    // their OWN setup lines so each query's number measures the query,
+    // not whichever reader of the stage happened to run first and pay
+    // its build (a round-5 attribution artifact, first seen on d6).
+    // Which queries read which stage is not kept by hand — hand-kept
+    // member lists rotted (round 20: a retime of d21 ran against a cold
+    // cache the first pass never saw). The store counts each stage's
+    // reads, and a query reads a stage iff its count rose across the
+    // query's run.
+    def stagesRead[T](run: => T): (T, Seq[Stage]) = {
+      val before = SparkEntry.stages.map(_.reads(spark))
+      val out = run
+      (out, SparkEntry.stages.zip(before).collect {
+        case (st, n) if st.reads(spark) > n => st })
+    }
     // Warm-pass times double as per-query stall expectations below: a
     // measured run >3× its (overhead-dominated) sf0.001 time is far more
     // likely a one-off GC/host stall than real data-proportional work.
+    // The stages the warm pass reads are the ones the measured pass
+    // needs built; with no warm pass, every stage is built.
     val warmTimes = scala.collection.mutable.Map[String, Double]()
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
+    val warmed = new java.io.File(warmDir).isDirectory && warmDir != sfDir
+    val warmRead = scala.collection.mutable.Set[Stage]()
+    if (warmed) {
       SparkEntry.queries.foreach { case (name, fn) =>
         if (only.forall(_.contains(name))) {
           graft.tools.CodegenMonitor.setCurrent(s"warm:$name")
           val t0 = System.nanoTime()
-          try {
-            fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-            warmTimes(name) = (System.nanoTime() - t0) / 1e9
-          } catch { case _: Throwable => () }
+          warmRead ++= stagesRead {
+            try {
+              fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+              warmTimes(name) = (System.nanoTime() - t0) / 1e9
+            } catch { case _: Throwable => () }
+          }._2
         }
       }
     }
@@ -132,10 +133,10 @@ object Bench {
       val inf = spark.sparkContext.getRDDStorageInfo
       (inf.length, inf.map(i => i.memSize + i.diskSize).sum)
     }
-    // Unpersisting is safe ONLY for reference-free blocks: a pack memo
-    // still holding a localCheckpointed frame would crash on next read
+    // Unpersisting is safe ONLY for reference-free blocks: a memo still
+    // holding a localCheckpointed frame would crash on next read
     // (lineage is truncated — blocks are the only copy). Callers must
-    // clear the pack memo maps + PersistRegistry FIRST.
+    // clear the store (SparkEntry.clearPackCaches) FIRST.
     def unpersistAll(): Unit =
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
@@ -176,93 +177,29 @@ object Bench {
         }
       ((System.nanoTime() - t0) / 1e9, ok)
     }
-    // Shared memoized stages are built and timed as their OWN lines so
-    // each query's number measures the query, not whichever member of
-    // the pack happened to run first and pay the cache build (a round-5
-    // attribution artifact, first seen on d6): the dedup pack's
-    // verified-pairs stage feeds d2/d6/d7, the ML pack's standardized
-    // feature frame feeds j6/m2/m3/m4/m4b/m7.
-    // Each stage declares its own reset behavior at the definition site
-    // (round-19 ADVICE): diskBacked = the stage materializes a DISK
-    // layout that persists across the rep-pass cache reset, so its
-    // "rebuild" is a ~0s existence check — such stages must stay out of
-    // the retime/lo mechanism (a real 2.5s build would be "retimed"
-    // against a no-op, the setup_zorder artifact). A parallel name set
-    // rotted the moment someone added a stage and forgot it; the flag
-    // cannot be forgotten.
-    case class SharedStage(name: String, members: Set[String],
-                           build: () => Unit, diskBacked: Boolean = false)
-    val sharedStages = Seq(
-      // members = EVERY query reading the memoized shingle/signature or
-      // verified-pairs frames (round-20: the set previously listed only
-      // d2/d6/d7, so a retime of e.g. d21 was measured against a cold
-      // cache the first pass never saw — overstated rebuild, rejected
-      // retime, stalled number kept)
-      SharedStage("setup_dedup_shared",
-        Set("d2_minhash_lsh", "d6_dup_clusters", "d7_dedup_keep",
-          "d9_incremental", "d13_balanced_sample", "d17_leakage_safe_split",
-          "d18_cluster_size_hist", "d21_minhash_twotable", "d22_minhash_r2",
-          "d23_minhash_families", "d24_dedup_keep_target"),
-        () => graft.queries.DedupSimPack.buildSharedStage(spark, sfDir)),
-      SharedStage("setup_ml_features",
-        Set("j6_knn", "m2_kmeans", "m3_silhouette", "m4_dbscan",
-          "m4b_dbscan_distributed", "m7_pca"),
-        () => graft.queries.MlPack.buildSharedStage(spark, sfDir)),
-      // shared r4-rounded correlation graph feeding the graph tier
-      SharedStage("setup_corr_graph",
-        Set("m11_pagerank", "m12_triangles", "g16_wcc"),
-        () => graft.queries.MlPack.buildCorrStage(spark, sfDir)),
-      // shared HyperANF register rounds + per-node triangle counts
-      // (round-17, VERDICT item 2): previously pack-memoized only, so
-      // the rep-pass reset evicted them and the first repped member
-      // (g27) paid the rebuild first-pass billed to g24 — the r16
-      // med>1.3× breach. Ordered after setup_corr_graph: it reads the
-      // memoized corr graph.
-      SharedStage("setup_graph_shared",
-        Set("g24_hyperanf", "g26_anf_curve", "g27_graph_summary",
-          "m12_triangles"),
-        () => graft.queries.MlPack.buildAnfStage(spark, sfDir)),
-      // one-time date-partitioned re-layout of events (ingest cost a
-      // real deployment pays at landing time, not per query)
-      SharedStage("setup_events_part",
-        Set("p2_filtered_agg", "w14_daily", "w4b_time_range",
-          "a2_seasonal", "f2_retention", "dpp1_dynamic_pruning",
-          "f1b_funnel_sliced", "f4b_bars_sliced", "f5b_outliers_sliced",
-          "f6b_histogram_sliced", "f9b_rfm_sliced"),
-        () => { graft.io.EventsLayout.path(spark, sfDir); () },
-        diskBacked = true),
-      // one-time bucketed re-layout of the two fact tables (landing-time
-      // ingest cost, same convention)
-      SharedStage("setup_bucketed",
-        Set("j9_bucketed_join"),
-        () => { graft.io.BucketedLayout.tableNames(spark, sfDir); () },
-        diskBacked = true),
-      // one-time z-order re-layout of lineitem (same convention)
-      SharedStage("setup_zorder",
-        Set("z1_zorder_range"),
-        () => { graft.io.ZOrderLayout.path(spark, sfDir); () },
-        diskBacked = true))
+    // in SparkEntry.stages order: a stage may read an earlier one
+    val built = SparkEntry.stages.filter(st => !warmed || warmRead(st))
     val setup = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def buildShared(name: String, build: () => Unit): Unit = {
-      graft.tools.CodegenMonitor.setCurrent(name)
-      try build()
+    def buildShared(st: Stage): Unit = {
+      graft.tools.CodegenMonitor.setCurrent(st.name)
+      try st.build(spark, sfDir)
       catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        System.err.println(s"[bench] ${st.name} FAILED: ${e.getMessage}")
       }
     }
-    sharedStages.foreach { st =>
-      if (selected.exists(s => st.members.contains(s._1))) {
-        val t0 = System.nanoTime()
-        buildShared(st.name, st.build)
-        setup(st.name) = (System.nanoTime() - t0) / 1e9
-      }
+    built.foreach { st =>
+      val t0 = System.nanoTime()
+      buildShared(st)
+      setup(st.name) = (System.nanoTime() - t0) / 1e9
     }
     // Per-query occupancy samples (round-15): storage bytes AFTER each
     // query, so the end-of-suite growth the r14 reps paid for is a
     // measured curve, not a hypothesis. Driver-side map read — free.
     val storageByQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
+    val firstRead = scala.collection.mutable.Map[String, Seq[Stage]]()
     val firstPass = selected.map { case (name, fn) =>
-      val (t, ok) = timeOne(name, fn)
+      val ((t, ok), read) = stagesRead(timeOne(name, fn))
+      firstRead(name) = read
       storageByQuery(name) = storageSnap()._2
       (name, t, ok)
     }
@@ -301,11 +238,9 @@ object Bench {
         // would under-measure...
         SparkEntry.clearPackCaches(spark)
         // ...except shared stages billed to their own setup lines:
-        // rebuild them so a member query's re-time measures the query
-        // under the same cache state as the first pass.
-        sharedStages.foreach { st =>
-          if (st.members.contains(name)) buildShared(st.name, st.build)
-        }
+        // rebuild the ones the query read in the first pass, so its
+        // re-time measures the query under the same cache state.
+        firstRead(name).filter(built.contains).foreach(buildShared)
         val (t2, ok2) = timeOne(name, SparkEntry.queries(name))
         if (ok2 && t > 2.0 * t2) { retimed(name) = t; (name, t2, ok) }
         else (name, t, ok)
@@ -349,12 +284,10 @@ object Bench {
     // `retimed`, same rule as query lines); `value_lo` takes
     // min(first, rebuild) unconditionally.
     val setupRep = scala.collection.mutable.LinkedHashMap[String, Double]()
-    sharedStages.foreach { st =>
-      if (selected.exists(s => st.members.contains(s._1))) {
-        val t0 = System.nanoTime()
-        buildShared(st.name, st.build)
-        setupRep(st.name) = (System.nanoTime() - t0) / 1e9
-      }
+    built.foreach { st =>
+      val t0 = System.nanoTime()
+      buildShared(st)
+      setupRep(st.name) = (System.nanoTime() - t0) / 1e9
     }
     // Disk-layout stages persist ACROSS the cache reset — their
     // "rebuild" is an existence check, not a state-symmetric second
@@ -362,9 +295,9 @@ object Bench {
     // build "retimed" against a 0.0s no-op). Only the memo/block-
     // manager-backed stages, which the reset genuinely clears, join
     // the retime/lo mechanism; the disk stages' single sample stands.
-    // Membership now comes from each stage's own diskBacked flag.
-    val diskBackedSetups =
-      sharedStages.collect { case st if st.diskBacked => st.name }.toSet
+    // Each stage declares the flag at its definition site (round-19
+    // ADVICE), so a new disk stage cannot be forgotten here.
+    val diskBackedSetups = built.filter(_.diskBacked).map(_.name).toSet
     val setupLo: Map[String, Double] = setup.toMap.map { case (n, t) =>
       n -> (if (diskBackedSetups(n)) t
             else setupRep.get(n).map(math.min(t, _)).getOrElse(t)) }

@@ -79,16 +79,24 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
 
-  /** Release EVERY pack's session-scoped memo plus the internal-persist
-    * registry — the one reset point Bench/Verify call before
-    * unpersisting all reference-free RDD blocks. Iterating the pack
-    * list (not a hand-maintained call site) is what makes the reset
-    * structurally complete: a new pack's memo is covered the moment
-    * the pack is registered here, so the rep-pass hygiene reset cannot
-    * crash on a truncated-lineage block it didn't know to clear
-    * (round-15 ADVICE). */
-  def clearPackCaches(spark: SparkSession): Unit = {
-    packs.foreach(_.clearCaches(spark))
+  /** The shared stages, in build order: memoized state several queries
+    * read, which Bench builds and times as its own setup lines before
+    * the queries that read it (see [[graft.io.Stage]]). The corr graph
+    * precedes the graph sketches built over it. */
+  val stages: Seq[graft.io.Stage] = Seq(
+    DedupSimPack.sharedStage,
+    MlPack.featuresStage,
+    MlPack.corrStage,
+    MlPack.graphStage,
+    graft.io.EventsLayout.stage,
+    graft.io.BucketedLayout.stage,
+    graft.io.ZOrderLayout.stage)
+
+  /** Release every session-scoped memo and tracked persist — the one
+    * reset point Bench/Verify call before unpersisting all
+    * reference-free RDD blocks. Every pack memoizes through the one
+    * store, so the reset cannot miss a memo and later crash on a
+    * truncated-lineage block it didn't know to clear. */
+  def clearPackCaches(spark: SparkSession): Unit =
     graft.io.PersistRegistry.clear(spark)
-  }
 }

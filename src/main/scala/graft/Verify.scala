@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // suite-sized codegen-class cache — see the Bench.scala note
-      // (default 100 entries thrash across ~300 queries; this caches
-      // compiled code only, never results)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // exact state metrics for the st* runs (listener must precede the
-    // first stream start; see StateMetrics.ensureListener)
-    graft.streaming.StateMetrics.ensureListener(spark)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // NO data-proportional shuffle cap here, deliberately (round-19):
     // unlike Bench (where partitions=cpus at 32 measured ~60s of pure
@@ -42,9 +27,8 @@ object Verify {
     // Bounded block-manager occupancy (round-20 ADVICE): LoopFrames.keyed
     // pins its loop-constant frames via PersistRegistry, and a single
     // end-of-run clear let ~300 queries' worth accumulate. A periodic
-    // FULL reset (memos + registry together — clearing the registry
-    // alone would silently un-persist frames the pack memos still hand
-    // out) keeps occupancy bounded at a few dozen queries' worth; the
+    // FULL reset (memos and tracked persists together, one store)
+    // keeps occupancy bounded at a few dozen queries' worth; the
     // handful of shared-stage rebuilds it causes cost ~seconds at
     // sf0.01 against the gate's multi-minute budget.
     var sinceReset = 0
@@ -88,7 +72,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // release memoized/persisted frames before shutdown — keeps the
-    // registries from pinning the session if this main is embedded
+    // store from pinning the session if this main is embedded
     SparkEntry.clearPackCaches(spark)
     spark.stop()
   }

@@ -29,25 +29,16 @@ object BucketedLayout {
     * sf0.1 — the tradeoff a real deployment makes per-table. */
   val Buckets = 16
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+  private lazy val baseDir = TempDir("graft-bucketed-")
 
-  private lazy val baseDir: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-bucketed-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => delete(p.toFile)))
-    p
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(delete))
-    f.delete(): Unit
-  }
+  /** Both bucketed tables, written once per (session, dir). */
+  val stage: Stage = Stage("setup_bucketed", diskBacked = true)(tableNames(_, _))
 
   /** Materialize (memoized) both bucketed tables; returns their catalog
     * names. Table names carry the source-dir hash so layouts for
     * different scale factors coexist in one catalog. */
   def tableNames(spark: SparkSession, dir: String): (String, String) =
-    cache.computeIfAbsent((spark, dir), _ => {
+    stage.memo(spark, dir) {
       val suffix = LayoutDigest(dir)
       val li = s"graft_lineitem_bkt_$suffix"
       val ord = s"graft_orders_bkt_$suffix"
@@ -70,7 +61,7 @@ object BucketedLayout {
       build(li, Tables.lineitem(spark, dir), "l_orderkey")
       build(ord, Tables.orders(spark, dir), "o_orderkey")
       (li, ord)
-    })
+    }
 
   /** lineitem, hash-bucketed + sorted on `l_orderkey`. */
   def lineitem(spark: SparkSession, dir: String): DataFrame =

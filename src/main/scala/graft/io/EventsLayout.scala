@@ -22,28 +22,19 @@ import org.apache.spark.sql.types.{DateType, StructType}
   */
 object EventsLayout {
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** Partitioned-layout schema: source schema + the `day` DATE
     * partition column (declared, not inferred — partition discovery
     * only parses directory names against it). */
   val schema: StructType = Tables.eventsSchema.add("day", DateType)
 
-  private lazy val baseDir: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-events-byday-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => delete(p.toFile)))
-    p
-  }
+  private lazy val baseDir = TempDir("graft-events-byday-")
 
-  private def delete(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(delete))
-    f.delete(): Unit
-  }
+  /** The date-partitioned layout, written once per (session, dir). */
+  val stage: Stage = Stage("setup_events_part", diskBacked = true)(path(_, _))
 
   /** Materialize (memoized) and return the partitioned layout path. */
   def path(spark: SparkSession, dir: String): String =
-    cache.computeIfAbsent((spark, dir), _ => {
+    stage.memo(spark, dir) {
       val target = baseDir.resolve(LayoutDigest(dir)).toString
       // integer `div`, not `/`: keeps the day boundary exact, and stays
       // exact even for epochs past 2^53. Truncating division requires
@@ -54,7 +45,7 @@ object EventsLayout {
           expr("CAST((ts div 1000000) div 86400 AS INT)")))
       Sinks.parquet(withDay, target, partitionBy = Seq("day"))
       target
-    })
+    }
 
   /** Read the partitioned layout. `ts` is the raw µs epoch long (as
     * [[Tables.eventsRaw]]); filters on `day` prune directories. */

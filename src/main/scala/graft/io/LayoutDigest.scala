@@ -13,3 +13,19 @@ private[io] object LayoutDigest {
       .digest(dir.getBytes("UTF-8"))
       .take(8).map(b => f"$b%02x").mkString
 }
+
+/** A fresh process-lifetime temp dir, deleted recursively at JVM
+  * shutdown: the root under which layouts (and the session warehouse)
+  * are written. */
+private[graft] object TempDir {
+  def apply(prefix: String): java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    Runtime.getRuntime.addShutdownHook(new Thread(() => delete(p.toFile)))
+    p
+  }
+
+  private def delete(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(delete))
+    f.delete(): Unit
+  }
+}

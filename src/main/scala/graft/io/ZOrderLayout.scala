@@ -26,28 +26,19 @@ object ZOrderLayout {
     * the curve. */
   val Files = 32
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private lazy val baseDir = TempDir("graft-zorder-")
 
-  private lazy val baseDir: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-zorder-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => delete(p.toFile)))
-    p
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(delete))
-    f.delete(): Unit
-  }
+  /** The z-ordered lineitem layout, written once per (session, dir). */
+  val stage: Stage = Stage("setup_zorder", diskBacked = true)(path(_, _))
 
   /** Materialize (memoized) and return the z-ordered layout path. */
   def path(spark: SparkSession, dir: String): String =
-    cache.computeIfAbsent((spark, dir), _ => {
+    stage.memo(spark, dir) {
       val target = baseDir.resolve(LayoutDigest(dir)).toString
       ZOrder.writeZOrdered(Tables.lineitem(spark, dir),
         "l_extendedprice", "l_quantity", target, Files)
       target
-    })
+    }
 
   /** lineitem, laid out along the (price, quantity) Z-curve. */
   def lineitem(spark: SparkSession, dir: String): DataFrame =

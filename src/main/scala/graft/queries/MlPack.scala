@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{PersistRegistry, Stage, Tables}
 import graft.analytics.Analytics
 import graft.cluster.Clustering
 import graft.queries.Rx.{r4, r6}
@@ -19,43 +19,22 @@ import graft.queries.Rx.{r4, r6}
   */
 object MlPack extends QueryPack {
 
-  /** Session-scoped memoization: the driver invokes each query
-    * separately in one session, and m2/m3/m4/m4b/m6/m7/j6 all start
-    * from the same tiny standardized feature frame (and m2/m3 from the
-    * same fitted KMeans) — recomputing them per query would re-scan and
-    * re-fit identically. */
-  private val featCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val kmeansCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (DataFrame, Double, Array[Array[Double]])]()
-  private val corrCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  // m9's fitted-pipeline result (metrics are DRIVER-LOCAL rows, so the
-  // cache holds no executor state): m9 and its invariant companion m9i
-  // read the same Result instead of fitting the MLP twice.
-  private val m9Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      graft.sequence.ClassifierPipeline.Result]()
-  // m6b/m6c share one distributed-Louvain run: the assignment is a
-  // localCheckpointed ~node-count frame, so caching it is cheap and the
-  // summary query doesn't replay the 2-level × 4-round move schedule.
-  private val louvainCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
-  // g24/g26/g27 share ONE HyperANF register iteration over the corr
-  // graph (round-13, verdict item 1: the three queries each rebuilt the
-  // identical merge chain — ~14s of the 253s round-12 bench was the same
-  // registers built three times). Each round frame is a ≤ n·m-row
-  // localCheckpointed table, so the cache holds materialized state only.
-  private val anfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      IndexedSeq[DataFrame]]()
-  // m12/g27 share the per-node triangle counts on the same graph (g27
-  // additionally re-ran the m12 wedge join before round 13).
-  private val triCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
+  // Session-scoped memos live in the PersistRegistry store: the driver
+  // invokes each query separately in one session, and m2/m3/m4/m4b/m6/
+  // m7/j6 all start from the same tiny standardized feature frame (and
+  // m2/m3 from the same fitted KMeans) — recomputing them per query
+  // would re-scan and re-fit identically.
+
+  /** The standardized feature frame j6/m2/m3/m4/m4b/m7 read. */
+  val featuresStage: Stage = Stage("setup_ml_features")(buildSharedStage)
+
+  /** The shared correlation graph the graph tier reads. */
+  val corrStage: Stage = Stage("setup_corr_graph")(buildCorrStage)
+
+  /** The HyperANF register rounds and per-node triangle counts
+    * g24/g26/g27/m12 read. Listed after [[corrStage]]: it reads the
+    * corr graph. */
+  val graphStage: Stage = Stage("setup_graph_shared")(buildAnfStage)
 
   /** Shared r4-rounded correlation edge list (ka < kb, |r| > 0.3) — the
     * graph m11/m12/g16 all read; memoized+persisted like the feature
@@ -64,18 +43,18 @@ object MlPack extends QueryPack {
     * their golden pins predate the r4 contract, and rounding can flip
     * |r|-boundary edges.) */
   def corrGraph(s: SparkSession, dir: String): DataFrame =
-    corrCache.computeIfAbsent((s, dir), _ => {
+    corrStage.memo(s, dir) {
       import s.implicits._
       val daily = Tables.events(s, dir)
         .filter($"user_id" < 200)
         .groupBy(unix_micros(date_trunc("day", $"ts")).as("day"), $"user_id")
         .agg(sum($"value").as("v"))
-      Analytics.pairwiseCorr(daily, "day", "user_id", "v")
-        .select($"key_a".cast("long").as("ka"),
-          $"key_b".cast("long").as("kb"), Rx.r4($"corr").as("r"))
-        .filter(abs($"r") > 0.3)
-        .persist()
-    })
+      PersistRegistry.trackPersist(
+        Analytics.pairwiseCorr(daily, "day", "user_id", "v")
+          .select($"key_a".cast("long").as("ka"),
+            $"key_b".cast("long").as("kb"), Rx.r4($"corr").as("r"))
+          .filter(abs($"r") > 0.3))
+    }
 
   /** Materialize the shared correlation graph (Bench times it as its
     * own "setup_corr_graph" line, the shared-stage convention). */
@@ -96,9 +75,10 @@ object MlPack extends QueryPack {
     * (already localCheckpointed by `run`, so the cache holds a
     * materialized ~node-count frame). */
   private def louvainAssign(s: SparkSession, dir: String): DataFrame =
-    louvainCache.computeIfAbsent((s, dir), _ =>
+    PersistRegistry.memo(s, "ml_louvain", dir) {
       graft.graph.LouvainDist.run(louvainEdges(s, dir),
-        roundsPerLevel = 4, levels = 2))
+        roundsPerLevel = 4, levels = 2)
+    }
 
   /** UNWEIGHTED symmetric edge list of the shared correlation graph —
     * the g23/g24/g26/g27 input. */
@@ -113,17 +93,19 @@ object MlPack extends QueryPack {
     * [[corrEdgesSym]] — every frame localCheckpointed, built once per
     * (session, dir) however many of g24/g26/g27 run. */
   private def anfRounds(s: SparkSession, dir: String): IndexedSeq[DataFrame] =
-    anfCache.computeIfAbsent((s, dir), _ =>
+    graphStage.memo(s, dir, ":anf") {
       graft.graph.HyperAnf.registerRounds(corrEdgesSym(s, dir),
-        k = 3, p = 8, checkpointEach = true))
+        k = 3, p = 8, checkpointEach = true)
+    }
 
   /** Memoized per-node triangle counts over the shared corr graph
     * (m12's count-probed hybrid enumeration), shared with g27. */
   private def triPerNode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    triCache.computeIfAbsent((s, dir), _ =>
+    graphStage.memo(s, dir, ":tri") {
       graft.graph.Triangles.perNode(corrGraph(s, dir).select($"ka", $"kb"))
-        .localCheckpoint())
+        .localCheckpoint()
+    }
   }
 
   /** DuckDB prelude: the UNWEIGHTED symmetric correlation edge list
@@ -191,52 +173,14 @@ object MlPack extends QueryPack {
     triPerNode(s, dir).count(); ()
   }
 
-  /** Release all memoized state for a session (or, with `session = null`
-    * semantics omitted, everything): unpersists the cached feature frames
-    * and drops the model references, so long-lived library sessions that
-    * touch many data dirs don't accumulate RDD blocks indefinitely. */
-  override def clearCaches(session: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    featCache.asScala.toList.foreach { case (k, df) =>
-      if (k._1 eq session) { df.unpersist(); featCache.remove(k) }
-    }
-    corrCache.asScala.toList.foreach { case (k, df) =>
-      if (k._1 eq session) { df.unpersist(); corrCache.remove(k) }
-    }
-    kmeansCache.asScala.keys.toList.filter(_._1 eq session)
-      .foreach(kmeansCache.remove)
-    m9Cache.asScala.keys.toList.filter(_._1 eq session)
-      .foreach(m9Cache.remove)
-    louvainCache.asScala.keys.toList.filter(_._1 eq session)
-      .foreach(louvainCache.remove)
-    anfCache.asScala.keys.toList.filter(_._1 eq session)
-      .foreach(anfCache.remove)
-    triCache.asScala.keys.toList.filter(_._1 eq session)
-      .foreach(triCache.remove)
-  }
-
-  /** Release everything regardless of session. */
-  def clearAllCaches(): Unit = {
-    import scala.jdk.CollectionConverters._
-    featCache.values.asScala.foreach(_.unpersist())
-    featCache.clear()
-    corrCache.values.asScala.foreach(_.unpersist())
-    corrCache.clear()
-    kmeansCache.clear()
-    m9Cache.clear()
-    louvainCache.clear()
-    anfCache.clear()
-    triCache.clear()
-  }
-
   /** Per-user 2-feature frame (mean, sample-std of value), standardized
     * to population z-scores — the clustering input. */
   private def userFeatures(s: SparkSession, dir: String): DataFrame =
-    featCache.computeIfAbsent((s, dir), _ => {
+    featuresStage.memo(s, dir) {
       val f = Tables.events(s, dir).groupBy(col("user_id"))
         .agg(avg(col("value")).as("mu"), stddev_samp(col("value")).as("sd"))
-      Clustering.standardize(f, Seq("mu", "sd")).persist()
-    })
+      PersistRegistry.trackPersist(Clustering.standardize(f, Seq("mu", "sd")))
+    }
 
   /** DBSCAN input: the standardized features rounded to 1e-6. The
     * rounding is the cross-engine determinism contract — aggregation
@@ -255,7 +199,7 @@ object MlPack extends QueryPack {
     * structural invariants; both read this. */
   private def m9Result(s: SparkSession, dir: String)
       : graft.sequence.ClassifierPipeline.Result =
-    m9Cache.computeIfAbsent((s, dir), _ => {
+    PersistRegistry.memo(s, "ml_m9", dir) {
       import s.implicits._
       val base = Tables.events(s, dir)
         .filter($"user_id" < 20) // reference trains on 3 symbols; bound the head
@@ -274,15 +218,16 @@ object MlPack extends QueryPack {
         // 15 LBFGS iterations: the 480-input head converges in ~10 on
         // this data; 30 doubled fit time for identical test metrics
         seqLen = 30, seed = 42L, maxIter = 15, hidden = 16)
-    })
+    }
 
   private def kmeans5(s: SparkSession, dir: String) =
-    kmeansCache.computeIfAbsent((s, dir),
+    PersistRegistry.memo(s, "ml_kmeans5", dir) {
       // coalesce(1): the feature frame is per-key aggregated (head-sized
       // by construction) and every Lloyd iteration is one Spark job —
       // one task per iteration instead of 32 near-empty task launches.
-      _ => Clustering.kmeansAssign(userFeatures(s, dir).coalesce(1),
-        Seq("mu", "sd"), 5, 42L))
+      Clustering.kmeansAssign(userFeatures(s, dir).coalesce(1),
+        Seq("mu", "sd"), 5, 42L)
+    }
 
   def queries: Seq[Q] = Seq(
 

@@ -22,19 +22,14 @@ final case class Q(
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
+/** A domain's declared queries. A pack keeps no session state of its
+  * own: memoized frames, fitted models and layouts live in
+  * [[graft.io.PersistRegistry]], and memo state several queries share
+  * is a [[graft.io.Stage]] listed in `SparkEntry.stages`, so
+  * `SparkEntry.clearPackCaches` releases every pack's memos through one
+  * store and no pack can miss the reset. */
 trait QueryPack {
   def queries: Seq[Q]
-
-  /** Release every session-scoped memo this pack holds (persisted or
-    * localCheckpointed frames, fitted models). Packs that memoize MUST
-    * override this: Bench's rep-pass hygiene reset unpersists ALL
-    * reference-free RDD blocks after iterating the packs' hooks via
-    * `SparkEntry.clearPackCaches`, and a memoized localCheckpointed
-    * frame whose blocks were evicted crashes on next read (lineage is
-    * truncated — the blocks are the only copy). Routing the reset
-    * through the trait means a future pack's memo cannot be silently
-    * missed by Bench (round-15 ADVICE). */
-  def clearCaches(session: SparkSession): Unit = { val _ = session }
 }
 
 /** Cross-engine float canonicalization for query outputs.

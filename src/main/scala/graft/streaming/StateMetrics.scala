@@ -21,8 +21,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
   * (default 100 entries) that undercounts the `:late` total — and can
   * miss the true peak — on runs with more micro-batches than the
   * buffer. A [[StreamingQueryListener]] registered BEFORE the first
-  * stream starts sees every progress event exactly once; sessions are
-  * registered by Bench/Verify/the test fixture at startup via
+  * stream starts sees every progress event exactly once; every
+  * `GraftSession.local` session registers it at startup via
   * [[ensureListener]], and [[record]] keeps the recentProgress scan
   * only as a fallback for sessions that never registered. */
 object StateMetrics {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -54,10 +53,7 @@ object ExchangeAudit {
     // lines for new queries; counts must still be taken cold — see
     // ShuffleBudgetSpec's cache-clearing preamble)
     val only = if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_DUMP_PLANS=<dir>: also write each query's counted
     // plan (toString of the executed plan) to <dir>/<name>.txt — the

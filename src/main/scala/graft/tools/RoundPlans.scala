@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility (round-21, VERDICT r20 item 6): dump the PER-ROUND
@@ -29,10 +28,7 @@ object RoundPlans {
 
   def main(args: Array[String]): Unit = {
     val outDir = if (args.length > 0) args(0) else "plans/r21"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: measure the Salting primitives against their naive
@@ -13,11 +12,9 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(20000000L)
     val hotShare = 0.8
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle join
-      .config("spark.sql.adaptive.enabled", "false")        // no AQE rescue
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(8)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle join
+    spark.conf.set("spark.sql.adaptive.enabled", "false")        // no AQE rescue
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

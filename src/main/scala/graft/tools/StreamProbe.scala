@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe (round-21): decompose a streaming line's wall time into
@@ -14,17 +13,13 @@ object StreamProbe {
     val name = if (args.length > 0) args(0) else "st9_stream_join"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUF", "10"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.local(cpus.toInt)
+    spark.conf.set("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_SHUF", "10"))
     // A/B knob: SPARK_GRAFT_CKPT=<dir> redirects the streaming temp
     // checkpoints (state store deltas + offset/commit logs)
     sys.env.get("SPARK_GRAFT_CKPT").foreach(d =>
-      b.config("spark.sql.streaming.checkpointLocation", d))
-    val spark = b.getOrCreate()
+      spark.conf.set("spark.sql.streaming.checkpointLocation", d))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     spark.range(1000000).selectExpr("sum(id)").collect()

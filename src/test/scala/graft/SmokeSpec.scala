@@ -3,22 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The specs' shared session: the one engine config (`GraftSession`)
+  * on a fixed local[4], so plan shapes do not depend on the host. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // exact state metrics for streaming specs (listener must precede the
-    // first stream start; see StateMetrics.ensureListener)
-    graft.streaming.StateMetrics.ensureListener(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 /** Driver-contract smoke: entry() yields rows; every declared query runs

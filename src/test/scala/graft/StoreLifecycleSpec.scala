@@ -1,0 +1,71 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import graft.io.EventsLayout
+import graft.queries.{DedupSimPack, MlPack}
+
+/** The session store's lifecycle at sf0.001: which stages a query
+  * reads (what Bench derives its setup lines and re-time rebuilds
+  * from), nested builds on a cold store, and what `clearPackCaches`
+  * releases and keeps. */
+class StoreLifecycleSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+  private val sf = "/root/testdata/sf0.001"
+
+  private def run(name: String) =
+    SparkEntry.queries(name)(spark, sf).collect().map(_.toString).sorted.toSeq
+
+  private def stagesRead(name: String): Set[String] = {
+    val before = SparkEntry.stages.map(_.reads(spark))
+    run(name)
+    SparkEntry.stages.zip(before).collect {
+      case (st, n) if st.reads(spark) > n => st.name
+    }.toSet
+  }
+
+  test("the seven stages keep their setup-line names and build order") {
+    assert(SparkEntry.stages.map(_.name) == Seq("setup_dedup_shared",
+      "setup_ml_features", "setup_corr_graph", "setup_graph_shared",
+      "setup_events_part", "setup_bucketed", "setup_zorder"))
+    assert(SparkEntry.stages.filter(_.diskBacked).map(_.name) ==
+      Seq("setup_events_part", "setup_bucketed", "setup_zorder"))
+  }
+
+  test("j6_knn reads only setup_ml_features; q1_pricing reads no stage") {
+    SparkEntry.clearPackCaches(spark)
+    assert(stagesRead("j6_knn") == Set("setup_ml_features"))
+    assert(stagesRead("q1_pricing").isEmpty)
+  }
+
+  test("a nested build on a cold store succeeds (m2_kmeans builds the features)") {
+    SparkEntry.clearPackCaches(spark)
+    assert(stagesRead("m2_kmeans") == Set("setup_ml_features"))
+  }
+
+  test("clearPackCaches unpersists the stage frames and keeps the events layout") {
+    SparkEntry.clearPackCaches(spark)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    MlPack.buildSharedStage(spark, sf)
+    MlPack.buildCorrStage(spark, sf)
+    DedupSimPack.buildSharedStage(spark, sf)
+    val built = sc.getPersistentRDDs.keySet -- before
+    // features, corr graph, shingles, signatures, verified pairs
+    assert(built.size >= 5, s"stage builds persisted only $built")
+    val layout = EventsLayout.path(spark, sf)
+    val queries = Seq("m2_kmeans", "d2_minhash_lsh", "m11_pagerank")
+    val rows = queries.map(run)
+
+    SparkEntry.clearPackCaches(spark)
+    val left = sc.getPersistentRDDs.keySet intersect built
+    assert(left.isEmpty, s"still persisted after clear: $left")
+    sc.setJobGroup("layout-reread", "events layout after clear")
+    try assert(EventsLayout.path(spark, sf) == layout)
+    finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("layout-reread").isEmpty,
+      "the disk-backed events layout was rewritten after the clear")
+    assert(new java.io.File(layout).isDirectory)
+
+    assert(queries.map(run) == rows, "re-running after the clear changed rows")
+  }
+}
