@@ -36,24 +36,67 @@ object MlPack extends QueryPack {
     * corr graph. */
   val graphStage: Stage = Stage("setup_graph_shared")(buildAnfStage)
 
+  /** Per-(day, user) value sums of the first 200 users — the input of
+    * both correlation graphs. Reference graph scale is ~100 symbols
+    * (market_analysis.py:309); the aggregation still scans the full
+    * fact table. */
+  private def dailyTop200(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables.events(s, dir)
+      .filter($"user_id" < 200)
+      .groupBy(unix_micros(date_trunc("day", $"ts")).as("day"), $"user_id")
+      .agg(sum($"value").as("v"))
+  }
+
   /** Shared r4-rounded correlation edge list (ka < kb, |r| > 0.3) — the
     * graph m11/m12/g16 all read; memoized+persisted like the feature
     * frame so each graph query's cost is its algorithm, not a repeated
-    * pairwise-corr build. (m6/m10 keep their own UNROUNDED edge build:
-    * their golden pins predate the r4 contract, and rounding can flip
-    * |r|-boundary edges.) */
+    * pairwise-corr build. m6/m6i/m10/m10i read the UNROUNDED graph of
+    * [[corrNet]] instead: their golden pins predate the r4 contract, and
+    * rounding can flip |r|-boundary edges. */
   def corrGraph(s: SparkSession, dir: String): DataFrame =
     corrStage.memo(s, dir) {
       import s.implicits._
-      val daily = Tables.events(s, dir)
-        .filter($"user_id" < 200)
-        .groupBy(unix_micros(date_trunc("day", $"ts")).as("day"), $"user_id")
-        .agg(sum($"value").as("v"))
       PersistRegistry.trackPersist(
-        Analytics.pairwiseCorr(daily, "day", "user_id", "v")
+        Analytics.pairwiseCorr(dailyTop200(s, dir), "day", "user_id", "v")
           .select($"key_a".cast("long").as("ka"),
             $"key_b".cast("long").as("kb"), Rx.r4($"corr").as("r"))
           .filter(abs($"r") > 0.3))
+    }
+
+  /** The unrounded |r| > 0.3 correlation network m6/m6i/m10/m10i read —
+    * the reference likewise builds its symbol graph once for both Louvain
+    * (market_analysis.py:309-337) and the layout (:399). Edges are sorted
+    * by (ka, kb) and nodes ascending: collect order is not deterministic,
+    * the layout and community outputs must be. Each derived value is
+    * lazy, so a query computes only what it reads, once per network. */
+  private final class CorrNet(val nodes: Seq[Long],
+      val edges: Seq[(Long, Long, Double)], countCandidates: () => Long) {
+    lazy val louvain: (Map[Long, Int], Double) = Clustering.louvain(nodes, edges)
+    lazy val layout: Map[Long, (Double, Double)] =
+      Clustering.springLayout(nodes, edges)
+    /** Distinct user_id < 200: the m6i/m10i cross-engine anchor. */
+    lazy val nCandidates: Long = countCandidates()
+    lazy val degree: Map[Long, Int] = edges.flatMap(e => Seq(e._1, e._2))
+      .groupBy(identity).view.mapValues(_.size).toMap
+  }
+
+  /** The [[CorrNet]], collected once per (session, dir). A plain memo,
+    * not part of [[corrStage]]: it holds only driver-side values (no
+    * cached blocks), and a stage build would move this collect into
+    * every setup. */
+  private def corrNet(s: SparkSession, dir: String): CorrNet =
+    PersistRegistry.memo(s, "ml_corr_net", dir) {
+      import s.implicits._
+      val daily = dailyTop200(s, dir)
+      val edges = Analytics.pairwiseCorr(daily, "day", "user_id", "v")
+        .filter(abs($"corr") > 0.3)
+        .select($"key_a".cast("long"), $"key_b".cast("long"), abs($"corr"))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSeq.sortBy(e => (e._1, e._2))
+      new CorrNet(edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted, edges,
+        () => daily.select($"user_id").distinct().count())
     }
 
   /** Materialize the shared correlation graph (Bench times it as its
@@ -108,19 +151,25 @@ object MlPack extends QueryPack {
     }
   }
 
+  /** DuckDB mirror of the correlation build up to the |r| filter: `d`
+    * is [[dailyTop200]], `c` the r4-rounded corr of every key pair. The
+    * corr-graph oracles open `WITH ${corrCtes},` and filter `c`. */
+  private val corrCtes: String =
+    """d AS (
+      |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
+      |    sum(value) AS v
+      |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
+      |c AS (
+      |  SELECT a.user_id AS ka, b.user_id AS kb,
+      |    round(corr(a.v, b.v) + 1e-9, 4) AS r
+      |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
+      |  GROUP BY 1, 2)""".stripMargin
+
   /** DuckDB prelude: the UNWEIGHTED symmetric correlation edge list
     * (the m15 corr build) — shared by the g23/g24 neighborhood-function
     * oracles. */
   private def corrEdgesCtes(): String =
-    s"""d AS (
-       |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
-       |    sum(value) AS v
-       |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
-       |c AS (
-       |  SELECT a.user_id AS ka, b.user_id AS kb,
-       |    round(corr(a.v, b.v) + 1e-9, 4) AS r
-       |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
-       |  GROUP BY 1, 2),
+    s"""${corrCtes},
        |e0 AS (SELECT ka, kb FROM c WHERE abs(r) > 0.3),
        |edges AS MATERIALIZED (
        |  SELECT ka AS src, kb AS dst FROM e0
@@ -134,15 +183,7 @@ object MlPack extends QueryPack {
     * subqueries all reference it, and inlining would rebuild the corr
     * self-join each time. */
   private def louvainOracleCtes(): String =
-    s"""d AS (
-       |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
-       |    sum(value) AS v
-       |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
-       |c AS (
-       |  SELECT a.user_id AS ka, b.user_id AS kb,
-       |    round(corr(a.v, b.v) + 1e-9, 4) AS r
-       |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
-       |  GROUP BY 1, 2),
+    s"""${corrCtes},
        |e0 AS (SELECT ka, kb, abs(r) AS w FROM c WHERE abs(r) > 0.3),
        |edges AS MATERIALIZED (
        |  SELECT ka AS src, kb AS dst, w FROM e0
@@ -227,6 +268,20 @@ object MlPack extends QueryPack {
       // one task per iteration instead of 32 near-empty task launches.
       Clustering.kmeansAssign(userFeatures(s, dir).coalesce(1),
         Seq("mu", "sd"), 5, 42L)
+    }
+
+  /** (squared-Euclidean, exact, point count) silhouettes of the
+    * [[kmeans5]] clustering — m3 and m3i's shared input. */
+  private def silhouettes5(s: SparkSession, dir: String): (Double, Double, Long) =
+    PersistRegistry.memo(s, "ml_silhouette5", dir) {
+      import s.implicits._
+      val (assigned, _, _) = kmeans5(s, dir)
+      val sq = Clustering.silhouette(assigned, Seq("mu", "sd"), "cluster")
+      val rows = assigned.select($"mu", $"sd", $"cluster").collect()
+      val exact = Clustering.silhouetteExact(
+        rows.map(r => Array(r.getDouble(0), r.getDouble(1))),
+        rows.map(_.getInt(2)))
+      (sq, exact, rows.length.toLong)
     }
 
   def queries: Seq[Q] = Seq(
@@ -334,12 +389,8 @@ object MlPack extends QueryPack {
     Q("m3_silhouette",
       (s, dir) => {
         import s.implicits._
-        val (assigned, cost, _) = kmeans5(s, dir)
-        val sil = Clustering.silhouette(assigned, Seq("mu", "sd"), "cluster")
-        val rows = assigned.select($"mu", $"sd", $"cluster").collect()
-        val exact = Clustering.silhouetteExact(
-          rows.map(r => Array(r.getDouble(0), r.getDouble(1))),
-          rows.map(_.getInt(2)))
+        val cost = kmeans5(s, dir)._2
+        val (sil, exact, _) = silhouettes5(s, dir)
         Seq((5, sil, exact, cost)).toDF("k", "silhouette_sq", "silhouette_exact", "inertia")
           .select($"k", r4($"silhouette_sq").as("silhouette_sq"),
             r4($"silhouette_exact").as("silhouette_exact"),
@@ -356,13 +407,9 @@ object MlPack extends QueryPack {
     Q("m3i_silhouette_inv",
       (s, dir) => {
         import s.implicits._
-        val (assigned, cost, _) = kmeans5(s, dir)
-        val sil = Clustering.silhouette(assigned, Seq("mu", "sd"), "cluster")
-        val rows = assigned.select($"mu", $"sd", $"cluster").collect()
-        val exact = Clustering.silhouetteExact(
-          rows.map(r => Array(r.getDouble(0), r.getDouble(1))),
-          rows.map(_.getInt(2)))
-        Seq((rows.length.toLong,
+        val cost = kmeans5(s, dir)._2
+        val (sil, exact, nPoints) = silhouettes5(s, dir)
+        Seq((nPoints,
             sil >= -1.0 && sil <= 1.0,
             exact >= -1.0 && exact <= 1.0,
             cost >= 0.0 && !cost.isNaN))
@@ -529,15 +576,7 @@ object MlPack extends QueryPack {
           .unionByName(und.select($"kb".as("src"), $"ka".as("dst")))
         graft.graph.Landmarks.harmonic(edges, nLandmarks = 10, k = 6)
       },
-      Some(s"""WITH d AS (
-              |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
-              |    sum(value) AS v
-              |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
-              |c AS (
-              |  SELECT a.user_id AS ka, b.user_id AS kb,
-              |    round(corr(a.v, b.v) + 1e-9, 4) AS r
-              |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH ${corrCtes},
               |e0 AS (SELECT ka, kb FROM c WHERE abs(r) > 0.3),
               |edges AS MATERIALIZED (
               |  SELECT ka AS src, kb AS dst FROM e0
@@ -562,15 +601,7 @@ object MlPack extends QueryPack {
           .unionByName(und.select($"kb".as("src"), $"ka".as("dst")))
         graft.graph.Landmarks.eccentricity(edges, nLandmarks = 10, k = 6)
       },
-      Some(s"""WITH d AS (
-              |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
-              |    sum(value) AS v
-              |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
-              |c AS (
-              |  SELECT a.user_id AS ka, b.user_id AS kb,
-              |    round(corr(a.v, b.v) + 1e-9, 4) AS r
-              |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH ${corrCtes},
               |e0 AS (SELECT ka, kb FROM c WHERE abs(r) > 0.3),
               |edges AS MATERIALIZED (
               |  SELECT ka AS src, kb AS dst FROM e0
@@ -686,15 +717,7 @@ object MlPack extends QueryPack {
         graft.graph.PageRank.run(edges, k = 10, damping = 0.85)
           .select($"node", r6($"pr").as("pr"))
       },
-      Some(s"""WITH d AS (
-              |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
-              |    sum(value) AS v
-              |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
-              |c AS (
-              |  SELECT a.user_id AS ka, b.user_id AS kb,
-              |    round(corr(a.v, b.v) + 1e-9, 4) AS r
-              |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH ${corrCtes},
               |e0 AS (SELECT ka, kb, abs(r) AS w FROM c WHERE abs(r) > 0.3),
               |edges AS MATERIALIZED (
               |  SELECT ka AS src, kb AS dst, w FROM e0
@@ -723,15 +746,7 @@ object MlPack extends QueryPack {
           .select($"node", r6($"pr").as("ppr"))
           .orderBy($"node")
       },
-      Some(s"""WITH d AS (
-              |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
-              |    sum(value) AS v
-              |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
-              |c AS (
-              |  SELECT a.user_id AS ka, b.user_id AS kb,
-              |    round(corr(a.v, b.v) + 1e-9, 4) AS r
-              |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH ${corrCtes},
               |e0 AS (SELECT ka, kb, abs(r) AS w FROM c WHERE abs(r) > 0.3),
               |edges AS MATERIALIZED (
               |  SELECT ka AS src, kb AS dst, w FROM e0
@@ -775,15 +790,7 @@ object MlPack extends QueryPack {
                 / ($"deg" * ($"deg" - 1) / 2).cast("double"))
               .otherwise(lit(0.0))).as("clust"))
       },
-      Some("""WITH d AS (
-             |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
-             |    sum(value) AS v
-             |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
-             |c AS (
-             |  SELECT a.user_id AS ka, b.user_id AS kb,
-             |    round(corr(a.v, b.v) + 1e-9, 4) AS r
-             |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
-             |  GROUP BY 1, 2),
+      Some(s"""WITH ${corrCtes},
              |e0 AS (SELECT ka, kb FROM c WHERE abs(r) > 0.3),
              |tri AS (
              |  SELECT ab.ka AS a, ab.kb AS b, bc.kb AS c
@@ -830,15 +837,7 @@ object MlPack extends QueryPack {
           .join(sizes, "component")
           .select($"node", $"component", $"size")
       },
-      Some(s"""WITH d AS (
-              |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
-              |    sum(value) AS v
-              |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
-              |c AS (
-              |  SELECT a.user_id AS ka, b.user_id AS kb,
-              |    round(corr(a.v, b.v) + 1e-9, 4) AS r
-              |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH ${corrCtes},
               |e0 AS (SELECT ka, kb FROM c WHERE abs(r) > 0.3),
               |edges AS MATERIALIZED (
               |  SELECT ka AS src, kb AS dst FROM e0
@@ -932,15 +931,7 @@ object MlPack extends QueryPack {
           .crossJoin(broadcast(dstats))
           .select($"n_nodes", $"n_dir_edges", $"avg_deg", $"assortativity")
       },
-      Some("""WITH d AS (
-             |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
-             |    sum(value) AS v
-             |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
-             |c AS (
-             |  SELECT a.user_id AS ka, b.user_id AS kb,
-             |    round(corr(a.v, b.v) + 1e-9, 4) AS r
-             |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
-             |  GROUP BY 1, 2),
+      Some(s"""WITH ${corrCtes},
              |e0 AS (SELECT ka, kb FROM c WHERE abs(r) > 0.3),
              |edges AS MATERIALIZED (
              |  SELECT ka AS src, kb AS dst FROM e0
@@ -972,15 +963,7 @@ object MlPack extends QueryPack {
         graft.graph.LabelProp.run(edges, k = 5)
           .orderBy($"node")
       },
-      Some(s"""WITH d AS (
-              |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
-              |    sum(value) AS v
-              |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
-              |c AS (
-              |  SELECT a.user_id AS ka, b.user_id AS kb,
-              |    round(corr(a.v, b.v) + 1e-9, 4) AS r
-              |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH ${corrCtes},
               |e0 AS (SELECT ka, kb FROM c WHERE abs(r) > 0.3),
               |edges AS MATERIALIZED (
               |  SELECT ka AS src, kb AS dst FROM e0
@@ -991,22 +974,10 @@ object MlPack extends QueryPack {
     Q("m6_louvain",
       (s, dir) => {
         import s.implicits._
-        // Reference graph scale is ~100 symbols (market_analysis.py:309)
-        // — bound the node set the same way; the correlation aggregation
-        // upstream still scans the full fact table.
-        val daily = Tables.events(s, dir)
-          .filter($"user_id" < 200)
-          .groupBy(unix_micros(date_trunc("day", col("ts"))).as("day"), $"user_id")
-          .agg(sum($"value").as("v"))
-        val corr = Analytics.pairwiseCorr(daily, "day", "user_id", "v")
-          .filter(abs($"corr") > 0.3)
-          .select($"key_a".cast("long"), $"key_b".cast("long"), abs($"corr"))
-          .collect()
-        val edges = corr.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        val (comm, q) = Clustering.louvain(nodes, edges)
+        val net = corrNet(s, dir)
+        val (comm, q) = net.louvain
         val sizes = comm.groupBy(_._2).view.mapValues(_.size).toMap
-        Seq((nodes.size, edges.size, sizes.size, r4d(q),
+        Seq((net.nodes.size, net.edges.size, sizes.size, r4d(q),
           if (sizes.isEmpty) 0 else sizes.values.max))
           .toDF("n_nodes", "n_edges", "n_communities", "modularity", "max_community")
       },
@@ -1024,20 +995,11 @@ object MlPack extends QueryPack {
     Q("m6i_louvain_inv",
       (s, dir) => {
         import s.implicits._
-        val daily = Tables.events(s, dir)
-          .filter($"user_id" < 200)
-          .groupBy(unix_micros(date_trunc("day", col("ts"))).as("day"), $"user_id")
-          .agg(sum($"value").as("v"))
-        val nCandidates = daily.select($"user_id").distinct().count()
-        val corr = Analytics.pairwiseCorr(daily, "day", "user_id", "v")
-          .filter(abs($"corr") > 0.3)
-          .select($"key_a".cast("long"), $"key_b".cast("long"), abs($"corr"))
-          .collect()
-        val edges = corr.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        val (comm, q) = Clustering.louvain(nodes, edges)
+        val net = corrNet(s, dir)
+        val nodes = net.nodes
+        val (comm, q) = net.louvain
         val nComm = comm.values.toSet.size
-        Seq((nCandidates,
+        Seq((net.nCandidates,
             q >= -0.5 && q <= 1.0,
             nodes.forall(comm.contains) && comm.keySet.subsetOf(nodes.toSet),
             nodes.isEmpty || (nComm >= 1 && nComm <= nodes.size)))
@@ -1286,15 +1248,7 @@ object MlPack extends QueryPack {
             k = 4, rounds = 6)
           .orderBy($"ka", $"kb")
       },
-      Some(s"""WITH d AS (
-              |  SELECT epoch_us(date_trunc('day', ts)) AS day, user_id,
-              |    sum(value) AS v
-              |  FROM events WHERE user_id < 200 GROUP BY 1, 2),
-              |c AS (
-              |  SELECT a.user_id AS ka, b.user_id AS kb,
-              |    round(corr(a.v, b.v) + 1e-9, 4) AS r
-              |  FROM d a JOIN d b ON a.day = b.day AND a.user_id < b.user_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH ${corrCtes},
               |e0 AS MATERIALIZED (SELECT ka, kb FROM c WHERE abs(r) > 0.3),
               |${graft.graph.KTruss.oracleSqlSuffix(4, 6)}
               |SELECT e.ka, e.kb, coalesce(s.support, 0) AS support
@@ -1304,34 +1258,21 @@ object MlPack extends QueryPack {
 
     // M10: force-directed layout of the correlation network —
     // `nx.spring_layout(G, k=1/sqrt(n), iterations=50)` feeding
-    // plot_louvain_network (market_analysis.py:399). Same graph as m6;
-    // layout runs driver-side over the tiny aggregate (the distributed
-    // part is the correlation aggregation). Seed-deterministic but not
+    // plot_louvain_network (market_analysis.py:399). Same graph and
+    // Louvain run as m6 (both read [[corrNet]]); layout runs driver-side
+    // over the tiny aggregate (the distributed part is the correlation
+    // aggregation). Seed-deterministic but not
     // SQL-reproducible → rows-only; LayoutSpec + GoldenPinSpec pin the
     // algorithm, Sinks.htmlNetwork renders it (S7).
     Q("m10_layout",
       (s, dir) => {
         import s.implicits._
-        val daily = Tables.events(s, dir)
-          .filter($"user_id" < 200)
-          .groupBy(unix_micros(date_trunc("day", col("ts"))).as("day"), $"user_id")
-          .agg(sum($"value").as("v"))
-        val corr = Analytics.pairwiseCorr(daily, "day", "user_id", "v")
-          .filter(abs($"corr") > 0.3)
-          .select($"key_a".cast("long"), $"key_b".cast("long"), abs($"corr"))
-          .collect()
-        // sorted nodes/edges: collect order is not deterministic, the
-        // layout and community outputs must be
-        val edges = corr.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          .toSeq.sortBy(e => (e._1, e._2))
-        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-        val (comm, _) = Clustering.louvain(nodes, edges)
-        val pos = Clustering.springLayout(nodes, edges)
-        val deg = edges.flatMap(e => Seq(e._1, e._2))
-          .groupBy(identity).view.mapValues(_.size).toMap
-        nodes.map { id =>
+        val net = corrNet(s, dir)
+        val comm = net.louvain._1
+        val pos = net.layout
+        net.nodes.map { id =>
           (id, comm.getOrElse(id, -1), r4d(pos(id)._1), r4d(pos(id)._2),
-            deg(id))
+            net.degree(id))
         }.toDF("node", "community", "x", "y", "degree")
       },
       None),
@@ -1345,23 +1286,10 @@ object MlPack extends QueryPack {
     Q("m10i_layout_inv",
       (s, dir) => {
         import s.implicits._
-        val daily = Tables.events(s, dir)
-          .filter($"user_id" < 200)
-          .groupBy(unix_micros(date_trunc("day", col("ts"))).as("day"), $"user_id")
-          .agg(sum($"value").as("v"))
-        val nCandidates = daily.select($"user_id").distinct().count()
-        val corr = Analytics.pairwiseCorr(daily, "day", "user_id", "v")
-          .filter(abs($"corr") > 0.3)
-          .select($"key_a".cast("long"), $"key_b".cast("long"), abs($"corr"))
-          .collect()
-        val edges = corr.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          .toSeq.sortBy(e => (e._1, e._2))
-        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-        val pos = Clustering.springLayout(nodes, edges)
-        val deg = edges.flatMap(e => Seq(e._1, e._2))
-          .groupBy(identity).view.mapValues(_.size).toMap
+        val net = corrNet(s, dir)
+        val (nodes, pos, deg) = (net.nodes, net.layout, net.degree)
         def finite(d: Double) = !d.isNaN && !d.isInfinite
-        Seq((nCandidates,
+        Seq((net.nCandidates,
             nodes.forall(pos.contains) && pos.size == nodes.size,
             nodes.forall(id => finite(pos(id)._1) && finite(pos(id)._2)),
             nodes.forall(id => deg.getOrElse(id, 0) >= 1)))

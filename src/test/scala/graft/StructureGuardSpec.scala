@@ -41,4 +41,24 @@ class StructureGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty,
       hits.mkString("memoize through PersistRegistry / Stage instead:\n", "\n", ""))
   }
+
+  test("MlPack runs the pairwise-corr build only in its two graph memos") {
+    // every call must sit in corrGraph (r4-rounded, persisted) or corrNet
+    // (unrounded, collected): a per-query copy rebuilds a graph the
+    // session already holds
+    val f = sources.find(_.getName == "MlPack.scala")
+      .getOrElse(fail("MlPack.scala not found"))
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    val text = try src.mkString finally src.close()
+    // a call's owner is the nearest definition opening before it
+    val defs = """\b(?:def|class|object)\s+(\w+)""".r.findAllMatchIn(text).toSeq
+    val calls = """Analytics\.pairwiseCorr\(""".r.findAllMatchIn(text)
+      .map(_.start).toSeq
+    assert(calls.nonEmpty, "no pairwise-corr build found in MlPack")
+    val owners = calls.map(at =>
+      defs.takeWhile(_.start < at).lastOption.map(_.group(1)).getOrElse("?"))
+    val stray = owners.filterNot(Set("corrGraph", "corrNet"))
+    assert(stray.isEmpty,
+      stray.mkString("read MlPack.corrGraph or corrNet instead of building in: ", ", ", ""))
+  }
 }
