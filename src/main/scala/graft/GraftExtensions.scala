@@ -57,11 +57,12 @@ object GraftExtensions {
   private def fn(name: String, args: Expression*): Expression =
     UnresolvedFunction(Seq(name), args.toSeq, isDistinct = false)
 
-  /** Similarity.dot's left-to-right fold — the codegen'd native
-    * expression (bit-identical to the aggregate/zip_with composition,
-    * see DotProductSpec). */
+  /** Similarity.dot's left-to-right fold — the DotProduct kernel,
+    * called through the same StaticInvoke as the Column API
+    * (bit-identical to the aggregate/zip_with composition, see
+    * DotProductSpec). */
   private def dot(a: Expression, b: Expression): Expression =
-    graft.sim.DotProduct(a, b)
+    graft.sim.DotProduct.expr(a, b)
 
   private def cosine(a: Expression, b: Expression): Expression =
     fn("/",

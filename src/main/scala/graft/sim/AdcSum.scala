@@ -1,24 +1,18 @@
 package graft.sim
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
-/** Native codegen'd ADC table-lookup sum: Σ_i lut[i][codes[i]] — the
-  * per-(query, candidate) asymmetric-distance read of the PQ scoring
-  * scan (s7 full-corpus, s8 probed-cells).
+/** ADC table-lookup sum Σ_i lut[i][codes[i]], compiled through
+  * [[graft.Kernel]] — the per-(query, candidate) asymmetric-distance
+  * read of the PQ scoring scan (s7 full-corpus, s8 probed-cells).
   *
   * Replaces `aggregate(zip_with(codes, lut, (c, row) =>
   * element_at(row, c + 1)), 0.0, _ + _)` — both HOFs are
   * CodegenFallback, so every (query, corpus) pair on the O(corpus ×
   * queries) hot path walked an interpreted zip/lambda/element_at tree
-  * per subspace (the SqAdist2 finding, round 12, applied to the PQ
-  * flavor this round). A loop in generated code is constant-size at
-  * any m and keeps the surrounding WholeStageCodegen span compiled.
+  * per subspace. The kernel is one constant-size loop at any m.
   *
   * Bit-parity with the HOF composition (pinned in CellAssignSpec):
   * left-to-right IEEE summation from +0.0 (each term is a
@@ -27,23 +21,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * two lengths disagreeing (zip_with pads the short side with null →
   * null term → null sum), a null element on either side, or a code
   * outside its lut row (element_at's out-of-bounds null). */
-case class AdcSum(left: Expression, right: Expression)
-  extends BinaryExpression {
+object AdcSum {
+  /** Column factory: (codes array<int>, lut array<array<double>>). */
+  def apply(codes: Column, lut: Column): Column =
+    graft.Kernel.call(this, "adcSum", DoubleType, Seq(codes, lut),
+      Seq(ArrayType(IntegerType), ArrayType(ArrayType(DoubleType))))
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(IntegerType, _), ArrayType(ArrayType(DoubleType, _), _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<int>, array<array<double>>), " +
-        s"got ${l.simpleString(10)} and ${r.simpleString(10)}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_adc_sum"
-
-  override def nullSafeEval(c: Any, l: Any): Any = {
-    val codes = c.asInstanceOf[ArrayData]
-    val lut = l.asInstanceOf[ArrayData]
+  def adcSum(codes: ArrayData, lut: ArrayData): java.lang.Double = {
     val n = codes.numElements()
     if (lut.numElements() != n) return null
     var sum = 0.0
@@ -59,43 +43,4 @@ case class AdcSum(left: Expression, right: Expression)
     }
     sum
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, l) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sum = ctx.freshName("sum")
-      val row = ctx.freshName("row")
-      val code = ctx.freshName("code")
-      s"""
-         |final int $n = $c.numElements();
-         |if ($l.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $sum = 0.0;
-         |  int $i = 0;
-         |  for (; $i < $n; $i++) {
-         |    if ($c.isNullAt($i) || $l.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    org.apache.spark.sql.catalyst.util.ArrayData $row = $l.getArray($i);
-         |    final int $code = $c.getInt($i);
-         |    if ($code < 0 || $code >= $row.numElements() || $row.isNullAt($code)) {
-         |      ${ev.isNull} = true; break;
-         |    }
-         |    $sum += $row.getDouble($code);
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $sum; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AdcSum =
-    copy(left = newLeft, right = newRight)
-}
-
-object AdcSum {
-  /** Column factory: (codes array<int>, lut array<array<double>>). */
-  def apply(codes: Column, lut: Column): Column =
-    ColumnBridge.column(AdcSum(
-      ColumnBridge.expression(codes), ColumnBridge.expression(lut)))
 }

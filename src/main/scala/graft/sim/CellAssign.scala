@@ -1,11 +1,8 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import graft.cluster.ArgminDist2
 
@@ -17,22 +14,23 @@ import graft.cluster.ArgminDist2
   * pays a corpus-keyed Exchange per assignment; collapsing the
   * (bounded, ≤65536-row — the coarseCells contract) centroid table
   * into ONE broadcast row and evaluating the argmin as a compiled
-  * per-row loop makes assignment a pure projection: zero corpus
-  * shuffles, same winner.
+  * per-row kernel ([[graft.Kernel]]) makes assignment a pure
+  * projection: zero corpus shuffles, same winner.
   *
   * Bit-parity with the aggregate form (the ArgminDist2 scaladoc
   * argument, pinned in CellAssignSpec on real embeddings): candidates
   * visited in ascending-cid order (collapse sorts by cid) with strict
-  * `<` replacement ≡ lexicographic `min(struct(d2, cid))`; d2
-  * accumulates left-to-right from +0.0 ≡ `dist2Unrolled`'s term fold
-  * (first term a square, never −0.0).
+  * `<` replacement ≡ lexicographic `min(struct(d2, cid))`; d2 is
+  * [[Dist2.sum]], the left-to-right fold from +0.0 of the [[Dist2]]
+  * kernel and of the unrolled term sum before it (first term a square,
+  * never −0.0).
   */
 object CellAssign {
 
   /** Collapse a bounded centroid table into ONE row holding
     * `outCol` = `array<struct<cid int, cvec array<double>>>` sorted
-    * ascending by cid — the broadcast shape [[ArgminDist2]] and
-    * [[ArgTopNDist2]] consume. The single-partition aggregate sees
+    * ascending by cid — the broadcast shape [[nearest]] and [[topN]]
+    * consume. The single-partition aggregate sees
     * only the (≤65536-row) centroid table, never the corpus. */
   def collapse(cells: DataFrame, cellCol: String, vecCol: String,
                outCol: String = "__cents"): DataFrame =
@@ -47,49 +45,30 @@ object CellAssign {
   /** `array<int>` of the `n` nearest centroid ids ordered by
     * (d2, cid) ascending — the map-only form of the bounded
     * `row_number().over(Window.partitionBy(id).orderBy(d2, cid))
-    * .filter(rank <= n)` probe/routing idiom. Fewer than `n`
-    * candidates yield them all; an unusable vector (shorter than
-    * `dims` — unreachable for the fixed-dims embedding tables) yields
-    * the empty array. */
-  def topN(v: Column, cents: Column, dims: Int, n: Int): Column =
-    ColumnBridge.column(ArgTopNDist2(
-      ColumnBridge.expression(v), ColumnBridge.expression(cents), dims, n))
-}
+    * .filter(rank <= n)` probe/routing idiom, as one compiled
+    * insertion loop per row. Fewer than `n` candidates yield them
+    * all; a null or unusable vector (shorter than `dims` —
+    * unreachable for the fixed-dims embedding tables) yields the empty
+    * array.
+    *
+    * Tie/skip semantics match [[ArgminDist2]]: ascending-cid visit
+    * with strict lexicographic displacement (an equal-d2 later cid
+    * never displaces an earlier one — the window's (d2, cid) order),
+    * and a centroid with a short/null-element vector is skipped (its
+    * d2 would have been null). */
+  def topN(v: Column, cents: Column, dims: Int, n: Int): Column = {
+    require(dims >= 1 && n >= 1)
+    graft.Kernel.call(this, "argTopN",
+      ArrayType(IntegerType, containsNull = false),
+      Seq(v, cents, lit(dims), lit(n)),
+      Seq(ArrayType(DoubleType), ArgminDist2.centsType, IntegerType, IntegerType),
+      nullIn = false, nullOut = false)
+  }
 
-/** Top-`n` nearest centroids as one compiled per-row loop — the
-  * multi-winner sibling of [[graft.cluster.ArgminDist2]] (shared input
-  * shape: `left` = `array<double>`, `right` = the collapsed centroid
-  * row, sorted ascending by cid). Returns the winning cids ordered by
-  * (d2, cid) ascending — exactly the rows a
-  * `row_number over (orderBy d2, cid) <= n` window keeps, in rank
-  * order. CodegenFallback like [[graft.text.GramHash]]: the eval is
-  * one compiled insertion loop per row, replacing a corpus-sized
-  * window Exchange+Sort.
-  *
-  * Tie/skip semantics match ArgminDist2: ascending-cid visit with
-  * strict lexicographic displacement (an equal-d2 later cid never
-  * displaces an earlier one — the window's (d2, cid) order), and a
-  * centroid with a short/null-element vector is skipped (its d2 would
-  * have been null; unreachable for the fixed-dims tables, documented
-  * for exactness). */
-case class ArgTopNDist2(left: Expression, right: Expression, dims: Int, n: Int)
-  extends BinaryExpression with CodegenFallback {
+  private val noCells = new GenericArrayData(new Array[Int](0))
 
-  require(dims >= 1 && n >= 1)
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_argtopn_dist2"
-
-  private val empty = new GenericArrayData(new Array[Int](0))
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    if (a == null || b == null) return empty
-    val v = a.asInstanceOf[ArrayData]
-    if (v.numElements() < dims) return empty
-    val cents = b.asInstanceOf[ArrayData]
+  def argTopN(v: ArrayData, cents: ArrayData, dims: Int, n: Int): ArrayData = {
+    if (v == null || cents == null || v.numElements() < dims) return noCells
     val k = cents.numElements()
     val bestD = new Array[Double](n)
     val bestC = new Array[Int](n)
@@ -100,18 +79,8 @@ case class ArgTopNDist2(left: Expression, right: Expression, dims: Int, n: Int)
         val cr = cents.getStruct(j, 2)
         val cv = cr.getArray(1)
         if (cv.numElements() >= dims) {
-          var s = 0.0
-          var ok = true
-          var i = 0
-          while (i < dims && ok) {
-            if (v.isNullAt(i) || cv.isNullAt(i)) ok = false
-            else {
-              val d = v.getDouble(i) - cv.getDouble(i)
-              s += d * d
-            }
-            i += 1
-          }
-          if (ok) {
+          val s = Dist2.sum(v, cv, dims)
+          if (s != Dist2.NullD2) {
             val c = cr.getInt(0)
             // insertion position: strictly after every kept entry with
             // (d2, cid) <= (s, c) — cids ascend, so ties keep the
@@ -132,11 +101,7 @@ case class ArgTopNDist2(left: Expression, right: Expression, dims: Int, n: Int)
       }
       j += 1
     }
-    if (count == 0) empty
+    if (count == 0) noCells
     else new GenericArrayData(java.util.Arrays.copyOf(bestC, count))
   }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArgTopNDist2 =
-    copy(left = newLeft, right = newRight)
 }

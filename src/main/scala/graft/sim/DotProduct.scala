@@ -1,50 +1,40 @@
 package graft.sim
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-/** Native codegen'd dot product over two `array<double>` columns — the
-  * inner loop of every similarity operator (s1/s2/s3 top-k, d5
-  * embedding near-dup).
+/** Per-row dot product over two `array<double>` columns — the inner
+  * loop of every similarity operator (s1/s2/s3 top-k, d5 embedding
+  * near-dup), compiled through [[graft.Kernel]].
   *
   * Replaces the `aggregate(zip_with(a, b, *), 0.0, +)` higher-order
   * composition: HOFs are CodegenFallback (each pair walks an
   * interpreted lambda per element AND allocates the zipped
   * intermediate array), which breaks the surrounding WholeStageCodegen
-  * span right at the O(corpus × queries × dim) hot spot. This
-  * expression emits a tight primitive loop inside the generated code —
-  * no allocation, no virtual calls.
+  * span right at the O(corpus × queries × dim) hot spot. The kernel is
+  * one primitive loop: no allocation, no per-element lambda.
   *
   * Semantics are bit-identical to the HOF form (asserted in
   * DotProductSpec): left-to-right IEEE summation from +0.0, NULL if
   * either array is NULL, if the lengths differ (zip_with pads with
   * null), or if any element is NULL.
   */
-case class DotProduct(left: Expression, right: Expression)
-  extends BinaryExpression {
+object DotProduct {
+  private val vec = ArrayType(DoubleType)
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<double> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_dot"
+  /** Column factory mirroring [[Similarity.dot]]. */
+  def apply(a: Column, b: Column): Column =
+    ColumnBridge.column(
+      expr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  /** The same call over expressions (the `graft_dot` SQL builder). */
+  def expr(a: Expression, b: Expression): Expression =
+    graft.Kernel.expr(this, "dot", DoubleType, Seq(a, b), Seq(vec, vec))
+
+  def dot(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var sum = 0.0
@@ -56,36 +46,4 @@ case class DotProduct(left: Expression, right: Expression)
     }
     sum
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sum = ctx.freshName("sum")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $sum = 0.0;
-         |  int $i = 0;
-         |  for (; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $sum += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $sum; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
-  /** Column factory mirroring [[Similarity.dot]]. */
-  def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }

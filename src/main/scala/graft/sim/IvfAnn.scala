@@ -136,7 +136,7 @@ object IvfAnn {
     val probes = Similarity.withNormalized(base.filter(queryPred), "v", "qv")
       .select(col("vec_id").as("query_id"), col("v"), col("qv"))
       .crossJoin(broadcast(cells))
-      .withColumn("cd2", Pq.dist2Unrolled(col("v"), col("cellv"), dims))
+      .withColumn("cd2", Dist2(col("v"), col("cellv"), dims))
       .withColumn("prank", row_number().over(wp))
       .filter(col("prank") <= nprobe)
       .select(col("query_id"), col("qv"), col("cell"))
@@ -326,14 +326,14 @@ object IvfAnn {
       .orderBy(col("__sd2"), col("sup"))
     val qsup = qbase.select(col("query_id").as("vec_id"), col("v"))
       .crossJoin(broadcast(supers))
-      .withColumn("__sd2", Pq.dist2Unrolled(col("v"), col("supv"), dims))
+      .withColumn("__sd2", Dist2(col("v"), col("supv"), dims))
       .withColumn("srank", row_number().over(ws))
       .filter(col("srank") <= nps)
       .select(col("vec_id").as("query_id"), col("sup"))
     val wp = Window.partitionBy(col("query_id")).orderBy(col("cd2"), col("cell"))
     val probes = qbase.join(qsup, "query_id")
       .join(broadcast(cellSup), "sup")
-      .withColumn("cd2", Pq.dist2Unrolled(col("v"), col("cellv"), dims))
+      .withColumn("cd2", Dist2(col("v"), col("cellv"), dims))
       .withColumn("prank", row_number().over(wp))
       .filter(col("prank") <= np)
       .select(col("query_id"), col("qv"), col("cell"))

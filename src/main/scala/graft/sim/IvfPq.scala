@@ -79,7 +79,7 @@ object IvfPq {
     val probes = corpus.filter(queryPred)
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
       .crossJoin(broadcast(cells))
-      .withColumn("cd2", Pq.dist2Unrolled(col("__qv"), col("cellv"), dims))
+      .withColumn("cd2", Dist2(col("__qv"), col("cellv"), dims))
       .withColumn("prank", row_number().over(wp))
       .filter(col("prank") <= nprobe)
       .select(col("query_id"), col("cell"))
@@ -105,7 +105,7 @@ object IvfPq {
     val exact = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"))
       .join(broadcast(short), "corpus_id")
       .join(broadcast(qv), "query_id")
-      .withColumn("d2", Pq.dist2Unrolled(col("__qv"), col("__cv"), dims))
+      .withColumn("d2", Dist2(col("__qv"), col("__cv"), dims))
       .select(col("query_id"), col("corpus_id"), col("d2"))
     TopK.perKey(exact, Seq("query_id"),
         Seq(TopK.ascNullsLast(col("d2")), col("corpus_id")), k)
@@ -124,7 +124,7 @@ object IvfPq {
     val adChain = (0 until m)
       .map(i => s"max(qd2) FILTER (sub = $i)").mkString(" + ")
     // fixed-order squared-L2 between two full vectors (matches
-    // dist2Unrolled's left-assoc sum)
+    // the Dist2 kernel's left-to-right sum)
     def d2(a: String, b: String): String =
       s"""list_reduce(list_prepend(0.0,
          |      list_transform(range(1, $dims + 1),

@@ -45,7 +45,7 @@ object IvfSq {
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val probes = qv
       .crossJoin(broadcast(cells))
-      .withColumn("cd2", Pq.dist2Unrolled(col("__qv"), col("cellv"), dims))
+      .withColumn("cd2", Dist2(col("__qv"), col("cellv"), dims))
       .withColumn("prank", row_number().over(wp))
       .filter(col("prank") <= nprobe)
       .select(col("query_id"), col("cell"))
@@ -65,7 +65,7 @@ object IvfSq {
     val exact = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"))
       .join(broadcast(short), "corpus_id")
       .join(broadcast(qv), "query_id")
-      .withColumn("d2", Pq.dist2Unrolled(col("__qv"), col("__cv"), dims))
+      .withColumn("d2", Dist2(col("__qv"), col("__cv"), dims))
       .select(col("query_id"), col("corpus_id"), col("d2"))
     TopK.perKey(exact, Seq("query_id"),
         Seq(TopK.ascNullsLast(col("d2")), col("corpus_id")), k)

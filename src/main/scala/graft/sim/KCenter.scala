@@ -33,8 +33,9 @@ object KCenter {
   /** Fixed-order squared-L2 fold against a driver-side center vector.
     *
     * Round-21 MEASURED REJECTION of the compiled form: swapping the
-    * fold for `Pq.dist2Unrolled(v, typedLit(c), c.length)` (bit-parity,
-    * oracle green both SFs) read s15 0.95 → 3.9s at bench conditions —
+    * fold for the 64-term unrolled `element_at` distance tree against
+    * `typedLit(c)` (bit-parity, oracle green both SFs) read s15
+    * 0.95 → 3.9s at bench conditions —
     * every greedy round is a FRESH plan (the md chain grows a column
     * per round), so the k rounds pay k escalating whole-stage-codegen
     * compiles of 64-term unrolled trees where the CodegenFallback HOF

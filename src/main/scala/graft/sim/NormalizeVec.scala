@@ -1,25 +1,19 @@
 package graft.sim
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-/** Native per-row L2 normalization: `v / ‖v‖` — the shared
-  * pre-normalization of every cosine operator
-  * ([[Similarity.withNormalized]]: s1/s3/s13/s16/s17 ANN ranking, the
-  * d14 SemDedup pair stage, the d5/d20/st30 embedding near-dup tiers).
+/** Per-row L2 normalization `v / ‖v‖`, compiled through
+  * [[graft.Kernel]] — the shared pre-normalization of every cosine
+  * operator ([[Similarity.withNormalized]]: s1/s3/s13/s16/s17 ANN
+  * ranking, the d14 SemDedup pair stage, the d5/d20/st30 embedding
+  * near-dup tiers).
   *
   * Replaces the composition `nullif(sqrt(dot(v, v)), 0.0)` +
-  * `transform(v, e => e / nrm)` — the norm is the codegen'd
-  * [[DotProduct]], but `ArrayTransform` is CodegenFallback, so every
-  * corpus row walked an interpreted divide tree per element (the
-  * GramHash/NGrams finding applied to the vector tier). This
-  * expression is itself CodegenFallback, but its eval is ONE compiled
-  * loop per row: norm and divisions fused, no per-element lambda.
+  * `transform(v, e => e / nrm)`: `ArrayTransform` is CodegenFallback,
+  * so every corpus row walked an interpreted divide tree per element.
+  * The kernel is one loop per row, norm and divisions fused.
   *
   * Bit-parity with the composition (pinned in CellAssignSpec):
   *  - ‖v‖ = sqrt of the left-to-right IEEE sum of squares from +0.0
@@ -30,20 +24,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *    carrying a NULL element (null dot) yields an all-NULL element
   *    array of the same length — exactly what `e / NULL` produced per
   *    element; an empty vector yields the empty array. */
-case class NormalizeVec(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+object NormalizeVec {
+  /** `v / ‖v‖` column over an `array<double>` column. */
+  def apply(v: Column): Column =
+    graft.Kernel.call(this, "normalize",
+      ArrayType(DoubleType, containsNull = true), Seq(v),
+      Seq(ArrayType(DoubleType)), nullOut = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "graft_normalize_vec"
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  def normalize(v: ArrayData): ArrayData = {
     val n = v.numElements()
     var sum = 0.0
     var anyNull = false
@@ -62,13 +50,4 @@ case class NormalizeVec(child: Expression)
     // anyNull or zero norm: all-null elements, the e / NULL contract
     new GenericArrayData(out)
   }
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeVec =
-    copy(child = newChild)
-}
-
-object NormalizeVec {
-  /** `v / ‖v‖` column over an `array<double>` column. */
-  def apply(v: Column): Column =
-    ColumnBridge.column(NormalizeVec(ColumnBridge.expression(v)))
 }

@@ -40,17 +40,6 @@ object Pq {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), _ + _)
 
-  /** [[dist2]] with the length known at plan time, UNROLLED into plain
-    * codegen'd arithmetic (zip_with/aggregate evaluate interpreted —
-    * ~4× on the encode hot path). Bit-identical to the fold: the
-    * left-assoc term sum ((t1+t2)+…) equals (((0+t1)+t2)+…) because
-    * every term is ≥ 0, so the oracle's list_reduce still matches. */
-  def dist2Unrolled(a: Column, b: Column, len: Int): Column =
-    (1 to len).map { i =>
-      val d = element_at(a, i) - element_at(b, i)
-      d * d
-    }.reduce(_ + _)
-
   private def subvectors(v: Column, m: Int, subLen: Int): Column =
     transform(sequence(lit(0), lit(m - 1)),
       i => slice(v, i * subLen + 1, lit(subLen)))
@@ -99,7 +88,7 @@ object Pq {
       .select(col(idCol), posexplode(subvectors(col(vecCol), m, subLen)))
       .select(col(idCol), col("pos").as("sub"), col("col").as("subv"))
       .join(broadcast(cb), "sub")
-      .withColumn("d2", dist2Unrolled(col("subv"), col("cvec"), subLen))
+      .withColumn("d2", Dist2(col("subv"), col("cvec"), subLen))
       .groupBy(col(idCol), col("sub"))
       .agg(min(struct(col("d2"), col("cid"))).as("mn"))
       .groupBy(col(idCol))
@@ -119,7 +108,7 @@ object Pq {
         posexplode(subvectors(col(vecCol), m, subLen)))
       .select(col("query_id"), col("pos").as("sub"), col("col").as("qsubv"))
       .join(broadcast(cb), "sub")
-      .withColumn("qd2", dist2Unrolled(col("qsubv"), col("cvec"), subLen))
+      .withColumn("qd2", Dist2(col("qsubv"), col("cvec"), subLen))
       .groupBy(col("query_id"), col("sub"))
       .agg(transform(
         array_sort(collect_list(struct(col("cid"), col("qd2").as("d")))),
@@ -182,7 +171,7 @@ object Pq {
         col(vecCol).as("__cv"))
       .join(broadcast(short), "corpus_id")
       .join(broadcast(qv), "query_id")
-      .withColumn("d2", dist2Unrolled(col("__qv"), col("__cv"), dims))
+      .withColumn("d2", Dist2(col("__qv"), col("__cv"), dims))
       .select(col("query_id"), col("corpus_id"), col("d2"))
     TopK.perKey(exact, Seq("query_id"),
         Seq(TopK.ascNullsLast(col("d2")), col("corpus_id")), k)

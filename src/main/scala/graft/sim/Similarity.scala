@@ -17,16 +17,9 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Left-to-right fold dot product — bit-reproducible across engines.
-    * Lowers to the codegen'd [[DotProduct]] expression; the
-    * higher-order-function formulation below ([[dotHof]]) is the
-    * semantic reference it must match bit-for-bit (DotProductSpec). */
+    * Runs the compiled [[DotProduct]] kernel; DotProductSpec pins it
+    * bit for bit against the `zip_with` + `aggregate` composition. */
   def dot(x: Column, y: Column): Column = DotProduct(x, y)
-
-  /** The `zip_with` product + `aggregate` sum composition of [[dot]] —
-    * kept as the cross-verification reference (HOFs are CodegenFallback
-    * and allocate the zipped array per pair; don't use on hot paths). */
-  def dotHof(x: Column, y: Column): Column =
-    aggregate(zip_with(x, y, (u, v) => u * v), lit(0.0), (acc, z) => acc + z)
 
   /** Cosine similarity of two raw double-array columns. Prefer
     * pre-normalizing with [[withNormalized]] when one side is reused
@@ -42,14 +35,6 @@ object Similarity {
     * an interpreted divide tree per element per corpus row. */
   def withNormalized(df: DataFrame, vecCol: String, outCol: String): DataFrame =
     df.withColumn(outCol, NormalizeVec(col(vecCol)))
-
-  /** The HOF form of [[withNormalized]] — bit-parity reference for
-    * CellAssignSpec; not used on any query path. */
-  private[graft] def withNormalizedHof(df: DataFrame, vecCol: String,
-                                       outCol: String): DataFrame =
-    df.withColumn("__nrm", nullif(sqrt(dot(col(vecCol), col(vecCol))), lit(0.0)))
-      .withColumn(outCol, transform(col(vecCol), e => e / col("__nrm")))
-      .drop("__nrm")
 
   /** Exact brute-force top-k: for each query row, the k most-cosine-similar
     * corpus rows (self excluded). Queries are broadcast; both sides are

@@ -31,7 +31,7 @@ import graft.operators.TopK
   * `floor((v_d − min_d) / step_d)` — identical IEEE-double arithmetic
   * on both engines — and every distance is a left-associated sum of
   * non-negative terms, bit-equal to the oracle's `list_reduce` fold
-  * (the [[Pq.dist2Unrolled]] argument). Ranks tie-break on corpus id.
+  * (the [[Dist2]] argument). Ranks tie-break on corpus id.
   */
 object Sq {
 
@@ -115,7 +115,7 @@ object Sq {
         col(vecCol).as("__cv"))
       .join(broadcast(short), "corpus_id")
       .join(broadcast(qv), "query_id")
-      .withColumn("d2", Pq.dist2Unrolled(col("__qv"), col("__cv"), dims))
+      .withColumn("d2", Dist2(col("__qv"), col("__cv"), dims))
       .select(col("query_id"), col("corpus_id"), col("d2"))
     TopK.perKey(exact, Seq("query_id"),
         Seq(TopK.ascNullsLast(col("d2")), col("corpus_id")), k)

@@ -1,15 +1,12 @@
 package graft.sim
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
-/** Native codegen'd SQ asymmetric squared-L2: query floats vs
-  * reconstructed scalar-quantization cell centers,
+/** SQ asymmetric squared-L2, compiled through [[graft.Kernel]]: query
+  * floats vs reconstructed scalar-quantization cell centers,
   * Σ_i (qv[i] − (vm[i] + (codes[i] + 0.5)·st[i]))².
   *
   * Replaces the per-dimension UNROLLED Column tree [[Sq]] round 11
@@ -19,9 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * limit — BENCH_r11's unattributed `InternalCompilerException` stack
   * trace was exactly this expression failing to compile and the whole
   * stage silently falling back to interpreted execution on the
-  * O(corpus × queries) hot path. A loop in the generated code is the
-  * correct shape at ANY dimensionality: constant code size, no
-  * per-element null-check forest, and the surrounding
+  * O(corpus × queries) hot path. A loop is the correct shape at ANY
+  * dimensionality: constant code size, and the surrounding
   * WholeStageCodegen span stays compiled.
   *
   * Semantics are bit-identical to the unrolled form (SqAdistSpec
@@ -34,42 +30,26 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * out-of-bounds-null contract, restored for consistently-mis-sized
   * vectors (round-13 ADVICE fix).
   */
-// no default on expectedDims here: the Column-factory apply below carries
-// the default, and two overloads with defaults can't coexist
-case class SqAdist2(first: Expression, second: Expression,
-                    third: Expression, fourth: Expression,
-                    expectedDims: Int)
-  extends QuaternaryExpression {
+object SqAdist2 {
+  private val vec = ArrayType(DoubleType)
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def isArr(e: Expression, t: DataType): Boolean = e.dataType match {
-      case ArrayType(et, _) => et == t
-      case _ => false
-    }
-    val ok = isArr(first, DoubleType) && isArr(second, IntegerType) &&
-      isArr(third, DoubleType) && isArr(fourth, DoubleType)
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<double>, array<int>, array<double>, " +
-        s"array<double>), got ${children.map(_.dataType.simpleString).mkString(", ")}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_sq_adist2"
+  /** Column factory: (query vec, codes, per-dim mins, per-dim steps).
+    * `expectedDims` ≥ 0 additionally nulls any row whose arrays are not
+    * exactly that long (the declared-dimensionality contract). */
+  def apply(qv: Column, codes: Column, vm: Column, st: Column,
+            expectedDims: Int = -1): Column =
+    graft.Kernel.call(this, "sqAdist2", DoubleType,
+      Seq(qv, codes, vm, st, lit(expectedDims)),
+      Seq(vec, ArrayType(IntegerType), vec, vec, IntegerType))
 
-  override def nullSafeEval(q: Any, c: Any, m: Any, s: Any): Any = {
-    val qv = q.asInstanceOf[ArrayData]
-    val cd = c.asInstanceOf[ArrayData]
-    val vm = m.asInstanceOf[ArrayData]
-    val st = s.asInstanceOf[ArrayData]
+  def sqAdist2(qv: ArrayData, cd: ArrayData, vm: ArrayData, st: ArrayData,
+               expectedDims: Int): java.lang.Double = {
     val n = qv.numElements()
     if (cd.numElements() != n || vm.numElements() != n ||
         st.numElements() != n) return null
-    // expectedDims guard (round-13 ADVICE fix): with the loop form,
-    // vectors CONSISTENTLY shorter/longer than the configured dims would
-    // silently produce a distance where the round-11 unrolled
-    // element_at tree surfaced the mismatch as null — restore that
-    // contract when the caller declares the dimensionality
+    // vectors CONSISTENTLY shorter/longer than the configured dims
+    // would otherwise produce a distance where the round-11 unrolled
+    // element_at tree surfaced the mismatch as null
     if (expectedDims >= 0 && n != expectedDims) return null
     var sum = 0.0
     var i = 0
@@ -83,49 +63,4 @@ case class SqAdist2(first: Expression, second: Expression,
     }
     sum
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, c, m, s) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sum = ctx.freshName("sum")
-      val d = ctx.freshName("d")
-      val dimsGuard =
-        if (expectedDims >= 0) s" || $n != $expectedDims" else ""
-      s"""
-         |final int $n = $q.numElements();
-         |if ($c.numElements() != $n || $m.numElements() != $n ||
-         |    $s.numElements() != $n$dimsGuard) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $sum = 0.0;
-         |  int $i = 0;
-         |  for (; $i < $n; $i++) {
-         |    if ($q.isNullAt($i) || $c.isNullAt($i) || $m.isNullAt($i) ||
-         |        $s.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    final double $d = $q.getDouble($i) -
-         |      ($m.getDouble($i) + ($c.getInt($i) + 0.5) * $s.getDouble($i));
-         |    $sum += $d * $d;
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $sum; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression,
-      q: Expression): SqAdist2 =
-    copy(first = f, second = s, third = t, fourth = q)
-}
-
-object SqAdist2 {
-  /** Column factory: (query vec, codes, per-dim mins, per-dim steps).
-    * `expectedDims` ≥ 0 additionally nulls any row whose arrays are not
-    * exactly that long (the declared-dimensionality contract). */
-  def apply(qv: Column, codes: Column, vm: Column, st: Column,
-            expectedDims: Int = -1): Column =
-    ColumnBridge.column(SqAdist2(
-      ColumnBridge.expression(qv), ColumnBridge.expression(codes),
-      ColumnBridge.expression(vm), ColumnBridge.expression(st),
-      expectedDims))
 }

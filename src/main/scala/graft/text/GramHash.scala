@@ -1,25 +1,22 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
-/** Native per-row n-gram hash kernel: token array → `array<long>` of
-  * `hash60(concat_ws(" ", tok_i … tok_{i+n−1}))` for every position, in
-  * order, duplicates KEPT — the positional-anchor build of the span
-  * (d15) and content-defined-chunk (d12) dedup pipelines.
+/** Per-row n-gram hash kernel ([[graft.Kernel]]): token array →
+  * `array<long>` of `hash60(concat_ws(" ", tok_i … tok_{i+n−1}))` for
+  * every position, in order, duplicates KEPT — the positional-anchor
+  * build of the span (d15) and content-defined-chunk (d12) dedup
+  * pipelines.
   *
   * Replaces the higher-order composition
   * `when(size(ts) >= n, transform(sequence(1, size−n+1),
   * i => hash60(concat_ws(" ", ts[i]…ts[i+n−1])))).otherwise([])` —
   * `ArrayTransform` is CodegenFallback, so every gram of every document
-  * walked an interpreted concat+md5+conv expression tree per position
-  * (the ShingleMinHash finding, round-20, applied to the BATCH gram
-  * path this round). This expression is itself CodegenFallback, but
-  * its eval is ONE compiled loop per row.
+  * walked an interpreted concat+md5+conv expression tree per position.
+  * The kernel is one loop per row.
   *
   * Bit-exact parity with the built-in composition (pinned in
   * ShingleMinHashSpec's sibling test + the d12/d15 oracle hashes):
@@ -30,21 +27,19 @@ import org.apache.spark.sql.types._
   *  - `size(ts) < n` AND `ts` NULL both yield the EMPTY array — the
   *    `when`'s otherwise-branch caught both cases in the HOF form.
   */
-case class GramHash(child: Expression, n: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  require(n >= 1)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_gram_hash"
+object GramHash {
+  /** `array<long>` gram-hash column over a token-array column. */
+  def apply(toks: Column, n: Int): Column = {
+    require(n >= 1)
+    graft.Kernel.call(this, "gramHash",
+      ArrayType(LongType, containsNull = false), Seq(toks, lit(n)),
+      Seq(ArrayType(StringType), IntegerType), nullIn = false, nullOut = false)
+  }
 
   private val empty = new GenericArrayData(new Array[Long](0))
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return empty
-    val toks = v.asInstanceOf[ArrayData]
+  def gramHash(toks: ArrayData, n: Int): ArrayData = {
+    if (toks == null) return empty
     val len = toks.numElements()
     if (len < n) return empty
     val out = new Array[Long](len - n + 1)
@@ -70,13 +65,4 @@ case class GramHash(child: Expression, n: Int)
     }
     new GenericArrayData(out)
   }
-
-  override protected def withNewChildInternal(newChild: Expression): GramHash =
-    copy(child = newChild)
-}
-
-object GramHash {
-  /** `array<long>` gram-hash column over a token-array column. */
-  def apply(toks: Column, n: Int): Column =
-    ColumnBridge.column(GramHash(ColumnBridge.expression(toks), n))
 }

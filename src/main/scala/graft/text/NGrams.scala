@@ -1,31 +1,28 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native per-row word n-gram kernel: token array → `array<string>` of
-  * `concat_ws(" ", tok_i … tok_{i+n−1})` for every position, in order,
-  * duplicates KEPT — the string-emitting sibling of [[GramHash]]
-  * (round-21 "not yet optimized" queue item): the gram TEXT itself is
-  * the group/join key of the heavy-hitter (hh1/st21), repetition (t14),
-  * bigram-LM (t21) and n-gram-Jaccard (d4) paths, and
-  * `array_distinct(…)` of it is the shingle set of the whole MinHash
-  * dedup family, so those callers cannot take the hash-emitting kernel.
+/** Per-row word n-gram kernel ([[graft.Kernel]]): token array →
+  * `array<string>` of `concat_ws(" ", tok_i … tok_{i+n−1})` for every
+  * position, in order, duplicates KEPT — the string-emitting sibling of
+  * [[GramHash]]: the gram TEXT itself is the group/join key of the
+  * heavy-hitter (hh1/st21), repetition (t14), bigram-LM (t21) and
+  * n-gram-Jaccard (d4) paths, and `array_distinct(…)` of it is the
+  * shingle set of the whole MinHash dedup family, so those callers
+  * cannot take the hash-emitting kernel.
   *
   * Replaces the higher-order composition
   * `when(size(ts) >= n, transform(sequence(0, size−n),
   * i => concat_ws(" ", ts[i+1]…ts[i+n]))).otherwise([])` —
   * `ArrayTransform` is CodegenFallback, so every gram of every document
   * walked an interpreted concat tree per position AND dropped the whole
-  * enclosing projection out of whole-stage codegen. This expression is
-  * itself CodegenFallback, but its eval is ONE compiled loop per row
-  * building each gram with `UTF8String.concatWs` (byte-level, no
-  * String round-trip).
+  * enclosing projection out of whole-stage codegen. The kernel is one
+  * loop per row building each gram with `UTF8String.concatWs`
+  * (byte-level, no String round-trip).
   *
   * Bit-exact parity with the built-in composition (pinned in
   * ShingleMinHashSpec's sibling test + the t14/hh1/d4 oracle hashes):
@@ -36,22 +33,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `when`'s otherwise-branch caught both cases in the HOF form
   *    (size(NULL) is NULL, which fails the `>= n` predicate).
   */
-case class NGrams(child: Expression, n: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  require(n >= 1)
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_ngrams"
+object NGrams {
+  /** `array<string>` n-gram column over a token-array column. */
+  def apply(toks: Column, n: Int): Column = {
+    require(n >= 1)
+    graft.Kernel.call(this, "ngrams",
+      ArrayType(StringType, containsNull = false), Seq(toks, lit(n)),
+      Seq(ArrayType(StringType), IntegerType), nullIn = false, nullOut = false)
+  }
 
   private val empty = new GenericArrayData(new Array[AnyRef](0))
   private val space = UTF8String.fromString(" ")
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return empty
-    val toks = v.asInstanceOf[ArrayData]
+  def ngrams(toks: ArrayData, n: Int): ArrayData = {
+    if (toks == null) return empty
     val len = toks.numElements()
     if (len < n) return empty
     val out = new Array[AnyRef](len - n + 1)
@@ -71,13 +66,4 @@ case class NGrams(child: Expression, n: Int)
     }
     new GenericArrayData(out)
   }
-
-  override protected def withNewChildInternal(newChild: Expression): NGrams =
-    copy(child = newChild)
-}
-
-object NGrams {
-  /** `array<string>` n-gram column over a token-array column. */
-  def apply(toks: Column, n: Int): Column =
-    ColumnBridge.column(NGrams(ColumnBridge.expression(toks), n))
 }

@@ -2,16 +2,16 @@ package graft.text
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native per-row shingle + MinHash-signature kernel for the STATELESS
-  * streaming near-dedup lines (st28/st31): one compiled pass from raw
-  * `text` to `struct(shs array<string>, sig array<long>)`.
+/** Per-row shingle + MinHash-signature kernel ([[graft.Kernel]]) for
+  * the STATELESS streaming near-dedup lines (st28/st31): one compiled
+  * pass from raw `text` to `struct(shs array<string>, sig array<long>)`.
   *
   * Replaces the higher-order composition
   * `array_distinct(transform(sequence, …concat_ws…))` +
@@ -24,9 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * per-row md5). The streaming side cannot switch to the batch
   * explode + groupBy shape without acquiring a state store — in-row is
   * what keeps st28/st31 stateless — so the in-row kernel gets compiled
-  * instead. This expression is itself CodegenFallback, but its eval is
-  * ONE compiled loop per row; the interpreted-tree-per-element overhead
-  * is gone.
+  * instead.
   *
   * Bit-exact parity with the built-in composition (pinned in
   * ShingleMinHashSpec and by the st28/st31 oracle hashes):
@@ -41,33 +39,58 @@ import org.apache.spark.unsafe.types.UTF8String
   *    mod (2^31 − 1), for i in 0 until numPerm — every intermediate
   *    below 2^61 (the Dedup.permA/permB contract).
   *
-  * Empty/short texts (< n tokens) yield `shs = []` and a sig of
-  * Long.MaxValue sentinels; callers filter `size(shs) > 0` before
-  * using the signature, exactly as the HOF form did (array_min over
-  * an empty transform is NULL there — equally unusable, equally
-  * filtered).
+  * Empty/short texts (< n tokens) yield `shs = []` and `sig = []`: no
+  * signature rather than a sentinel one. Callers filter
+  * `size(shs) > 0` first; one that forgets reads past the end of `sig`
+  * (an error under ANSI) instead of band-colliding every empty
+  * document on an all-`Long.MaxValue` sentinel. A NULL text yields
+  * NULL.
   */
-case class ShingleMinHash(child: Expression, n: Int, numPerm: Int,
-                          permOffset: Int)
-  extends UnaryExpression with CodegenFallback {
+object ShingleMinHash {
+  private[text] val digest = new ThreadLocal[java.security.MessageDigest] {
+    override def initialValue(): java.security.MessageDigest =
+      java.security.MessageDigest.getInstance("MD5")
+  }
+  private val HEX = "0123456789abcdef".toCharArray
 
-  require(n >= 1 && numPerm >= 1 && permOffset >= 0)
+  /** First 15 lowercase-hex chars of a 16-byte digest. */
+  private[text] def hex15(d: Array[Byte]): String = {
+    val out = new Array[Char](15)
+    var i = 0
+    while (i < 15) {
+      val b = d(i / 2) & 0xff
+      out(i) = HEX(if (i % 2 == 0) b >>> 4 else b & 0xf)
+      i += 1
+    }
+    new String(out)
+  }
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("shs", ArrayType(StringType, containsNull = false)),
-    StructField("sig", ArrayType(LongType, containsNull = false))))
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "graft_shingle_minhash"
+  /** `struct(shs, sig)` column over a text column. The permutation
+    * tables are built here, once per column, and reach the kernel as
+    * two constant arguments. */
+  def apply(text: Column, n: Int, numPerm: Int,
+            permOffset: Int = 0): Column = {
+    require(n >= 1 && numPerm >= 1 && permOffset >= 0)
+    def table(f: Int => Long): Column = ColumnBridge.column(Literal(
+      UnsafeArrayData.fromPrimitiveArray(
+        Array.tabulate(numPerm)(i => f(permOffset + i))),
+      ArrayType(LongType, containsNull = false)))
+    graft.Kernel.call(this, "shingleMinHash",
+      StructType(Seq(
+        StructField("shs", ArrayType(StringType, containsNull = false)),
+        StructField("sig", ArrayType(LongType, containsNull = false)))),
+      Seq(text, lit(n), table(graft.dedup.Dedup.permA),
+        table(graft.dedup.Dedup.permB)),
+      Seq(StringType, IntegerType, ArrayType(LongType), ArrayType(LongType)),
+      nullOut = false)
+  }
 
   private val P = 2147483647L
-  private val as: Array[Long] =
-    (0 until numPerm).map(i => graft.dedup.Dedup.permA(permOffset + i)).toArray
-  private val bs: Array[Long] =
-    (0 until numPerm).map(i => graft.dedup.Dedup.permB(permOffset + i)).toArray
   private val splitPat = UTF8String.fromString("\\s+")
 
-  override def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[UTF8String].trim().split(splitPat, -1)
+  def shingleMinHash(text: UTF8String, n: Int, as: ArrayData,
+                     bs: ArrayData): InternalRow = {
+    val toks = text.trim().split(splitPat, -1)
     val seen = new java.util.LinkedHashSet[UTF8String]()
     if (toks.length >= n) {
       var i = 0
@@ -88,17 +111,18 @@ case class ShingleMinHash(child: Expression, n: Int, numPerm: Int,
         i += 1
       }
     }
+    val numPerm = if (seen.isEmpty) 0 else as.numElements()
     val mins = Array.fill(numPerm)(Long.MaxValue)
-    val md = ShingleMinHash.digest.get()
+    val md = digest.get()
     val it = seen.iterator()
     while (it.hasNext) {
       val sh = it.next()
       md.reset()
-      val hex = ShingleMinHash.hex15(md.digest(sh.getBytes))
+      val hex = hex15(md.digest(sh.getBytes))
       val h30 = java.lang.Long.parseLong(hex, 16) % 1073741824L
       var i = 0
       while (i < numPerm) {
-        val v = (h30 * as(i) + bs(i)) % P
+        val v = (h30 * as.getLong(i) + bs.getLong(i)) % P
         if (v < mins(i)) mins(i) = v
         i += 1
       }
@@ -110,33 +134,4 @@ case class ShingleMinHash(child: Expression, n: Int, numPerm: Int,
     InternalRow(new GenericArrayData(shsArr),
       new GenericArrayData(mins))
   }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : ShingleMinHash = copy(child = newChild)
-}
-
-object ShingleMinHash {
-  private[text] val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-  private val HEX = "0123456789abcdef".toCharArray
-
-  /** First 15 lowercase-hex chars of a 16-byte digest. */
-  private[text] def hex15(d: Array[Byte]): String = {
-    val out = new Array[Char](15)
-    var i = 0
-    while (i < 15) {
-      val b = d(i / 2) & 0xff
-      out(i) = HEX(if (i % 2 == 0) b >>> 4 else b & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
-  /** `struct(shs, sig)` column over a text column. */
-  def apply(text: Column, n: Int, numPerm: Int,
-            permOffset: Int = 0): Column =
-    ColumnBridge.column(ShingleMinHash(
-      ColumnBridge.expression(text), n, numPerm, permOffset))
 }

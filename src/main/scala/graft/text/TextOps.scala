@@ -26,18 +26,9 @@ object TextOps {
     * within-document repetition signals (Gopher/RefinedWeb-style
     * quality rules) need the multiset; [[shingles]] is the distinct
     * variant for set-similarity. Evaluates through the compiled
-    * [[NGrams]] kernel (round-21): the HOF composition it replaces —
-    * kept below as [[ngramsHof]] for the parity pin — walked an
-    * interpreted concat tree per gram per document. */
+    * [[NGrams]] kernel (round-21): the HOF composition it replaces
+    * walked an interpreted concat tree per gram per document. */
   def ngrams(toks: Column, n: Int): Column = NGrams(toks, n)
-
-  /** The higher-order-function form of [[ngrams]] — bit-parity
-    * reference for ShingleMinHashSpec; not used on any query path. */
-  private[graft] def ngramsHof(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j + 1)): _*)))
-      .otherwise(array().cast("array<string>"))
 
   /** Stable 60-bit hash of a string: first 15 hex chars of md5 as a
     * non-negative long (portable: DuckDB `('0x'||substr(md5(x),1,15))::BIGINT`). */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parity gate for the round-21 map-only cell-assignment kernels
-  * (graft.sim.CellAssign / ArgTopNDist2 / the rewritten Pq.encode)
+  * (graft.sim.CellAssign.nearest / topN / the rewritten Pq.encode)
   * against the explode+aggregate / window forms they replaced on the
   * s3/s7/s8/s12/s16/s17/d14/mm4 paths — on real sf0.001 embeddings
   * with a duplicated centroid forcing exact ties at every row. */
@@ -31,7 +31,7 @@ class CellAssignSpec extends AnyFunSuite {
       " embeddings with exact ties") {
     val cents = centroids
     val oldForm = emb.crossJoin(broadcast(cents))
-      .withColumn("d2", graft.sim.Pq.dist2Unrolled($"v", $"cvec", 64))
+      .withColumn("d2", graft.sim.ReferenceForms.dist2Unrolled($"v", $"cvec", 64))
       .groupBy($"vec_id")
       .agg(min(struct($"d2", $"cid")).as("mn"))
       .select($"vec_id", $"mn.cid".as("cid"), $"mn.d2".as("d2"))
@@ -55,7 +55,7 @@ class CellAssignSpec extends AnyFunSuite {
     for (n <- Seq(1, 3, 20)) {
       // the window form, with rank kept so ORDER is compared too
       val oldForm = emb.crossJoin(broadcast(cents))
-        .withColumn("d2", graft.sim.Pq.dist2Unrolled($"v", $"cvec", 64))
+        .withColumn("d2", graft.sim.ReferenceForms.dist2Unrolled($"v", $"cvec", 64))
         .withColumn("rk", row_number().over(w))
         .filter($"rk" <= n)
         .select($"vec_id", $"rk", $"cid")
@@ -123,7 +123,7 @@ class CellAssignSpec extends AnyFunSuite {
   test("NormalizeVec ≡ nullif(sqrt(dot))+transform on real embeddings" +
       " (plus zero/empty/null-element corners)") {
     def both(df: org.apache.spark.sql.DataFrame) = {
-      val ref = graft.sim.SimilarityTestAccess
+      val ref = graft.sim.ReferenceForms
         .withNormalizedHof(df, "v", "ref")
       ref.withColumn("got", graft.sim.NormalizeVec($"v"))
         .select($"ref", $"got").collect()
@@ -167,7 +167,7 @@ class CellAssignSpec extends AnyFunSuite {
       .select($"vec_id", posexplode(subv))
       .select($"vec_id", $"pos".as("sub"), $"col".as("subv"))
       .join(broadcast(cb), "sub")
-      .withColumn("d2", graft.sim.Pq.dist2Unrolled($"subv", $"cvec", subLen))
+      .withColumn("d2", graft.sim.ReferenceForms.dist2Unrolled($"subv", $"cvec", subLen))
       .groupBy($"vec_id", $"sub")
       .agg(min(struct($"d2", $"cid")).as("mn"))
       .groupBy($"vec_id")

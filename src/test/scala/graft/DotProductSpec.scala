@@ -2,9 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sim.{DotProduct, Similarity}
+import graft.sim.{DotProduct, ReferenceForms}
 
-/** The native codegen'd DotProduct must be bit-identical to the
+/** The DotProduct kernel must be bit-identical to the
   * aggregate/zip_with higher-order composition it replaced — including
   * the null contract (null array, null element, length mismatch). */
 class DotProductSpec extends AnyFunSuite {
@@ -20,7 +20,7 @@ class DotProductSpec extends AnyFunSuite {
     val df = rows.toDF("id", "a", "b")
     val out = df.select(
         DotProduct($"a", $"b").as("native"),
-        Similarity.dotHof($"a", $"b").as("hof"))
+        ReferenceForms.dotHof($"a", $"b").as("hof"))
       .as[(Double, Double)].collect()
     out.foreach { case (n, h) =>
       assert(java.lang.Double.doubleToRawLongBits(n)
@@ -39,7 +39,7 @@ class DotProductSpec extends AnyFunSuite {
       .select($"id", $"a".cast("array<double>"), $"b".cast("array<double>"))
     val out = df.orderBy($"id").select(
         DotProduct($"a", $"b").as("native"),
-        Similarity.dotHof($"a", $"b").as("hof"))
+        ReferenceForms.dotHof($"a", $"b").as("hof"))
       .as[(Option[Double], Option[Double])].collect()
     assert(out(0) == ((Some(11.0), Some(11.0))))
     assert(out(1) == ((None, None)), "length mismatch → null (zip_with pads)")
@@ -58,9 +58,10 @@ class DotProductSpec extends AnyFunSuite {
       array($"id".cast("double"), lit(2.0)).as("a"),
       array(lit(3.0), $"id".cast("double")).as("b"))
     val withNative = df.select(DotProduct($"a", $"b").as("d"))
-    // `*(n)` prefixes mark operators inside a WholeStageCodegen span
+    // `*(n)` prefixes mark operators inside a WholeStageCodegen span;
+    // the kernel prints as the StaticInvoke that calls it
     val plan = withNative.queryExecution.executedPlan.toString
-    assert(plan.contains("*(1) Project [graft_dot"), plan)
+    assert(plan.contains("*(1) Project [static_invoke(graft.sim.DotProduct.dot("), plan)
     assert(withNative.agg(sum($"d")).as[Double].collect().head ==
       (0 until 10).map(i => 3.0 * i + 2.0 * i).sum)
   }

@@ -35,7 +35,7 @@ class PortableMlSpec extends AnyFunSuite {
       .agg(transform(array_sort(collect_list(struct($"pos", $"m".as("a")))),
         s => s("a")).as("c"))
     val tss = emb.crossJoin(broadcast(centroid))
-      .select(graft.sim.Pq.dist2Unrolled($"v", $"c", 64).as("d2"))
+      .select(graft.sim.ReferenceForms.dist2Unrolled($"v", $"c", 64).as("d2"))
       .agg(sum($"d2")).as[Double].head()
     assert(w3 < tss, s"k=8 inertia $w3 not below total SS $tss")
     info(f"WSS/TSS = ${w3 / tss}%.3f (k=8, md5 init, 3 rounds — " +
@@ -62,7 +62,7 @@ class PortableMlSpec extends AnyFunSuite {
       $"cvec") // cid 7 duplicates cid 3 → every row ties 3 vs 7
     val centroids = base.unionByName(dup)
     val oldForm = emb.crossJoin(broadcast(centroids))
-      .withColumn("d2", graft.sim.Pq.dist2Unrolled($"v", $"cvec", 64))
+      .withColumn("d2", graft.sim.ReferenceForms.dist2Unrolled($"v", $"cvec", 64))
       .groupBy($"vec_id")
       .agg(min(struct($"d2", $"cid")).as("mn"))
       .select($"vec_id", $"mn.cid".as("cid"), $"mn.d2".as("d2"))

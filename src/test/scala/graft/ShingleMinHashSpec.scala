@@ -19,7 +19,7 @@ class ShingleMinHashSpec extends AnyFunSuite {
     // ngramsHof, NOT TextOps.shingles: since round-21 the production
     // shingles path routes through the compiled NGrams kernel, and the
     // reference here must stay the original built-in HOF composition
-    val shs = array_distinct(graft.text.TextOps.ngramsHof(
+    val shs = array_distinct(graft.sim.ReferenceForms.ngramsHof(
       graft.text.TextOps.tokens(col("text")), n))
     val h30s = transform(shs,
       sh => pmod(graft.text.TextOps.hash60(sh), lit(1073741824L)))
@@ -49,8 +49,9 @@ class ShingleMinHashSpec extends AnyFunSuite {
       if (ref.getSeq[String](0).nonEmpty)
         assert(refSig === gotSig,
           s"sig mismatch for text=${r.getString(0).take(60)}…")
-      // empty shingle set: HOF yields null mins, kernel yields
-      // sentinels — both unusable, both filtered by size(shs) > 0
+      // empty shingle set: HOF yields null mins, the kernel an empty
+      // sig — both unusable, both filtered by size(shs) > 0
+      else assert(gotSig.isEmpty, s"sig ${gotSig} for an empty shingle set")
     }
   }
 
@@ -113,7 +114,7 @@ class ShingleMinHashSpec extends AnyFunSuite {
   private def checkNGrams(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
     val ts = graft.text.TextOps.tokens(col("text"))
     val both = df.select(col("text"),
-        graft.text.TextOps.ngramsHof(ts, n).as("ref"),
+        graft.sim.ReferenceForms.ngramsHof(ts, n).as("ref"),
         graft.text.NGrams(ts, n).as("got"))
       .collect()
     assert(both.nonEmpty)

@@ -3,9 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One way to do each thing: the engine builds sessions in one place
-  * (`GraftSession`) and keeps session-scoped state in one store
-  * (`graft.io.PersistRegistry`). Fails when either pattern appears
-  * anywhere else under src/main/scala, so neither can grow back. */
+  * (`GraftSession`), keeps session-scoped state in one store
+  * (`graft.io.PersistRegistry`) and writes per-row kernels one way
+  * (plain methods called through `graft.Kernel`). Fails when another
+  * pattern appears under src/main/scala, so none can grow back. */
 class StructureGuardSpec extends AnyFunSuite {
   private val sources: Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -40,6 +41,15 @@ class StructureGuardSpec extends AnyFunSuite {
       "PersistRegistry.scala")
     assert(hits.isEmpty,
       hits.mkString("memoize through PersistRegistry / Stage instead:\n", "\n", ""))
+  }
+
+  test("kernels are plain methods: no hand-written codegen, no CodegenFallback") {
+    // a Java-string doGenCode is a second implementation that must agree
+    // with eval bit for bit; CodegenFallback drops the projection out of
+    // whole-stage codegen. graft.Kernel gives both paths one method.
+    val hits = offenders("""override(protected)?def(doGenCode|genCode)\(|(with|extends)CodegenFallback\b""", "")
+    assert(hits.isEmpty,
+      hits.mkString("write the kernel as a method called through graft.Kernel:\n", "\n", ""))
   }
 
   test("MlPack runs the pairwise-corr build only in its two graph memos") {

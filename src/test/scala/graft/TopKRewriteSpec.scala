@@ -7,16 +7,28 @@ import graft.plans.TopKRewrite
 
 /** The optimizer rewrite must turn the row_number-window top-k idiom
   * into the heap-aggregate plan with IDENTICAL results — and leave
-  * every unsupported shape untouched. */
+  * every unsupported shape untouched.
+  *
+  * The rule is installed on a session of its own (`newSession` has its
+  * own ExperimentalMethods): on the shared test session it would also
+  * rewrite every later spec's window reference forms (TopKSpec's
+  * `viaWindow`) into the very heap aggregate they check, and Verify,
+  * Bench and perfbench never install it. */
 class TopKRewriteSpec extends AnyFunSuite {
+  private def experimental(s: org.apache.spark.sql.SparkSession) =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+
   private lazy val spark = {
-    val s = SparkTestSession.spark
-    val exp = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraOptimizations.contains(TopKRewrite))
-      exp.extraOptimizations = TopKRewrite +: exp.extraOptimizations
+    val s = SparkTestSession.spark.newSession()
+    experimental(s).extraOptimizations = Seq(TopKRewrite)
     s
   }
   import spark.implicits._
+
+  test("the rule stays on this spec's session") {
+    assert(experimental(spark).extraOptimizations == Seq(TopKRewrite))
+    assert(experimental(SparkTestSession.spark).extraOptimizations.isEmpty)
+  }
 
   private def df = {
     val rnd = new scala.util.Random(31)
