@@ -9,22 +9,13 @@ import graft.sim.Similarity
 import graft.streaming.StreamOps
 
 /** Streaming + multimodal tier (SURVEY §2.9; BASELINE.json multimodal
-  * extension). Both streaming queries execute REAL Structured Streaming
-  * plans (memory sink, drained synchronously) so the driver verifies the
-  * streaming path itself, not a batch re-implementation. */
+  * extension). Every streaming query executes a REAL Structured Streaming
+  * plan (memory sink, drained synchronously by `StreamOps.drainToTable`)
+  * so the driver verifies the streaming path itself, not a batch
+  * re-implementation. */
 object StreamMultimodalPack extends QueryPack {
 
-  private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Drain a started stream, recording its peak state-store rows under
-    * the query's stable prefix ("st9_out_17" → "st9") so Bench can
-    * emit the measured state sizes (StateMetrics sideline). */
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery,
-                    sinkName: String): Unit =
-    try {
-      q.processAllAvailable()
-      graft.streaming.StateMetrics.record(sinkName.split("_out_")(0), q)
-    } finally q.stop()
 
   def queries: Seq[Q] = Seq(
 
@@ -33,15 +24,10 @@ object StreamMultimodalPack extends QueryPack {
     Q("st1_stream_daily",
       (s, dir) => {
         import s.implicits._
-        val name = s"st1_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .withColumn("ts", timestamp_micros($"ts"))
-        val q = StreamOps.dailyCounts(stream)
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name)
+        StreamOps.drainToTable(StreamOps.dailyCounts(stream), "complete", "st1")
           .select(unix_micros($"day").as("day"), $"event_type", $"n",
             Rx.r4($"sum_value").as("sum_value"))
       },
@@ -58,17 +44,13 @@ object StreamMultimodalPack extends QueryPack {
     Q("st6_stream_topk",
       (s, dir) => {
         import s.implicits._
-        val name = s"st6_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val agg = stream.groupBy($"user_id")
           .agg(graft.operators.TopKAgg.topK(
             struct($"value".isNull.cast("int"), negate($"value"), $"event_id"),
             struct($"event_id", $"value"), 3).as("tk"))
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name)
+        StreamOps.drainToTable(agg, "complete", "st6")
           .select($"user_id", posexplode($"tk").as(Seq("pos", "kv")))
           .select($"user_id", $"kv.value.event_id".as("event_id"),
             Rx.r4($"kv.value.value").as("value"), ($"pos" + 1).as("rank"))
@@ -91,7 +73,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st8_stream_ann",
       (s, dir) => {
         import s.implicits._
-        val name = s"st8_out_${counter.incrementAndGet()}"
         val queries = graft.sim.Similarity.withNormalized(
             Tables.embeddings(s, dir)
               .select($"vec_id", $"embedding".cast("array<double>").as("v"))
@@ -107,10 +88,7 @@ object StreamMultimodalPack extends QueryPack {
           .agg(graft.operators.TopKAgg.topK(
             struct($"cos".isNull.cast("int"), negate($"cos"), $"vec_id"),
             struct($"vec_id", $"cos"), 5).as("tk"))
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name)
+        StreamOps.drainToTable(agg, "complete", "st8")
           .select($"query_id", posexplode($"tk").as(Seq("pos", "kv")))
           .select($"query_id", $"kv.value.vec_id".as("corpus_id"),
             r6($"kv.value.cos").as("cos"), ($"pos" + 1).as("rank"))
@@ -150,7 +128,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st9_stream_join",
       (s, dir) => {
         import s.implicits._
-        val name = s"st9_out_${counter.incrementAndGet()}"
         def stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .withColumn("ts", timestamp_micros($"ts"))
@@ -159,13 +136,11 @@ object StreamMultimodalPack extends QueryPack {
         val views = stream.filter($"event_type" === "view").drop("event_type")
         val joined = StreamOps.intervalJoinStream(clicks, views, "user_id",
           "ts", lookback = "1 hour", watermark = "2 hours")
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).select($"l_user_id".as("user_id"),
-          $"l_event_id".as("click_id"), $"r_event_id".as("view_id"),
-          unix_micros($"l_ts").as("click_t"), unix_micros($"r_ts").as("view_t"),
-          r6($"l_value" - $"r_value").as("value_gap"))
+        StreamOps.drainToTable(joined, "append", "st9")
+          .select($"l_user_id".as("user_id"),
+            $"l_event_id".as("click_id"), $"r_event_id".as("view_id"),
+            unix_micros($"l_ts").as("click_t"), unix_micros($"r_ts").as("view_t"),
+            r6($"l_value" - $"r_value").as("value_gap"))
       },
       Some("""SELECT l.user_id, l.event_id AS click_id, r.event_id AS view_id,
              |  epoch_us(l.ts) AS click_t, epoch_us(r.ts) AS view_t,
@@ -187,7 +162,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st12_stream_left_join",
       (s, dir) => {
         import s.implicits._
-        val name = s"st12_out_${counter.incrementAndGet()}"
         def stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .withColumn("ts", timestamp_micros($"ts"))
@@ -196,14 +170,12 @@ object StreamMultimodalPack extends QueryPack {
         val views = stream.filter($"event_type" === "view").drop("event_type")
         val joined = StreamOps.intervalLeftJoinStream(clicks, views,
           "user_id", "ts", lookback = "1 hour", watermark = "2 hours")
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).select($"l_user_id".as("user_id"),
-          $"l_event_id".as("click_id"), $"r_event_id".as("view_id"),
-          unix_micros($"l_ts").as("click_t"),
-          unix_micros($"r_ts").as("view_t"),
-          r6($"l_value" - $"r_value").as("value_gap"))
+        StreamOps.drainToTable(joined, "append", "st12")
+          .select($"l_user_id".as("user_id"),
+            $"l_event_id".as("click_id"), $"r_event_id".as("view_id"),
+            unix_micros($"l_ts").as("click_t"),
+            unix_micros($"r_ts").as("view_t"),
+            r6($"l_value" - $"r_value").as("value_gap"))
       },
       Some("""WITH c AS (SELECT user_id, event_id, epoch_us(ts) AS t, value
              |          FROM events WHERE event_type = 'click'),
@@ -237,7 +209,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st10_stream_sessions",
       (s, dir) => {
         import s.implicits._
-        val name = s"st10_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .withColumn("ts", timestamp_micros($"ts"))
@@ -245,10 +216,7 @@ object StreamMultimodalPack extends QueryPack {
         val agg = stream
           .groupBy($"user_id", session_window($"ts", "30 minutes").as("sw"))
           .agg(count(lit(1)).as("n_events"), Rx.r4(sum($"value")).as("sum_value"))
-        val q = agg.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).select($"user_id",
+        StreamOps.drainToTable(agg, "append", "st10").select($"user_id",
           unix_micros($"sw.start").as("session_start"), $"n_events", $"sum_value")
       },
       Some("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS t, value FROM events),
@@ -279,7 +247,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st11_stream_enrich",
       (s, dir) => {
         import s.implicits._
-        val name = s"st11_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .withColumn("ts", timestamp_micros($"ts"))
@@ -289,11 +256,9 @@ object StreamMultimodalPack extends QueryPack {
           .join(broadcast(dim), $"user_id" === $"c_custkey")
           .groupBy(window($"ts", "1 day").as("w"), $"c_mktsegment", $"event_type")
           .agg(count(lit(1)).as("n"), sum($"value").as("sum_value"))
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).select(unix_micros($"w.start").as("day"),
-          $"c_mktsegment", $"event_type", $"n", Rx.r4($"sum_value").as("sum_value"))
+        StreamOps.drainToTable(agg, "complete", "st11")
+          .select(unix_micros($"w.start").as("day"),
+            $"c_mktsegment", $"event_type", $"n", Rx.r4($"sum_value").as("sum_value"))
       },
       Some("""SELECT epoch_us(date_trunc('day', e.ts)) AS day,
              |  c.c_mktsegment, e.event_type,
@@ -307,16 +272,12 @@ object StreamMultimodalPack extends QueryPack {
     Q("st2_stream_transitions",
       (s, dir) => {
         import s.implicits._
-        val name = s"st2_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .select($"user_id", $"ts".as("t"), $"event_id", $"event_type")
           .as[StreamOps.KeyedEvent]
-        val q = StreamOps.transitionsStream(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name)
+        StreamOps.drainToTable(StreamOps.transitionsStream(stream),
+          "append", "st2")
       },
       Some("""WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS t FROM events),
              |d AS (
@@ -353,17 +314,13 @@ object StreamMultimodalPack extends QueryPack {
       (s, dir) => {
         import s.implicits._
         val stages = Seq("signup", "view", "click", "purchase")
-        val name = s"st14_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .filter($"event_type".isin(stages: _*))
           .select($"user_id", $"ts".as("t"), $"event_id", $"event_type")
           .as[StreamOps.KeyedEvent]
-        val q = StreamOps.funnelStream(stream, stages)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name)
+        StreamOps.drainToTable(StreamOps.funnelStream(stream, stages),
+            "append", "st14")
           .groupBy($"stage_idx".cast("long").as("stage_idx"))
           .agg(count(lit(1)).as("users"))
           .select($"stage_idx",
@@ -397,16 +354,12 @@ object StreamMultimodalPack extends QueryPack {
     Q("st15_stream_holt",
       (s, dir) => {
         import s.implicits._
-        val name = s"st15_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .select($"user_id", $"ts".as("t"), $"event_id", $"value")
           .as[StreamOps.ValueEvent]
-        val q = StreamOps.holtStream(stream, alpha = 0.5, beta = 0.3)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name)
+        StreamOps.drainToTable(StreamOps.holtStream(stream, alpha = 0.5, beta = 0.3),
+            "append", "st15")
           .groupBy($"user_id")
           .agg(max(struct($"n_obs", $"level", $"trend")).as("f"))
           .select($"user_id", $"f.n_obs".as("n_obs"),
@@ -450,7 +403,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st22_stream_nb",
       (s, dir) => {
         import s.implicits._
-        val name = s"st22_out_${counter.incrementAndGet()}"
         val tr = Tables.documents(s, dir)
           .filter($"doc_id" % 5 =!= 0)
           .select($"doc_id", $"lang",
@@ -461,11 +413,9 @@ object StreamMultimodalPack extends QueryPack {
           .filter($"doc_id" % 5 === 0)
           .select($"doc_id".as("__id"), $"lang".as("true_label"),
             explode(graft.text.TextOps.tokens($"text")).as("tok"))
-        val q = graft.text.NaiveBayes.termRows(stream, model)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        graft.text.NaiveBayes.confusionFromTerms(s.table(name), model)
+        val out = StreamOps.drainToTable(graft.text.NaiveBayes.termRows(stream, model),
+          "append", "st22")
+        graft.text.NaiveBayes.confusionFromTerms(out, model)
           .withColumnRenamed("true_label", "true_lang")
       },
       // t24's oracle verbatim — the model and the scoring are the same
@@ -519,19 +469,15 @@ object StreamMultimodalPack extends QueryPack {
     Q("st23_stream_asof",
       (s, dir) => {
         import s.implicits._
-        val name = s"st23_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .filter($"event_type".isin("view", "purchase"))
           .select($"user_id", $"ts".as("t"), $"event_id", $"event_type",
             $"value")
           .as[StreamOps.TypedEvent]
-        val q = StreamOps.asofStream(stream,
-            touchType = "view", emitType = "purchase")
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name)
+        StreamOps.drainToTable(
+            StreamOps.asofStream(stream, touchType = "view", emitType = "purchase"),
+            "append", "st23")
           .select($"user_id", $"event_id", $"t",
             $"view_t", r6($"view_value").as("view_value"),
             ($"t" - $"view_t").as("gap_us"))
@@ -566,7 +512,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st24_stream_scd2_join",
       (s, dir) => {
         import s.implicits._
-        val name = s"st24_out_${counter.incrementAndGet()}"
         val viewStates = Tables.events(s, dir)
           .filter($"event_type" === "view")
           .select($"user_id", unix_micros($"ts").as("t"), $"event_id",
@@ -586,10 +531,8 @@ object StreamMultimodalPack extends QueryPack {
           "left_outer")
           .select($"p_user".as("user_id"), $"event_id", $"t",
             $"band", $"version")
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).orderBy($"user_id", $"event_id")
+        StreamOps.drainToTable(joined, "append", "st24")
+          .orderBy($"user_id", $"event_id")
       },
       Some("""WITH e AS (
              |  SELECT user_id, epoch_us(ts) AS t, event_id, event_type,
@@ -645,7 +588,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st28_stream_neardedup",
       (s, dir) => {
         import s.implicits._
-        val name = s"st28_out_${counter.incrementAndGet()}"
         val docs = Tables.documents(s, dir)
         val p = 2147483647L
         // ONE pass over the shingle rows builds BOTH standing tables
@@ -701,10 +643,7 @@ object StreamMultimodalPack extends QueryPack {
               .otherwise(size($"shs_c")).as("n_a"),
             when($"doc_id" < $"corpus_id", size($"shs_c"))
               .otherwise(size($"shs")).as("n_b"))
-        val q = scored.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).distinct()
+        StreamOps.drainToTable(scored, "append", "st28").distinct()
           .select($"id_a", $"id_b", $"n_inter".cast("long").as("n_inter"),
             $"n_a".cast("long").as("n_a"), $"n_b".cast("long").as("n_b"),
             r6($"n_inter".cast("double")
@@ -756,7 +695,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st30_stream_embed_neardedup",
       (s, dir) => {
         import s.implicits._
-        val name = s"st30_out_${counter.incrementAndGet()}"
         val emb = Tables.embeddings(s, dir)
           .select($"vec_id", $"label",
             $"embedding".cast("array<double>").as("v"))
@@ -783,10 +721,7 @@ object StreamMultimodalPack extends QueryPack {
             least($"vec_id", $"corpus_id").as("id_a"),
             greatest($"vec_id", $"corpus_id").as("id_b"),
             Similarity.dot($"nv", $"nv_c").as("cos"))
-        val q = scored.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).distinct()
+        StreamOps.drainToTable(scored, "append", "st30").distinct()
           .select($"label", $"id_a", $"id_b", r6($"cos").as("cos"))
           .orderBy(desc("cos"), $"id_a", $"id_b").limit(20)
       },
@@ -851,7 +786,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st31_stream_neardedup_families",
       (s, dir) => {
         import s.implicits._
-        val name = s"st31_out_${counter.incrementAndGet()}"
         val docs = Tables.documents(s, dir)
         val nFam = Dedup.familiesForRecall(target = 0.9, s0 = 0.5,
           r = 2, b = 8)
@@ -910,10 +844,7 @@ object StreamMultimodalPack extends QueryPack {
               .otherwise(size($"shs_c")).as("n_a"),
             when($"doc_id" < $"corpus_id", size($"shs_c"))
               .otherwise(size($"shs")).as("n_b"))
-        val q = scored.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).distinct()
+        StreamOps.drainToTable(scored, "append", "st31").distinct()
           .groupBy($"id_a", $"id_b")
           .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(family AS INT))"))
               .as("families_hit"),
@@ -988,7 +919,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st21_stream_heavy_hitters",
       (s, dir) => {
         import s.implicits._
-        val name = s"st21_out_${counter.incrementAndGet()}"
         val (depth, width, support) = (4, 1024, 1500L)
         def cellIds(gram: org.apache.spark.sql.Column) =
           array((0 until depth).map(j => lit(j.toLong * width)
@@ -999,11 +929,9 @@ object StreamMultimodalPack extends QueryPack {
           .select(explode(graft.text.TextOps.ngrams($"__toks", 2)).as("gram"))
           .select(explode(cellIds($"gram")).as("bucket"))
           .as[StreamOps.BucketRow]
-        val q = StreamOps.bucketCountStream(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        val sk = s.table(name).groupBy($"bucket").agg(max($"c").as("cnt"))
+        val out = StreamOps.drainToTable(StreamOps.bucketCountStream(stream),
+          "append", "st21")
+        val sk = out.groupBy($"bucket").agg(max($"c").as("cnt"))
           .select(($"bucket" / width).cast("int").as("j"),
             pmod($"bucket", lit(width.toLong)).as("bucket"), $"cnt")
           .localCheckpoint()
@@ -1041,7 +969,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st20_stream_psi",
       (s, dir) => {
         import s.implicits._
-        val name = s"st20_out_${counter.incrementAndGet()}"
         val cut = 1705276800000000L // the dq3/iv1 split
         val e = Tables.events(s, dir)
           .select(unix_micros($"ts").as("t"), $"value")
@@ -1061,12 +988,9 @@ object StreamMultimodalPack extends QueryPack {
           .filter($"ts" >= cut)
           .select(binOf($"value").as("bucket"))
           .as[StreamOps.BucketRow]
-        val q = StreamOps.bucketCountStream(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        val curCnt = s.table(name)
-          .groupBy($"bucket".as("bin")).agg(max($"c").as("n_cur"))
+        val out = StreamOps.drainToTable(StreamOps.bucketCountStream(stream),
+          "append", "st20")
+        val curCnt = out.groupBy($"bucket".as("bin")).agg(max($"c").as("n_cur"))
         val cnt = refCnt.join(curCnt, Seq("bin"), "full_outer")
           .na.fill(0L, Seq("n_ref", "n_cur")).localCheckpoint()
         val tot = cnt.agg(sum($"n_ref").as("t_ref"),
@@ -1123,16 +1047,12 @@ object StreamMultimodalPack extends QueryPack {
     Q("st19_stream_kalman",
       (s, dir) => {
         import s.implicits._
-        val name = s"st19_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .select($"user_id", $"ts".as("t"), $"event_id", $"value")
           .as[StreamOps.ValueEvent]
-        val q = StreamOps.kalmanStream(stream, q = 0.1, r = 1.0)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name)
+        StreamOps.drainToTable(StreamOps.kalmanStream(stream, q = 0.1, r = 1.0),
+            "append", "st19")
           .groupBy($"user_id")
           .agg(max(struct($"n_obs", $"level", $"pvar", $"gain")).as("f"))
           .select($"user_id", $"f.n_obs".as("n_obs"),
@@ -1177,7 +1097,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st16_stream_cusum",
       (s, dir) => {
         import s.implicits._
-        val name = s"st16_out_${counter.incrementAndGet()}"
         val prior = Tables.events(s, dir).groupBy($"user_id")
           .agg(r6(avg($"value")).as("mu"),
             r6(stddev_samp($"value")).as("sd"))
@@ -1188,11 +1107,7 @@ object StreamMultimodalPack extends QueryPack {
           .join(broadcast(prior), Seq("user_id")) // stream-static inner
           .select($"user_id", $"t", $"event_id", $"value", $"mu", $"sd")
           .as[StreamOps.PrioredEvent]
-        val q = StreamOps.cusumStream(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name)
+        StreamOps.drainToTable(StreamOps.cusumStream(stream), "append", "st16")
           .groupBy($"user_id")
           .agg(max(struct($"n_obs", $"n_alarms", $"sp", $"sn")).as("f"))
           .select($"user_id", $"f.n_obs".as("n_obs"),
@@ -1268,18 +1183,15 @@ object StreamMultimodalPack extends QueryPack {
     Q("st17_stream_hll",
       (s, dir) => {
         import s.implicits._
-        val name = s"st17_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val regs = graft.sketch.Hll.withRegisterCols(stream, "event_id", 12)
           .select($"bucket", $"rank".cast("int").as("rank"))
           .as[StreamOps.RegisterRow]
-        val q = StreamOps.hllRegisterStream(regs)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
+        val out = StreamOps.drainToTable(StreamOps.hllRegisterStream(regs),
+          "append", "st17")
         graft.sketch.Hll.estimateFromRegisters(
-          s.table(name).groupBy($"bucket").agg(max($"r").as("r")), 12)
+          out.groupBy($"bucket").agg(max($"r").as("r")), 12)
       },
       Some(graft.sketch.Hll.oracleSql("events", "event_id", p = 12))),
 
@@ -1296,7 +1208,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st18_stream_quantile",
       (s, dir) => {
         import s.implicits._
-        val name = s"st18_out_${counter.incrementAndGet()}"
         val nBins = 1024
         val st = Tables.events(s, dir)
           .agg(min($"value"), max($"value"), count(lit(1))).head()
@@ -1306,11 +1217,9 @@ object StreamMultimodalPack extends QueryPack {
           .select(graft.sketch.HistQuantile.bucketOf(
             $"value", lit(vmin), lit(vmax), nBins).as("bucket"))
           .as[StreamOps.BucketRow]
-        val q = StreamOps.bucketCountStream(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        val cnts = s.table(name).groupBy($"bucket").agg(max($"c").as("cnt"))
+        val out = StreamOps.drainToTable(StreamOps.bucketCountStream(stream),
+          "append", "st18")
+        val cnts = out.groupBy($"bucket").agg(max($"c").as("cnt"))
         val stats = Seq((vmin, vmax, n)).toDF("vmin", "vmax", "n")
         graft.sketch.HistQuantile.fromHistogram(cnts, stats, nBins,
           Seq(0.5, 0.9, 0.99))
@@ -1321,17 +1230,14 @@ object StreamMultimodalPack extends QueryPack {
     Q("st4_stream_rolling",
       (s, dir) => {
         import s.implicits._
-        val name = s"st4_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .select($"user_id", $"ts".as("t"), $"event_id", $"value")
           .as[StreamOps.ValueEvent]
-        val q = StreamOps.rollingFeaturesStream(stream, 24)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).select($"user_id", $"event_id", $"t",
-          Rx.r6($"ret").as("ret"), Rx.r4($"ma").as("ma"), Rx.r4($"sd").as("sd"))
+        StreamOps.drainToTable(StreamOps.rollingFeaturesStream(stream, 24),
+            "append", "st4")
+          .select($"user_id", $"event_id", $"t",
+            Rx.r6($"ret").as("ret"), Rx.r4($"ma").as("ma"), Rx.r4($"sd").as("sd"))
       },
       Some("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS t, value
              |          FROM events)
@@ -1352,17 +1258,14 @@ object StreamMultimodalPack extends QueryPack {
     Q("st5_stream_ewm",
       (s, dir) => {
         import s.implicits._
-        val name = s"st5_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .select($"user_id", $"ts".as("t"), $"event_id", $"value")
           .as[StreamOps.ValueEvent]
-        val q = StreamOps.ewmStream(stream, span = 12.0)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).select($"user_id", $"event_id", $"t",
-          Rx.r6($"ewm").as("ewm"))
+        StreamOps.drainToTable(StreamOps.ewmStream(stream, span = 12.0),
+            "append", "st5")
+          .select($"user_id", $"event_id", $"t",
+            Rx.r6($"ewm").as("ewm"))
       },
       Some("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS t, value
              |          FROM events),
@@ -1389,7 +1292,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st13_stream_upsert",
       (s, dir) => {
         import s.implicits._
-        val name = s"st13_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .select($"user_id", $"ts".as("t"), $"event_id",
@@ -1397,13 +1299,11 @@ object StreamMultimodalPack extends QueryPack {
         val agg = stream.groupBy($"user_id")
           .agg(max(struct($"t", $"event_id", $"event_type", $"value"))
             .as("last"))
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).select($"user_id", $"last.t".as("t"),
-          $"last.event_id".as("event_id"),
-          $"last.event_type".as("event_type"),
-          r6($"last.value").as("value"))
+        StreamOps.drainToTable(agg, "complete", "st13")
+          .select($"user_id", $"last.t".as("t"),
+            $"last.event_id".as("event_id"),
+            $"last.event_type".as("event_type"),
+            r6($"last.value").as("value"))
       },
       Some("""SELECT user_id, t, event_id, event_type,
              |  round(value + 1e-9, 6) AS value
@@ -1423,18 +1323,15 @@ object StreamMultimodalPack extends QueryPack {
     Q("st3_stream_dedup",
       (s, dir) => {
         import s.implicits._
-        val name = s"st3_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .withColumn("ts", timestamp_micros($"ts"))
           .select($"ts", $"user_id", $"event_type")
-        val q = StreamOps.dedupWithinWatermark(
-            stream, "ts", Seq("user_id", "event_type"), "365 days")
-          .select($"user_id", $"event_type")
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name)
+        StreamOps.drainToTable(
+          StreamOps.dedupWithinWatermark(
+              stream, "ts", Seq("user_id", "event_type"), "365 days")
+            .select($"user_id", $"event_type"),
+          "append", "st3")
       },
       Some("SELECT DISTINCT user_id, event_type FROM events")),
 
@@ -1476,7 +1373,6 @@ object StreamMultimodalPack extends QueryPack {
           if (page.isEmpty) Seq.empty
           else rest.takeWhile(_.ts <= page.last.ts).toSeq
         })
-        val name = s"st7_out_${counter.incrementAndGet()}"
         val stream = s.readStream.format("graft-paged")
           .option("provider", key)
           .option("symbols", (0 until 5).map(_.toString).mkString(","))
@@ -1486,10 +1382,7 @@ object StreamMultimodalPack extends QueryPack {
           .agg(count(lit(1)).as("n"), Rx.r4(sum($"close")).as("sum_close"),
             Rx.r4(sum($"volume")).as("sum_vol"),
             min($"ts").as("first_ts"), max($"ts").as("last_ts"))
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name)
+        StreamOps.drainToTable(agg, "complete", "st7")
       },
       Some("""SELECT CAST(user_id AS VARCHAR) AS symbol, count(*) AS n,
              |  round(sum(value) + 1e-9, 4) AS sum_close,
@@ -2945,7 +2838,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st25_stream_jpeg",
       (s, dir) => {
         import s.implicits._
-        val name = s"st25_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.documentsSchema)
           .option("pathGlobFilter", "documents.parquet").parquet(dir)
         val feats = Multimodal.netpbmFeatures(
@@ -2954,10 +2846,8 @@ object StreamMultimodalPack extends QueryPack {
           .groupBy($"channels", ($"id" % 8).as("bucket"))
           .agg(count(lit(1)).as("n"), sum($"cksum").as("sum_cksum"),
             Rx.r4(avg($"mean_v")).as("avg_mean_v"))
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).orderBy($"channels", $"bucket")
+        StreamOps.drainToTable(agg, "complete", "st25")
+          .orderBy($"channels", $"bucket")
       },
       Some("""WITH px AS (
              |  SELECT d.doc_id, t.j,
@@ -2995,7 +2885,6 @@ object StreamMultimodalPack extends QueryPack {
     Q("st26_stream_flac",
       (s, dir) => {
         import s.implicits._
-        val name = s"st26_out_${counter.incrementAndGet()}"
         val stream = s.readStream.schema(Tables.documentsSchema)
           .option("pathGlobFilter", "documents.parquet").parquet(dir)
         val feats = Multimodal.flacFeatures(
@@ -3006,10 +2895,7 @@ object StreamMultimodalPack extends QueryPack {
             sum($"encoded_bytes").as("sum_bytes"),
             Rx.r4(avg($"ratio")).as("avg_ratio"),
             sum($"energy").as("sum_energy"))
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        s.table(name).orderBy($"bucket")
+        StreamOps.drainToTable(agg, "complete", "st26").orderBy($"bucket")
       },
       Some("""WITH s AS (
              |  SELECT d.doc_id, t.i,
@@ -3064,18 +2950,15 @@ object StreamMultimodalPack extends QueryPack {
     Q("st27_stream_theta",
       (s, dir) => {
         import s.implicits._
-        val name = s"st27_out_${counter.incrementAndGet()}"
         val k = 256
         val stream = s.readStream.schema(Tables.eventsSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val rows = stream.select($"event_type".cast("string").as("g"),
             graft.sketch.ThetaKmv.hash52($"user_id").as("h"))
           .as[StreamOps.KmvRow]
-        val q = StreamOps.kmvRegisterStream(rows, k)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        drain(q, name)
-        val emitted = s.table(name).select($"g", $"h").distinct()
+        val out = StreamOps.drainToTable(StreamOps.kmvRegisterStream(rows, k),
+          "append", "st27")
+        val emitted = out.select($"g", $"h").distinct()
         val regs = graft.operators.TopK.perKey(
             emitted, Seq("g"), Seq(col("h")), k, rankCol = "rn")
           .select($"g", $"h", $"rn")

@@ -24,7 +24,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
   * stream starts sees every progress event exactly once; every
   * `GraftSession.local` session registers it at startup via
   * [[ensureListener]], and [[record]] keeps the recentProgress scan
-  * only as a fallback for sessions that never registered. */
+  * only as a fallback for sessions that never registered.
+  *
+  * Every engine stream runs through [[StreamOps.drainToTable]], which
+  * names its sink `<prefix>_out_<n>` (the key the listener files it
+  * under) and calls [[record]] after the drain. */
 object StateMetrics {
 
   private val peak =
@@ -52,8 +56,8 @@ object StateMetrics {
   /** Register the per-session progress listener (idempotent). MUST run
     * before the session's first streaming query starts — progress
     * events are not replayed to late listeners. Streams are matched by
-    * the pack naming convention `<query>_out_<n>`; anonymous streams
-    * (ad-hoc tests) are ignored. */
+    * the sink names [[StreamOps.drainToTable]] gives, `<prefix>_out_<n>`;
+    * anonymous streams (ad-hoc tests) are ignored. */
   def ensureListener(s: SparkSession): Unit =
     if (listened.add(s)) s.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming operators (SURVEY §2.9 — green-field: the
@@ -14,8 +15,94 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Scale: state is O(1) per key (current label + island start), and the
   * window agg is the standard partial-agg + state-store pattern.
-  */
+  *
+  * Every stream the engine runs starts, drains and stops in
+  * [[drainToTable]]; no other file under `src/main` calls `writeStream`
+  * or `processAllAvailable` (StructureGuardSpec). */
 object StreamOps {
+
+  private val sinkCounter = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val drainLock = new Object
+
+  private[graft] val CheckpointManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
+  private[graft] val IsolationKey = "spark.sql.artifact.isolation.enabled"
+  private val FileSystemManager = "org.apache.spark.sql.execution.streaming." +
+    "checkpointing.FileSystemBasedCheckpointFileManager"
+
+  /** Run `df` as a stream into a memory sink named `<prefix>_out_<n>`,
+    * drain everything available, stop it, record its state peaks under
+    * `prefix` ([[StateMetrics.record]]) and return the sink's table. A
+    * failed stream fails the call with the sink name in the message.
+    *
+    * Two session confs are set for the length of the drain and then
+    * restored (or unset). `start()` copies them into the stream's cloned
+    * session, but a file source builds its log on the stream thread
+    * from the caller's session, so they hold until the stream stops:
+    *  - the checkpoint file manager becomes Spark's FileSystem-based one
+    *    unless the caller chose one or the session checkpoints off the
+    *    local file system. Without Hadoop's native library the default
+    *    FileContext manager forks a `readlink` process for the symlink
+    *    check of every rename (64 per stream run on perfbench's
+    *    `stream` workload); the FileSystem manager's local rename
+    *    needs none. `.crc` files and Spark's state-file checksums are
+    *    written either way;
+    *  - artifact isolation goes off unless the session added artifacts.
+    *    With it on, every clone gets a new session id, so executors run
+    *    its tasks in a new class loader, and the codegen cache (keyed by
+    *    class loader and source) recompiles every class of a repeated
+    *    stream. */
+  def drainToTable(df: Dataset[_], mode: String, prefix: String): DataFrame = {
+    val s = df.sparkSession
+    val name = s"${prefix}_out_${sinkCounter.incrementAndGet()}"
+    try withConfs(s, drainConfs(s)) {
+      val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+      try {
+        q.processAllAvailable()
+        StateMetrics.record(prefix, q)
+      } finally q.stop()
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        throw new IllegalStateException(s"stream $name failed: ${e.getMessage}", e)
+    }
+    s.table(name)
+  }
+
+  /** The confs a drain runs under (see [[drainToTable]]). */
+  private def drainConfs(s: SparkSession): Seq[(String, String)] = {
+    val localRoot = s.conf.getOption("spark.sql.streaming.checkpointLocation")
+      .forall { root =>
+        val scheme = Option(new org.apache.hadoop.fs.Path(root).toUri.getScheme)
+          .getOrElse(org.apache.hadoop.fs.FileSystem
+            .getDefaultUri(s.sparkContext.hadoopConfiguration).getScheme)
+        scheme == "file"
+      }
+    val manager =
+      if (localRoot && !SessionBridge.isSet(s, CheckpointManagerKey))
+        Seq(CheckpointManagerKey -> FileSystemManager)
+      else Nil
+    val isolation =
+      if (SessionBridge.artifactsAdded(s)) Nil
+      else Seq(IsolationKey -> "false")
+    manager ++ isolation
+  }
+
+  /** Run `body` with `confs` set on `s`, then put back each key's value
+    * or unset it if it was unset. Drains run one at a time, so two on
+    * one session cannot restore each other's values. */
+  private def withConfs[A](s: SparkSession, confs: Seq[(String, String)])(
+      body: => A): A = drainLock.synchronized {
+    val saved = confs.map { case (k, _) =>
+      k -> (if (SessionBridge.isSet(s, k)) Some(s.conf.get(k)) else None)
+    }
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 
   case class KeyedEvent(user_id: Long, t: Long, event_id: Long, event_type: String)
   case class IslandState(label: String, startT: Long)

@@ -39,12 +39,11 @@ object StreamProbe {
     // machinery floor: same parquet stream source, stateless projection
     locally {
       val t0 = System.nanoTime()
-      val q = spark.readStream.schema(graft.io.Tables.eventsSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(sfDir)
-        .select(count(lit(1)).as("n"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("probe_floor").start()
-      q.processAllAvailable(); q.stop()
+      graft.streaming.StreamOps.drainToTable(
+        spark.readStream.schema(graft.io.Tables.eventsSchema)
+          .option("pathGlobFilter", "events.parquet").parquet(sfDir)
+          .select(count(lit(1)).as("n")),
+        "complete", "probe_floor")
       println(f"[streamprobe] floor_total ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     Thread.sleep(500)

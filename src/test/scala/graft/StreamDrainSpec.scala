@@ -1,0 +1,182 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.graftbridge.SessionBridge
+import graft.streaming.StreamOps
+
+/** `StreamOps.drainToTable` runs a stream without forking processes for
+  * its checkpoint renames and without a fresh executor class loader per
+  * run, leaves the caller's session confs as it found them, and the
+  * FileSystem checkpoint manager it picks restarts a stream exactly like
+  * the FileContext one it replaces — including from a checkpoint the
+  * FileContext manager wrote. */
+class StreamDrainSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  private val Sf = "/root/testdata/sf0.001"
+  private val FileContextManager = "org.apache.spark.sql.execution.streaming." +
+    "checkpointing.FileContextBasedCheckpointFileManager"
+  private val FileSystemManager = "org.apache.spark.sql.execution.streaming." +
+    "checkpointing.FileSystemBasedCheckpointFileManager"
+  private val Keys = Seq(StreamOps.CheckpointManagerKey, StreamOps.IsolationKey)
+
+  /** The commands of every process the JVM started while `body` ran. */
+  private def launches(body: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withoutStackTrace()
+    rec.start()
+    try body finally rec.stop()
+    val f = java.nio.file.Files.createTempFile("graft_drain", ".jfr")
+    try {
+      rec.dump(f)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command"))
+    } finally { rec.close(); java.nio.file.Files.deleteIfExists(f) }
+  }
+
+  private def program(cmd: String): String =
+    cmd.trim.split("\\s+").head.split('/').last
+
+  private def st1(): Seq[String] =
+    SparkEntry.queries("st1_stream_daily")(spark, Sf)
+      .collect().map(_.toString).toSeq.sorted
+
+  /** Set `confs` as a caller would, run `body`, then unset them. */
+  private def withCallerConfs[A](confs: Map[String, String])(body: => A): A = {
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally confs.keys.foreach(spark.conf.unset)
+  }
+
+  private def confState: Map[String, Option[String]] =
+    Keys.map(k => k ->
+      (if (SessionBridge.isSet(spark, k)) Some(spark.conf.get(k)) else None)).toMap
+
+  test("a drain forks no readlink; a caller-chosen FileContext manager is kept") {
+    val drained = launches(st1())
+    val byProgram = drained.groupBy(program).view.mapValues(_.size).toMap
+    // the caller's choice wins over the helper's, so this drain shows
+    // what each stream cost before the helper picked the manager
+    val control = withCallerConfs(Map(StreamOps.CheckpointManagerKey -> FileContextManager)) {
+      launches(st1())
+    }
+    val controlByProgram = control.groupBy(program).view.mapValues(_.size).toMap
+    info(s"process launches per st1 drain: FileSystem manager $byProgram, " +
+      s"FileContext manager $controlByProgram")
+    assert(byProgram.getOrElse("readlink", 0) == 0,
+      s"the drain forked readlink: ${drained.filter(program(_) == "readlink").take(3)}")
+    // without Hadoop's native library the FileContext manager forks a
+    // readlink per rename; the zero above is meaningful only if the
+    // recording sees those launches
+    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
+      assert(controlByProgram.getOrElse("readlink", 0) > 0,
+        s"the FileContext control forked no readlink: $controlByProgram")
+  }
+
+  test("draining st1 again compiles no new classes and returns the same rows") {
+    val first = st1()
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = st1()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    assert(compiled == 0, s"the repeated drain compiled $compiled classes")
+    assert(first.nonEmpty && second == first)
+  }
+
+  test("the caller's confs come back after a drain, and unset keys stay unset") {
+    assert(confState.values.forall(_.isEmpty), s"test session has $confState")
+    st1()
+    assert(confState.values.forall(_.isEmpty), s"after a drain: $confState")
+    val caller = Map(StreamOps.CheckpointManagerKey -> FileContextManager,
+      StreamOps.IsolationKey -> "true")
+    withCallerConfs(caller) {
+      st1()
+      assert(confState == caller.map { case (k, v) => k -> Some(v) })
+    }
+  }
+
+  test("a failed drain names the query and restores the caller's confs") {
+    TestDirs.withTempDir("graft_drain_fail") { dir =>
+      Seq(1L, 2L).toDF("v").write.parquet(s"$dir/in")
+      def failing() = StreamOps.drainToTable(
+        spark.readStream.schema("v LONG").parquet(s"$dir/in")
+          .select(expr("if(v > 0, raise_error('drain boom'), v)").as("v")),
+        "append", "drain_fail")
+      val ex = intercept[IllegalStateException](failing())
+      assert(ex.getMessage.contains("drain_fail_out_") &&
+        ex.getMessage.contains("drain boom"), ex.getMessage)
+      assert(confState.values.forall(_.isEmpty), s"after a failed drain: $confState")
+      withCallerConfs(Map(StreamOps.IsolationKey -> "true")) {
+        intercept[IllegalStateException](failing())
+        assert(confState == Map(StreamOps.CheckpointManagerKey -> None,
+          StreamOps.IsolationKey -> Some("true")))
+      }
+    }
+  }
+
+  // Restart parity: st3's stateful dedup into the exactly-once parquet
+  // sink, fed one file per trigger, stopped after its first committed
+  // batch and restarted from the same checkpoint, must sink exactly the
+  // rows of an uninterrupted run — nothing lost, nothing emitted twice.
+  private def restartParity(firstManager: String, restartManager: String): Unit =
+    TestDirs.withTempDir("graft_drain_restart") { dir =>
+      graft.io.Tables.events(spark, Sf)
+        .select($"ts", $"user_id", $"event_type")
+        .repartition(12).write.parquet(s"$dir/in")
+      // the manager conf holds for the whole run, as drainToTable holds
+      // it: the file source builds its log on the stream thread
+      def run(manager: String, dirName: String)(body: StreamingQuery => Unit): Unit =
+        withCallerConfs(Map(StreamOps.CheckpointManagerKey -> manager)) {
+          val stream = spark.readStream
+            .schema("ts TIMESTAMP, user_id LONG, event_type STRING")
+            .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
+          val q = StreamOps.dedupWithinWatermark(
+              stream, "ts", Seq("user_id", "event_type"), "365 days")
+            .select($"user_id", $"event_type")
+            .writeStream.outputMode("append").format("parquet")
+            .option("path", s"$dir/$dirName/out")
+            .option("checkpointLocation", s"$dir/$dirName/ckpt").start()
+          try body(q) finally q.stop()
+        }
+      def sunk(dirName: String): Seq[(Long, String)] =
+        try spark.read.parquet(s"$dir/$dirName/out").as[(Long, String)].collect().toSeq
+        catch { case _: org.apache.spark.sql.AnalysisException => Seq.empty }
+      def commits(dirName: String): Int =
+        Option(new java.io.File(s"$dir/$dirName/ckpt/commits").list())
+          .map(_.count(_.forall(_.isDigit))).getOrElse(0)
+
+      run(FileSystemManager, "whole")(_.processAllAvailable())
+      assert(commits("whole") == 12)
+
+      val first = launches(run(firstManager, "cut") { _ =>
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (sunk("cut").isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      })
+      val cutAt = commits("cut")
+      assert(cutAt > 0 && cutAt < 12, s"the first run committed $cutAt of 12 batches")
+      // the first run really wrote its checkpoint with `firstManager`
+      if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
+        assert(first.exists(program(_) == "readlink") == (firstManager == FileContextManager))
+      val restarted = launches(run(restartManager, "cut")(_.processAllAvailable()))
+      assert(commits("cut") == 12)
+      assert(!restarted.exists(program(_) == "readlink"),
+        "the restarted run checkpointed through the FileContext manager")
+      val want = sunk("whole")
+      val got = sunk("cut")
+      assert(want.nonEmpty && got.sorted == want.sorted,
+        s"restarted=${got.size} uninterrupted=${want.size} " +
+          s"missing=${(want.toSet -- got.toSet).take(3)} extra=${(got.toSet -- want.toSet).take(3)}")
+    }
+
+  test("restart parity: FileSystem manager, stopped partway and restarted") {
+    restartParity(FileSystemManager, FileSystemManager)
+  }
+
+  test("restart parity: a FileContext checkpoint restarts under the FileSystem manager") {
+    restartParity(FileContextManager, FileSystemManager)
+  }
+}

@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One way to do each thing: the engine builds sessions in one place
   * (`GraftSession`), keeps session-scoped state in one store
-  * (`graft.io.PersistRegistry`) and writes per-row kernels one way
-  * (plain methods called through `graft.Kernel`). Fails when another
-  * pattern appears under src/main/scala, so none can grow back. */
+  * (`graft.io.PersistRegistry`), writes per-row kernels one way
+  * (plain methods called through `graft.Kernel`) and runs streams one
+  * way (`StreamOps.drainToTable`). Fails when another pattern appears
+  * under src/main/scala, so none can grow back. */
 class StructureGuardSpec extends AnyFunSuite {
   private val sources: Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -50,6 +51,15 @@ class StructureGuardSpec extends AnyFunSuite {
     val hits = offenders("""override(protected)?def(doGenCode|genCode)\(|(with|extends)CodegenFallback\b""", "")
     assert(hits.isEmpty,
       hits.mkString("write the kernel as a method called through graft.Kernel:\n", "\n", ""))
+  }
+
+  test("streams start and drain only in StreamOps.drainToTable") {
+    // the helper owns the sink name, the drain, the stop, the state
+    // metrics and the confs the drain runs under; a stream started
+    // elsewhere forks a process per checkpoint rename again
+    val hits = offenders("""\.writeStream\b|processAllAvailable""", "StreamOps.scala")
+    assert(hits.isEmpty,
+      hits.mkString("run the stream through StreamOps.drainToTable instead:\n", "\n", ""))
   }
 
   test("MlPack runs the pairwise-corr build only in its two graph memos") {
