@@ -2,6 +2,7 @@ package graft.cluster
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** M4 at scale: distributed DBSCAN (SURVEY §7.3 flags this as the one
   * genuinely hard distributed algorithm; this is the documented scale
@@ -15,9 +16,8 @@ import org.apache.spark.sql.functions._
   *     directed pair is generated exactly once by one equi-join on the
   *     cell key — never an all-pairs cross join);
   *  3. core points = ≥ minPts-1 ε-neighbors;
-  *  4. clusters = connected components of the core-core ε-graph via
-  *     iterative min-label propagation (converges in O(graph diameter)
-  *     join+agg rounds; lineage cut by localCheckpoint);
+  *  4. clusters = connected components of the core-core ε-graph
+  *     ([[graft.graph.Components.resolve]]);
   *  5. border points adopt the min neighboring core label
   *     (deterministic variant of DBSCAN's first-found assignment);
   *     the rest is noise (-1).
@@ -27,14 +27,10 @@ import org.apache.spark.sql.functions._
   */
 object DistributedDbscan {
 
-  /** Core-edge count up to which components resolve via driver
-    * union-find over the contracted graph (cf. the Louvain hybrid). */
-  val collectEdgeThreshold: Long = 5000000L
-
   /** @return (id, cluster) with cluster = -1 for noise; cluster ids are
     *         the min member id of each component (deterministic). */
   def run(points: DataFrame, idCol: String, xCol: String, yCol: String,
-          eps: Double, minPts: Int, maxIter: Int = 25): DataFrame = {
+          eps: Double, minPts: Int): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
 
@@ -45,9 +41,8 @@ object DistributedDbscan {
     // pipeline (Catalyst does not CSE identical subplans). Checkpointing
     // the (id,x,y) projection — 3 columns, one row per point — pays one
     // materialization and makes every later scan a local block read.
-    val pts = points.select(col(idCol).cast("long").as("id"),
-      col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
-      .localCheckpoint()
+    val pts = Fixpoint.cut(points.select(col(idCol).cast("long").as("id"),
+      col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y")))
 
     // 1-2. grid binning + adjacent-cell pair generation
     val offsets = for (dx <- -1 to 1; dy <- -1 to 1) yield (dx, dy)
@@ -77,7 +72,7 @@ object DistributedDbscan {
       .withColumn("is_core", $"deg" + 1 >= minPts)
       .select($"id", $"is_core").persist()
 
-    // 4. connected components over core-core edges (min-label propagation)
+    // 4. connected components over core-core edges
     val coreIds = core.filter($"is_core").select($"id")
     val coreEdges = pairs
       .join(coreIds.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
@@ -85,63 +80,13 @@ object DistributedDbscan {
       .persist()
     // The ε-pair generation and degree counting above are the
     // data-proportional distributed work; the core-core edge list is a
-    // CONTRACTED graph (≪ input rows). When it fits on the driver —
-    // the overwhelmingly common case, same situation as the Louvain
-    // graph — union-find resolves components in one pass with zero
-    // extra Spark rounds. The iterative min-label + pointer-jumping
-    // fallback stays for edge lists beyond the threshold.
-    // Size-probe with a count first: a speculative threshold+1 collect
-    // would haul up to the full multi-million-row edge list onto the
-    // driver even when the distributed path is about to run — the count
-    // touches the persisted edges without materializing them driver-side.
-    val edgeCount = coreEdges.limit(collectEdgeThreshold.toInt + 1).count()
-    var labels: DataFrame = null
-    if (edgeCount <= collectEdgeThreshold) {
-      val edges = coreEdges.select($"a", $"b").as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val resolved = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(id => (id, find(id)))
-      labels = spark.createDataFrame(resolved.toSeq).toDF("id", "label")
-      // isolated cores (no core neighbor) label themselves
-      labels = coreIds.join(labels, Seq("id"), "left")
-        .withColumn("label", coalesce($"label", $"id"))
-    } else {
-      labels = coreIds.withColumn("label", $"id")
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIter) {
-        val candidate = coreEdges
-          .join(labels.withColumnRenamed("id", "b").withColumnRenamed("label", "lb"),
-            Seq("b"))
-          .groupBy($"a".as("id")).agg(min($"lb").as("nl"))
-        val propagated = labels.join(candidate, Seq("id"), "left")
-          .withColumn("label", least($"label", coalesce($"nl", $"label")))
-          .select($"id", $"label")
-        // pointer-jumping: label ← label's label halves path lengths
-        val compressed = propagated.as("p")
-          .join(propagated.select($"id".as("label"), $"label".as("gl")).as("g"),
-            Seq("label"), "left")
-          .select($"id", least($"label", coalesce($"gl", $"label")).as("label"))
-          .localCheckpoint()
-        val changes = compressed
-          .join(labels.withColumnRenamed("label", "old"), Seq("id"))
-          .filter($"label" =!= $"old").count()
-        labels = compressed
-        converged = changes == 0
-        iter += 1
-      }
-    }
+    // CONTRACTED graph (≪ input rows), already symmetric (pairs holds
+    // both directions) and persisted, so it goes to the resolver as is
+    // (driver union-find when it fits, propagation beyond), which
+    // releases it. Isolated cores (no core neighbor) label themselves.
+    val labels = coreIds
+      .join(graft.graph.Components.resolve(coreEdges), Seq("id"), "left")
+      .withColumn("label", coalesce($"label", $"id"))
 
     // 5. border attachment + noise. Core and border ids are disjoint
     // (border candidates anti-join the cores), so ONE unioned label map
@@ -158,8 +103,8 @@ object DistributedDbscan {
     // re-run the ε-pair join from scratch (observed: m4b re-executed the
     // whole pair generation inside the bench's write after run()
     // returned).
-    val labelMap = labels.unionByName(borderLabels).localCheckpoint()
-    pairs.unpersist(); core.unpersist(); coreEdges.unpersist()
+    val labelMap = Fixpoint.cut(labels.unionByName(borderLabels))
+    pairs.unpersist(); core.unpersist()
     pts.select($"id")
       .join(labelMap, Seq("id"), "left")
       .select($"id", coalesce($"label", lit(-1L)).as("cluster"))

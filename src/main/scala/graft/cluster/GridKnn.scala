@@ -2,6 +2,7 @@ package graft.cluster
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** J6/M8 at scale: EXACT k-nearest-neighbors in 2-D feature space with
   * grid-cell-bounded pair generation (reference semantics:
@@ -31,7 +32,7 @@ import org.apache.spark.sql.functions._
   * all-pairs broadcast top-k — ≤ smallN² bounded distance evals, zero
   * shuffle on the pair side — costs less than ONE grid round's fixed
   * overhead (each round is several jobs: candidate join, heap agg,
-  * certificate, checkpoint, emptiness probe). The cutover is a probed
+  * certificate, two cuts). The cutover is a probed
   * count, never a guess, so the quadratic shape is entered only under
   * an explicit bound; above it the grid rounds keep pair compute
   * neighborhood-local. Output is identical on both paths.
@@ -74,9 +75,8 @@ object GridKnn {
 
     // one 3-column materialization reused by every round's build AND
     // probe side (same lineage-cut argument as DistributedDbscan)
-    val pts = points.select(col(idCol).as("id"),
-      col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
-      .localCheckpoint()
+    val pts = Fixpoint.cut(points.select(col(idCol).as("id"),
+      col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y")))
 
     val (n, w0) = initialWidth(pts)
     if (n <= 1) {
@@ -99,12 +99,12 @@ object GridKnn {
       return (topk.select($"pid".as(idCol), $"nid", $"dist", $"rank"), 0)
     }
 
-    var unresolved = pts
     var resolved: DataFrame = null
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      val w = w0 * math.pow(2.0, round.toDouble)
+    // the unresolved count is observed on each round's cut: 0 = done
+    val res = Fixpoint.run(pts, maxRounds, cutEvery = 1,
+        stop = Some(Fixpoint.Observed(count(lit(1)),
+          (_, n) => n == 0L))) { (unresolved, round) =>
+      val w = w0 * math.pow(2.0, (round - 1).toDouble)
       val cand = candidates(pts, unresolved, w)
       val topk = graft.operators.TopK.perKey(cand, Seq("pid"),
         Seq($"dist", $"nid"), kEff)
@@ -116,17 +116,15 @@ object GridKnn {
         .filter(if (kEff == n - 1) $"nfound" === kEff
                 else $"nfound" === kEff && $"kdist" <= w)
         .select($"pid")
-      val roundOut = topk.join(cert, Seq("pid"), "left_semi").localCheckpoint()
+      val roundOut = Fixpoint.cut(
+        topk.join(cert, Seq("pid"), "left_semi"))
       resolved = if (resolved == null) roundOut
                  else resolved.unionByName(roundOut)
-      unresolved = unresolved
+      unresolved
         .join(roundOut.select($"pid".as("id")).distinct(), Seq("id"), "left_anti")
-        .localCheckpoint()
-      round += 1
-      done = unresolved.limit(1).count() == 0L
     }
-    require(done, s"GridKnn failed to certify all points in $maxRounds rounds")
-    (resolved.select($"pid".as(idCol), $"nid", $"dist", $"rank"), round)
+    require(res.converged, s"GridKnn failed to certify all points in $maxRounds rounds")
+    (resolved.select($"pid".as(idCol), $"nid", $"dist", $"rank"), res.rounds)
   }
 
   /** Round-0 cell width from a ROBUST span (1%-99% quantiles, not

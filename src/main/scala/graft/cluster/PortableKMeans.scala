@@ -3,6 +3,7 @@ package graft.cluster
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 import graft.text.TextOps
 
 /** Distributed Lloyd's k-means with an ENGINE-PORTABLE deterministic
@@ -40,10 +41,9 @@ object PortableKMeans {
     require(k <= 65536,
       s"k $k: centroid-id rank window is single-partition")
     val h = TextOps.hash60(col(idCol).cast("string"))
-    var centroids = corpus.orderBy(h, col(idCol)).limit(k)
+    val centroids = Fixpoint.cut(corpus.orderBy(h, col(idCol)).limit(k)
       .withColumn("cid", row_number().over(Window.orderBy(h, col(idCol))) - 1)
-      .select(col("cid"), col(vecCol).as("cvec"))
-      .localCheckpoint()
+      .select(col("cid"), col(vecCol).as("cvec")))
 
     // Map-only assign (round-21, VERDICT item 3): the k centroids are
     // collapsed into ONE broadcast row (array<struct<cid, cvec>> sorted
@@ -65,9 +65,8 @@ object PortableKMeans {
           col("mn.d2").as("d2"), col(vecCol).as("__v"))
     }
 
-    for (_ <- 1 to rounds) {
-      val a = assignTo(centroids)
-      centroids = a
+    val fitted = Fixpoint.run(centroids, rounds, cutEvery = 1) { (cent, _) =>
+      assignTo(cent)
         .select(col("cid"), posexplode(col("__v")).as(Seq("pos", "x")))
         .groupBy(col("cid"), col("pos"))
         .agg(graft.queries.Rx.r6(avg(col("x"))).as("av"))
@@ -75,9 +74,8 @@ object PortableKMeans {
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("av").as("a")))),
           s => s("a")).as("cvec"))
-        .localCheckpoint()
-    }
-    assignTo(centroids)
+    }.state
+    assignTo(fitted)
       .select(col(idCol).as("vec_id"), col("cid"), col("d2"))
   }
 

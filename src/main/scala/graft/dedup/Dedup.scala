@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.operators.Fixpoint
 
 /** Deduplication operators for LLM-data pipelines (BASELINE.json scale
   * extensions): exact, MinHash+LSH, SimHash, blocked n-gram Jaccard.
@@ -174,87 +175,20 @@ object Dedup {
   }
 
   /** Connected components over an undirected edge list (near-dup pairs →
-    * dedup CLUSTERS). Hybrid, same design as DistributedDbscan: a dup
-    * graph that fits on the driver (the common case — edges ≪ corpus
-    * because LSH already pruned) resolves with one collect + union-find;
-    * beyond `collectEdgeThreshold` edges the fully distributed
-    * min-label-propagation + pointer-jumping loop runs instead,
-    * converging in O(log diameter) join+agg rounds with lineage cut by
-    * localCheckpoint. Returns (id, cluster) with cluster = min member
-    * id (deterministic canonical representative). */
+    * dedup CLUSTERS): symmetrizes the pairs and runs the engine's one
+    * resolver, [[graft.graph.Components.resolve]] (driver union-find
+    * when the dup graph fits — the common case, LSH already pruned it —
+    * else distributed propagation, failing past `maxIter` rounds).
+    * Returns (id, cluster) with cluster = min member id (deterministic
+    * canonical representative). */
   def components(edges: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                 maxIter: Int = 20,
+                 maxIter: Int = graft.graph.Components.MaxIter,
                  collectEdgeThreshold: Long = 5000000L): DataFrame = {
-    val spark = edges.sparkSession
     val sym = edges.select(col(idA).as("a"), col(idB).as("b"))
       .unionByName(edges.select(col(idB).as("a"), col(idA).as("b")))
       .distinct().persist()
-
-    // Size-probe with a count over the persisted edges — the probe itself
-    // must not collect: when the distributed path runs, a speculative
-    // multi-million-row collect would be pure driver-OOM risk.
-    val probeLimit = math.min(collectEdgeThreshold + 1, Int.MaxValue.toLong).toInt
-    val edgeCount = sym.limit(probeLimit).count()
-    if (edgeCount <= collectEdgeThreshold) {
-      import spark.implicits._
-      val fetched: Array[(Long, Long)] =
-        sym.select(col("a"), col("b")).as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      fetched.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val resolved = fetched.map(_._1).distinct.map(id => (id, find(id)))
-      sym.unpersist()
-      return resolved.toSeq.toDF("id", "cluster")
-    }
-
-    // distributed path only: re-key the symmetric edge frame on its
-    // per-round join key (the LoopFrames rationale, round-20 — an
-    // unkeyed persisted frame is re-shuffled by every propagation
-    // round); the collect path above never joins it. symK rides
-    // PersistRegistry so a session reset can always release it, and
-    // sym is released as soon as symK is materialized — it is never
-    // read again (round-20 ADVICE: both frames previously stayed
-    // pinned for the whole loop, and neither unpersist was
-    // exception-safe).
-    val symK = graft.io.PersistRegistry.trackPersist(
-      sym.repartition(col("b")).sortWithinPartitions(col("b")))
-    symK.count()
-    sym.unpersist()
-    try {
-      var labels = symK.select(col("a").as("id")).distinct()
-        .withColumn("lbl", col("id")).localCheckpoint()
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIter) {
-        val nbrMin = symK
-          .join(labels.select(col("id").as("b"), col("lbl").as("nl")), Seq("b"))
-          .groupBy(col("a").as("id")).agg(min(col("nl")).as("nl"))
-        val propagated = labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"), least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"))
-        // pointer jumping: label ← label's label (halves chain lengths)
-        val jumped = propagated.as("p")
-          .join(propagated.select(col("id").as("lbl"), col("lbl").as("gl")).as("g"),
-            Seq("lbl"), "left")
-          .select(col("id"), least(col("lbl"), coalesce(col("gl"), col("lbl"))).as("lbl"))
-          .localCheckpoint()
-        val changes = jumped
-          .join(labels.withColumnRenamed("lbl", "old"), Seq("id"))
-          .filter(col("lbl") =!= col("old")).count()
-        labels = jumped
-        converged = changes == 0
-        iter += 1
-      }
-      labels.withColumnRenamed("lbl", "cluster")
-    } finally symK.unpersist()
+    graft.graph.Components.resolve(sym, maxIter, collectEdgeThreshold)
+      .withColumnRenamed("label", "cluster")
   }
 
   /** Blocked n-gram Jaccard near-dup with BOUNDED fan-out — the scale-safe
@@ -448,16 +382,15 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     // token arrays materialized before the gram lambda references them
     // 3x per element (the t14 CollapseProject hazard, measured on d12)
-    val toks = df.select(col(idCol).as("doc_id"),
-        TextOps.tokens(col(textCol)).as("ts"))
-      .localCheckpoint()
+    val toks = Fixpoint.cut(df.select(col(idCol).as("doc_id"),
+        TextOps.tokens(col(textCol)).as("ts")))
     // compiled gram kernel (round-21): the transform(sequence, …md5…)
     // HOF walked an interpreted tree per position — see GramHash
-    val grams = toks
+    // DF filter + both self-join sides read it
+    val grams = Fixpoint.cut(toks
       .select(col("doc_id"), graft.text.GramHash(col("ts"), 3).as("ghs"))
       .select(col("doc_id"), posexplode(col("ghs")).as(Seq("pos0", "gh")))
-      .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("gh"))
-      .localCheckpoint() // DF filter + both self-join sides read it
+      .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("gh")))
     val banded = grams.join(
       grams.groupBy(col("gh"))
         .agg(countDistinct(col("doc_id")).as("ndocs"))

@@ -2,26 +2,28 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.{Fixpoint, LoopFrames}
 
-/** Connected components by K rounds of min-label propagation — the
-  * iterative component operator in its oracle-expressible form (the
-  * [[PageRank]] convention): label_0(v) = v; label_{i+1}(v) =
-  * min(label_i(v), min over in-neighbors u of label_i(u)). After
-  * k ≥ graph diameter rounds every node carries its component's min
-  * id — the weakly-connected-components fixpoint (callers verify
-  * convergence by comparing round k to k−1, see ComponentsSpec; the
-  * declared query pins it on the panel graph).
+/** Connected components, two ways:
   *
-  * Scale shape: each round is ONE edge-keyed shuffle join (edge list
-  * against the node-sized label frame) plus one destination-keyed
-  * min aggregate — the canonical Pregel round — with the label frame
-  * localCheckpoint'ed on a depth-2 cadence so lineage stays linear.
-  * No driver-side iteration state; the only driver decision is the
-  * fixed round count. (Production WCC uses large-star/small-star to
-  * converge in O(log n) rounds — implemented here as [[runStars]],
-  * spec-pinned equivalent; fixed-K min-propagation remains the
-  * DECLARED form because a second engine can replay it exactly as K
-  * chained CTEs, keeping the output hash-checkable end to end.)
+  *  - [[run]]: K rounds of min-label propagation, the iterative
+  *    component operator in its oracle-expressible form (the
+  *    [[PageRank]] convention): label_0(v) = v; label_{i+1}(v) =
+  *    min(label_i(v), min over in-neighbors u of label_i(u)). After
+  *    k ≥ graph diameter rounds every node carries its component's min
+  *    id — the weakly-connected-components fixpoint (ComponentsSpec pins
+  *    that the declared query's k is past it on the panel graph). A
+  *    second engine replays it exactly as K chained CTEs, which keeps
+  *    the output hash-checkable end to end.
+  *  - [[resolve]]: the engine's components resolver for dedup clusters
+  *    and DBSCAN, run to convergence: driver union-find when the edge
+  *    list fits, else min-label propagation with pointer jumping.
+  *
+  * Scale shape of a propagation round: ONE edge-keyed shuffle join
+  * (edge list against the node-sized label frame) plus one
+  * destination-keyed min aggregate — the canonical Pregel round — with
+  * the label frame cut through [[Fixpoint]]. No driver-side iteration
+  * state.
   */
 object Components {
 
@@ -34,77 +36,91 @@ object Components {
     val spark = edges.sparkSession
     import spark.implicits._
     // loop constant keyed on the per-round join key (round-20)
-    val e = graft.operators.LoopFrames.keyed(edges, "src")
-    var labels = e.select($"src".as("node")).distinct()
-      .select($"node", $"node".as("label"))
-      .localCheckpoint()
-    (1 to k).foreach { i =>
+    val e = LoopFrames.keyed(edges, "src")
+    val labels0 = Fixpoint.cut(e.select($"src".as("node")).distinct()
+      .select($"node", $"node".as("label")))
+    Fixpoint.run(labels0, k, cutEvery = 2, cutLast = true) { (labels, _) =>
       // merge hint at the JOIN site — see LoopFrames.keyed's scaladoc
       val nbrMin = e.hint("merge")
         .join(labels.select($"node".as("src"), $"label".as("slabel")), "src")
         .groupBy($"dst".as("node")).agg(min($"slabel").as("nbr"))
-      labels = labels.join(nbrMin, Seq("node"), "left")
+      labels.join(nbrMin, Seq("node"), "left")
         .select($"node", least($"label", coalesce($"nbr", $"label")).as("label"))
-      if (i % 2 == 0 || i == k) labels = labels.localCheckpoint()
-    }
-    labels
+    }.state
   }
 
-  /** Connected components by alternating large-star/small-star
-    * contraction (Kiveris et al. 2014) — the O(log n)-round PRODUCTION
-    * path [[run]]'s scaladoc promises: min-propagation needs
-    * diameter-many rounds (a 1000-hop chain in 100 TB of web graph =
-    * 1000 shuffles), star contraction collapses the same chain in
-    * ~log² n rounds because every round re-points whole neighborhoods
-    * at their minimum, not just adjacent nodes.
+  /** Round cap of [[resolve]]'s propagation loop: past it the
+    * resolver fails rather than return unconverged labels. */
+  val MaxIter = 25
+
+  /** Connected components of an undirected graph, run to convergence.
     *
-    * Round = large-star (every strictly-larger neighbor of u re-points
-    * to m = min(Γ(u) ∪ {u})) then small-star (grouped by the LARGER
-    * endpoint u, its smaller neighbors and u itself re-point to their
-    * minimum). Both are one groupBy + one join over the current edge
-    * set, which only ever shrinks toward the star forest. At the
-    * fixpoint every non-root carries exactly one edge to its component
-    * minimum.
+    * A graph whose edge list fits on the driver (the common case: LSH
+    * or the ε-grid already pruned it to a contracted graph) resolves
+    * with one count probe, one collect and a union-find. The probe is a
+    * count, not a speculative collect, so a multi-million-row edge list
+    * never reaches the driver when the distributed path runs. Beyond
+    * `collectEdgeThreshold` edges, min-label propagation plus pointer
+    * jumping (label ← label's label) converges in O(log diameter)
+    * join+agg rounds; the count of changed labels is observed on each
+    * round's cut, and the loop fails if labels still change after
+    * `maxIter` rounds rather than return unconverged clusters.
     *
-    * Not SQL-replayable in bounded CTEs (per-round DISTINCT over a
-    * mutating pair set), so the declared WCC query stays on [[run]] —
-    * this is the scale path, pinned equivalent to [[run]]'s fixpoint in
-    * ComponentsSpec (chain fixture where min-propagation at the same
-    * round budget is provably NOT converged, plus the real panel
-    * graph).
-    *
-    * @param edges (src, dst), both directions present (the [[run]]
-    *              contract); self-loops ignored.
-    * @return (node, label), label = component min id at the fixpoint. */
-  def runStars(edges: DataFrame, rounds: Int): DataFrame = {
-    val spark = edges.sparkSession
+    * @param sym (a, b), SYMMETRIC: both directions of every edge,
+    *            persisted by the caller (the probe and the collect or
+    *            the keyed copy each read it) and released here once
+    *            read. Nodes without an edge are not in the output.
+    * @return (id, label), label = min id of the node's component. */
+  def resolve(sym: DataFrame, maxIter: Int = MaxIter,
+              collectEdgeThreshold: Long = 5000000L): DataFrame = try {
+    val spark = sym.sparkSession
     import spark.implicits._
-    val nodes = edges.select($"src".as("node")).distinct().localCheckpoint()
-    var e = edges
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .filter($"a" =!= $"b").distinct().localCheckpoint()
-    (1 to rounds).foreach { _ =>
-      val sym = e.select($"a".as("u"), $"b".as("v"))
-        .unionByName(e.select($"b".as("u"), $"a".as("v")))
-      val lm = sym.groupBy($"u").agg(min($"v").as("mn"))
-        .select($"u", least($"u", $"mn").as("m"))
-      val ls = sym.join(lm, "u").filter($"v" > $"u")
-        .select(least($"v", $"m").as("a"), greatest($"v", $"m").as("b"))
-        .filter($"a" =!= $"b").distinct()
-      val sm = ls.groupBy($"b").agg(min($"a").as("m"))
-        .select($"b".as("u"), $"m")
-      val ss = ls.select($"b".as("u"), $"a".as("v")).join(sm, "u")
-      e = ss.filter($"v" =!= $"m").select($"v".as("x"), $"m")
-        .unionByName(ss.select($"u".as("x"), $"m"))
-        .select(least($"x", $"m").as("a"), greatest($"x", $"m").as("b"))
-        .filter($"a" =!= $"b").distinct()
-        .localCheckpoint()
+    val probeLimit = math.min(collectEdgeThreshold + 1, Int.MaxValue.toLong).toInt
+    if (sym.limit(probeLimit).count() <= collectEdgeThreshold) {
+      val fetched = sym.select($"a", $"b").as[(Long, Long)].collect()
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+        var c = x
+        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+        r
+      }
+      fetched.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      return fetched.map(_._1).distinct.map(id => (id, find(id))).toSeq
+        .toDF("id", "label")
     }
-    val parent = e.select($"b".as("node"), $"a".as("label"))
-      .groupBy($"node").agg(min($"label").as("label"))
-    nodes.join(parent, Seq("node"), "left")
-      .select($"node", coalesce($"label", $"node").as("label"))
-  }
+    // keyed on the per-round join key: an unkeyed persisted frame is
+    // re-shuffled by every propagation round (the LoopFrames rationale)
+    val symK = LoopFrames.keyed(sym, "b")
+    sym.unpersist() // the loop reads only the keyed copy
+    try {
+      val labels0 = Fixpoint.cut(symK.select($"a".as("id")).distinct()
+        .withColumn("label", $"id"))
+      val changed = sum(when($"label" =!= $"old", 1L).otherwise(0L))
+      val res = Fixpoint.run(labels0, maxIter, cutEvery = 1,
+          stop = Some(Fixpoint.Observed(changed, (_, n) => n == 0L))) { (labels, _) =>
+        val nbrMin = symK.hint("merge")
+          .join(labels.select($"id".as("b"), $"label".as("nl")), "b")
+          .groupBy($"a".as("id")).agg(min($"nl").as("nl"))
+        val propagated = labels.join(nbrMin, Seq("id"), "left")
+          .select($"id", $"label".as("old"),
+            least($"label", coalesce($"nl", $"label")).as("label"))
+        propagated
+          .join(propagated.select($"id".as("label"), $"label".as("gl")),
+            Seq("label"), "left")
+          .select($"id", least($"label", coalesce($"gl", $"label")).as("label"),
+            $"old")
+      }
+      require(res.converged,
+        s"Components.resolve: labels still changing after maxIter=$maxIter " +
+          "propagation rounds")
+      res.state.select($"id", $"label")
+    } finally symK.unpersist()
+  } finally sym.unpersist()
 
   /** DuckDB CTE chain replaying [[run]] on an `edges(src, dst)` CTE the
     * caller prepends: emits `nodes, l_0 … l_K`; select from `l_$k`. */

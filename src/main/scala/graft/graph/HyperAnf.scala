@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.{Fixpoint, LoopFrames}
 import graft.sketch.Hll
 
 /** HyperANF (Boldi, Rosa & Vigna 2011): the approximate neighborhood
@@ -31,31 +32,29 @@ object HyperAnf {
     * each of the three previously rebuilt the identical iteration;
     * MlPack memoizes this sequence once per (session, dir) so a bench
     * run pays for the registers exactly once). When `checkpointEach`,
-    * EVERY round frame is localCheckpointed (≤ n·m rows — tiny), so
-    * downstream consumers read materialized tables instead of
-    * re-deriving the merge chain; the run-internal cadence otherwise
-    * checkpoints every other round (the PageRank depth-2 cadence). */
+    * EVERY round frame is cut (≤ n·m rows — tiny), so downstream
+    * consumers read materialized tables instead of re-deriving the
+    * merge chain; otherwise every other round is cut ([[Fixpoint]]). */
   def registerRounds(edges: DataFrame, k: Int, p: Int,
                      checkpointEach: Boolean = false): IndexedSeq[DataFrame] = {
     // loop constant keyed on the per-round join key (round-20)
-    val e = graft.operators.LoopFrames.keyed(edges, "dst")
+    val e = LoopFrames.keyed(edges, "dst")
     val nodes = e.select(col("src").as("node")).distinct()
     // ball(v, 0) = {v}: each vertex's initial sketch is its own id
-    var regs = Hll.keyedRegisters(
+    val regs0 = Hll.keyedRegisters(
       nodes.withColumn("key", col("node")), "node", "key", p)
-    if (checkpointEach) regs = regs.localCheckpoint()
-    var out = Vector(regs)
-    for (t <- 1 to k) {
+    val out = Vector.newBuilder[DataFrame]
+    val last = Fixpoint.run(if (checkpointEach) Fixpoint.cut(regs0) else regs0,
+        k, cutEvery = if (checkpointEach) 1 else 2) { (regs, _) =>
+      out += regs
       // merge hint at the JOIN site — see LoopFrames.keyed's scaladoc
       val nbr = e.hint("merge")
         .join(regs.withColumnRenamed("node", "dst"), "dst")
         .select(col("src").as("node"), col("bucket"), col("r"))
-      regs = regs.unionByName(nbr)
+      regs.unionByName(nbr)
         .groupBy("node", "bucket").agg(max("r").as("r"))
-      if (checkpointEach || t % 2 == 0) regs = regs.localCheckpoint()
-      out :+= regs
-    }
-    out
+    }.state
+    (out += last).result()
   }
 
   /** K max-merge rounds; returns per-vertex
@@ -99,18 +98,16 @@ object HyperAnf {
     * exists to avoid at scale). */
   def khopExact(edges: DataFrame, k: Int): DataFrame = {
     // loop constant keyed on the per-round join key (round-20)
-    val e = graft.operators.LoopFrames.keyed(edges, "dst")
-    var pairs = e.select(col("src").as("node"),
+    val e = LoopFrames.keyed(edges, "dst")
+    val pairs0 = e.select(col("src").as("node"),
       col("src").as("reached")).distinct()
-    for (t <- 1 to k) {
+    Fixpoint.run(pairs0, k, cutEvery = 2) { (pairs, _) =>
       // merge hint at the JOIN site — see LoopFrames.keyed's scaladoc
       val nbr = e.hint("merge")
         .join(pairs.withColumnRenamed("node", "dst"), "dst")
         .select(col("src").as("node"), col("reached"))
-      pairs = pairs.unionByName(nbr).distinct()
-      if (t % 2 == 0) pairs = pairs.localCheckpoint()
-    }
-    pairs.groupBy("node").agg(count(lit(1)).as("n_reach"))
+      pairs.unionByName(nbr).distinct()
+    }.state.groupBy("node").agg(count(lit(1)).as("n_reach"))
   }
 
   /** Chained register CTEs only: `hn`, `h0`, `regs_0 … regs_<k>`

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** k-core decomposition by iterative peeling (Seidman 1983; the
   * distributed formulation of Montresor et al. 2013 simplified to
@@ -16,8 +17,7 @@ import org.apache.spark.sql.functions._
   * + a semi-join of the edge list against surviving nodes on each
   * endpoint — two hash joins co-partitioned on the edge keys. Cost per
   * round is proportional to the SURVIVING edge set, which shrinks
-  * monotonically; `localCheckpoint` every other round bounds lineage
-  * (the PageRank cadence, measured there).
+  * monotonically; every round is cut ([[Fixpoint]]).
   *
   * Fixed `rounds` (not a loop-until-fixpoint) keeps the operator
   * replayable as chained oracle CTEs — the g16/m11 convention — with
@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * schedule recomputes the identical degrees and removes nothing —
   * provable no-ops, exactly like the oracle's extra CTE rounds, so
   * skipping them cannot change the output or the hash (KCoreSpec
-  * proves exit ≡ full schedule). The check is one `count()` on the
-  * round's already-checkpointed frame. Peeling converges in at most
+  * proves exit ≡ full schedule). The check is the edge count, observed
+  * on the round's cut at no extra job. Peeling converges in at most
   * the degeneracy-ordering depth, which is ≪ node count on real
   * graphs (each round removes EVERY sub-k node simultaneously) — and
   * with the exit free, a generous round budget costs nothing when
@@ -41,35 +41,22 @@ object KCore {
     * object scaladoc for the hash-preservation argument). `deg` is
     * the node's degree WITHIN the core (≥ k at fixpoint);
     * `earlyExit = false` forces the full schedule (KCoreSpec's
-    * equivalence baseline; keeps the cheaper every-other-round
-    * checkpoint cadence of the pre-exit form). */
+    * equivalence baseline). */
   def run(edges: DataFrame, k: Int, rounds: Int,
           earlyExit: Boolean = true): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    var e = edges.select(col("src"), col("dst"))
-    var prev = -1L
-    var i = 1
-    var fixed = false
-    while (i <= rounds && !fixed) {
+    // unchanged edge count ⇔ zero removals (the set only shrinks)
+    val stop = Fixpoint.Observed(count(lit(1)),
+      (prev, m) => prev.contains(m) || m == 0L)
+    Fixpoint.run(edges.select(col("src"), col("dst")), rounds, cutEvery = 1,
+        stop = Option.when(earlyExit)(stop)) { (e, _) =>
       val alive = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("node"))
-      e = e.join(alive.select(col("node").as("src")), Seq("src"))
+      e.join(alive.select(col("node").as("src")), Seq("src"))
         .join(alive.select(col("node").as("dst")), Seq("dst"))
         .select(col("src"), col("dst"))
-      if (earlyExit) {
-        // checkpoint EVERY round so the exit check is a cheap count
-        // on a materialized frame (the LouvainDist cadence)
-        e = e.localCheckpoint()
-        if (i < rounds) {
-          val m = e.count()
-          if (m == prev || m == 0L) fixed = true
-          prev = m
-        }
-      } else if (i % 2 == 0 && i < rounds) e = e.localCheckpoint()
-      i += 1
-    }
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    }.state.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
   }
 
   /** Peeling trajectory: one row per round — (round, n_nodes,
@@ -78,12 +65,13 @@ object KCore {
     * cascade collapses, and whether a stable core survives) and stays
     * meaningful on any graph — including near-uniform ones whose
     * k-core is all-or-nothing, where the final-core shape alone would
-    * read as trivially full or trivially empty. Each round is
-    * `localCheckpoint`ed (caps lineage depth at one round), then both
-    * counts come from ONE combined aggregate over the checkpointed
-    * edge set (round-11: was distinct().count() + count() — two full
-    * jobs; the fold halves the per-round action overhead on the
-    * SHRINKING edge set). `n_edges` counts undirected edges
+    * read as trivially full or trivially empty. Each round is cut
+    * (caps lineage depth at one round), then both counts come from ONE
+    * combined aggregate over the cut edge set (round-11: was
+    * distinct().count() + count() — two full jobs). That aggregate is
+    * also the stop rule: its `count_distinct` is rejected by
+    * `Dataset.observe`, and its row is the output, so it stays an
+    * action of its own. `n_edges` counts undirected edges
     * (directed/2).
     *
     * Fixpoint early-exit, trajectory-shaped (round-14): the output
@@ -95,8 +83,8 @@ object KCore {
     * the flat tail the oracle's no-op CTE rounds produce — at the
     * cost of only the pre-fixpoint rounds. */
   def profile(edges: DataFrame, k: Long, rounds: Int): DataFrame =
-    profileCanonical(edges.filter(col("src") < col("dst"))
-      .select(col("src").as("a"), col("dst").as("b")).localCheckpoint(),
+    profileCanonical(Fixpoint.cut(edges.filter(col("src") < col("dst"))
+      .select(col("src").as("a"), col("dst").as("b"))),
       k, rounds)
 
   /** [[profile]] over the CANONICAL pair frame `(a, b)`, a < b — the
@@ -113,30 +101,33 @@ object KCore {
     require(k >= 1 && rounds >= 1)
     val spark = pairs0.sparkSession
     import spark.implicits._
-    var p = pairs0.select(col("a"), col("b"))
+    val counts = Seq.newBuilder[(Long, Long)] // (n_nodes, directed edges)
     var prev = -1L
-    var fixed = false
-    var last = (0L, 0L)
-    val rows = (1 to rounds).map { i =>
-      if (!fixed) {
-        val alive = p.select(col("a").as("node"))
-          .unionByName(p.select(col("b").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k).select(col("node"))
-        p = p.join(alive.select(col("node").as("a")), Seq("a"))
-          .join(alive.select(col("node").as("b")), Seq("b"))
-          .select(col("a"), col("b"))
-          .localCheckpoint()
-        val c = p.select(explode(array(col("a"), col("b"))).as("node"))
-          .agg(count_distinct(col("node")).as("n"), count(lit(1)).as("m"))
-          .head()
-        if (c.getLong(1) == prev || c.getLong(1) == 0L) fixed = true
-        prev = c.getLong(1)
-        last = (c.getLong(0), c.getLong(1) / 2)
-      }
-      (i.toLong, last._1, last._2)
+    val stop = Fixpoint.Checked { (_, p, _) =>
+      val c = p.select(explode(array(col("a"), col("b"))).as("node"))
+        .agg(count_distinct(col("node")).as("n"), count(lit(1)).as("m"))
+        .head()
+      counts += ((c.getLong(0), c.getLong(1)))
+      val fixed = c.getLong(1) == prev || c.getLong(1) == 0L
+      prev = c.getLong(1)
+      fixed
     }
-    rows.toDF("round", "n_nodes", "n_edges")
+    Fixpoint.run(pairs0.select(col("a"), col("b")), rounds, cutEvery = 1,
+        stop = Some(stop)) { (p, _) =>
+      val alive = p.select(col("a").as("node"))
+        .unionByName(p.select(col("b").as("node")))
+        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= k).select(col("node"))
+      p.join(alive.select(col("node").as("a")), Seq("a"))
+        .join(alive.select(col("node").as("b")), Seq("b"))
+        .select(col("a"), col("b"))
+    }
+    // rounds after the fixpoint repeat the last counts (see above)
+    val ran = counts.result()
+    (1 to rounds).map { i =>
+      val (n, m) = ran(math.min(i, ran.size) - 1)
+      (i.toLong, n, m / 2)
+    }.toDF("round", "n_nodes", "n_edges")
   }
 
   /** Chained-CTE oracle suffix replaying the identical `rounds` peels.

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** k-truss decomposition by synchronous edge peeling (Cohen 2008,
   * "Trusses: cohesive subgraphs for social network analysis"): the
@@ -18,9 +19,8 @@ import org.apache.spark.sql.functions._
   * oracle replays the FULL schedule as chained CTEs whose extra
   * rounds are equally no-op, so the hash is preserved; KTrussSpec
   * proves exit ≡ full schedule on random graphs and the bench graph.
-  * The exit check is one `count()` on a frame the per-round
-  * `localCheckpoint` already materialized — far cheaper than the
-  * wedge-join round it saves — which makes a GENEROUS round budget
+  * The exit check is the edge count, observed on the per-round cut at
+  * no extra job ([[Fixpoint]]), which makes a GENEROUS round budget
   * free: a 100× graph that needs more pre-fixpoint rounds simply
   * uses them, while the common case stops as soon as the peel dries).
   *
@@ -69,25 +69,16 @@ object KTruss {
   def run(und: DataFrame, k: Int, rounds: Int,
           earlyExit: Boolean = true): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var e = und.select(col("ka"), col("kb"))
-    var prev = -1L // edge count after the previous round
-    var r = 0
-    var fixed = false
-    while (r < rounds && !fixed) {
-      e = e.join(support(e), Seq("ka", "kb"), "left")
+    // unchanged edge count ⇔ zero removals (the set only shrinks);
+    // empty is trivially stable too
+    val stop = Fixpoint.Observed(count(lit(1)),
+      (prev, n) => prev.contains(n) || n == 0L)
+    val e = Fixpoint.run(und.select(col("ka"), col("kb")), rounds, cutEvery = 1,
+        stop = Option.when(earlyExit)(stop)) { (e, _) =>
+      e.join(support(e), Seq("ka", "kb"), "left")
         .filter(coalesce(col("support"), lit(0L)) >= k - 2)
         .select(col("ka"), col("kb"))
-        .localCheckpoint()
-      if (earlyExit && r + 1 < rounds) {
-        // unchanged count ⇔ zero removals (the set only shrinks);
-        // empty is trivially stable too — the checkpoint makes this a
-        // metadata-cheap action
-        val n = e.count()
-        if (n == prev || n == 0L) fixed = true
-        prev = n
-      }
-      r += 1
-    }
+    }.state
     e.join(support(e), Seq("ka", "kb"), "left")
       .select(col("ka"), col("kb"),
         coalesce(col("support"), lit(0L)).as("support"))

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.{Fixpoint, LoopFrames}
 
 /** Synchronous label propagation (Raghavan et al. 2007) — the
   * near-linear community detector: every node starts as its own label
@@ -25,16 +26,15 @@ import org.apache.spark.sql.functions._
 object LabelProp {
 
   /** K rounds over symmetric `(src, dst)` edges; returns
-    * `(node, label)`. Lineage is checkpointed every other round (the
-    * PageRank depth-2 cadence — K chained joins would otherwise
-    * compound the plan). */
+    * `(node, label)`. The label frame is cut every other round
+    * ([[Fixpoint]]). */
   def run(edges: DataFrame, k: Int): DataFrame = {
     // loop constant keyed on the per-round join key (round-20): every
     // round equi-joins the edge table on src — shuffle+sort it once
-    val e = graft.operators.LoopFrames.keyed(edges, "src")
-    var labels = e.select(col("src").as("node")).distinct()
+    val e = LoopFrames.keyed(edges, "src")
+    val labels0 = e.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-    for (i <- 1 to k) {
+    Fixpoint.run(labels0, k, cutEvery = 2) { (labels, _) =>
       // merge hint at the JOIN site (not baked into the keyed frame) —
       // see LoopFrames.keyed's scaladoc
       val cnt = e.hint("merge")
@@ -46,12 +46,10 @@ object LabelProp {
       // equivalent to the oracle's row_number ordering — (c, label)
       // pairs are distinct per node, so the max is unique — without
       // the per-round node-partitioned sort the window needed
-      labels = cnt.groupBy(col("node"))
+      cnt.groupBy(col("node"))
         .agg(max_by(col("label"), struct(col("c"), negate(col("label"))))
           .as("label"))
-      if (i % 2 == 0) labels = labels.localCheckpoint()
-    }
-    labels
+    }.state
   }
 
   /** Chained-CTE replay of [[run]] for a DuckDB oracle: expects an

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 import graft.text.TextOps
 
 /** Landmark (multi-source) BFS distances — the scalable form of
@@ -30,25 +31,21 @@ object Landmarks {
   /** The shared K-round min-plus BFS frame: `(l, node, dist)` for
     * every (landmark, reached node) pair within K hops. */
   private def distances(edges: DataFrame, nLandmarks: Int, k: Int): DataFrame = {
-    val nodes = edges.select(col("src").as("node")).distinct()
-      .localCheckpoint()
+    val nodes = Fixpoint.cut(edges.select(col("src").as("node")).distinct())
     val h = TextOps.hash60(col("node").cast("string"))
     val landmarks = nodes.orderBy(h, col("node")).limit(nLandmarks)
       .select(col("node").as("l"))
-    val edges2 = edges.select(col("src"), col("dst"), lit(1L).as("w"))
+    val edges2 = Fixpoint.cut(edges.select(col("src"), col("dst"), lit(1L).as("w"))
       .unionByName(nodes.select(col("node").as("src"),
-        col("node").as("dst"), lit(0L).as("w")))
-      .localCheckpoint()
-    var d = landmarks.select(col("l"), col("l").as("node"),
+        col("node").as("dst"), lit(0L).as("w"))))
+    val d0 = landmarks.select(col("l"), col("l").as("node"),
       lit(0L).as("dist"))
-    for (i <- 1 to k) {
-      d = d.join(edges2, d("node") === edges2("src"))
+    Fixpoint.run(d0, k, cutEvery = 2) { (d, _) =>
+      d.join(edges2, d("node") === edges2("src"))
         .groupBy(col("l"), col("dst").as("node2"))
         .agg(min(col("dist") + col("w")).as("dist"))
         .withColumnRenamed("node2", "node")
-      if (i % 2 == 0) d = d.localCheckpoint()
-    }
-    d
+    }.state
   }
 
   /** `(node, n_reach, harmonic)` for every node: over landmarks at

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** Fully-distributed Louvain community detection (Blondel et al. 2008),
   * the multi-level modularity-greedy analogue of the driver-side sweep
@@ -84,8 +85,8 @@ object LouvainDist {
 
   /** Multi-level run. Returns `(node, c)` over the ORIGINAL node set,
     * with raw (non-dense) community ids = representative node ids.
-    * Lineage is localCheckpointed every other round (the PageRank
-    * depth-2 cadence).
+    * The community frame is cut at the end of every parity pair
+    * ([[Fixpoint]], every other round).
     *
     * HASH-PRESERVING fixpoint early-exit (round-13): the schedule runs
     * rounds in parity PAIRS (even nodes may move, then odd nodes). A
@@ -98,9 +99,10 @@ object LouvainDist {
     * oracle's extra CTE rounds are equally no-op. `earlyExit = false`
     * forces the full fixed schedule (LouvainDistSpec proves both paths
     * produce the identical assignment). The check itself is one tiny
-    * join over the ~node-count frames, both already materialized by
-    * the checkpoint cadence — far cheaper than the edge-join round it
-    * saves. */
+    * join over the ~node-count frames, both already cut — far cheaper
+    * than the edge-join round it saves. It runs as its own action: the
+    * pair-start state it compares against is not in the cut frame, so
+    * `Dataset.observe` cannot fold it into the cut. */
   def run(edges: DataFrame, roundsPerLevel: Int, levels: Int,
           earlyExit: Boolean = true): DataFrame = {
     // one tiny eager aggregate instead of a per-round broadcast join:
@@ -111,8 +113,7 @@ object LouvainDist {
     // Loop-constant note (round-20): LoopFrames.keyed on levelEdges was
     // measured a regression at gate scale (bench m6b 5.65→6.89 — the
     // PageRank finding, see PageRank.run), so the level-1 edge frame
-    // rides the caller's materialization and contraction keeps
-    // localCheckpoint.
+    // rides the caller's materialization and contraction keeps the cut.
     var levelEdges = edges
     // Level degree: at level 1 from the edge list; after contraction the
     // coarse node's degree is the SUM OF MEMBER DEGREES (not the coarse
@@ -120,44 +121,35 @@ object LouvainDist {
     // the dropped self-loops carried).
     var deg = edges.groupBy(col("src").as("node")).agg(sum("w").as("d"))
     var assign: DataFrame = null // original node -> current community
+    // whole pair unchanged ⇒ fixpoint (see scaladoc); the previous cut
+    // is the state that entered the pair
+    val stop = Fixpoint.Checked { (pairStart, comm, round) =>
+      round < roundsPerLevel && comm.join(
+          pairStart.select(col("node"), col("c").as("pc")), "node")
+        .filter(col("c") =!= col("pc")).isEmpty
+    }
     for (level <- 1 to levels) {
-      var comm = deg.select(col("node"), col("node").as("c"), col("d"))
-      // the initial comm is read once per pair by the fixpoint check and
-      // up to twice by moveRound — materialize it like the pair ends
-      if (earlyExit) comm = comm.localCheckpoint()
-      var r = 0
-      var fixed = false
-      var pairStart = comm // state entering the current parity pair
-      while (r < roundsPerLevel && !fixed) {
-        if (r % 2 == 0) pairStart = comm
-        comm = moveRound(levelEdges, comm, m2, r % 2)
-        if (r % 2 == 1) {
-          comm = comm.localCheckpoint()
-          if (earlyExit && r + 1 < roundsPerLevel) {
-            // whole pair unchanged ⇒ fixpoint (see scaladoc) — both
-            // frames are checkpointed ~node-count tables, so this join
-            // is trivial
-            fixed = comm.join(
-                pairStart.select(col("node"), col("c").as("pc")), "node")
-              .filter(col("c") =!= col("pc")).isEmpty
-          }
-        }
-        r += 1
-      }
+      // the initial comm is read up to twice by moveRound and once by
+      // the fixpoint check — materialize it like the pair ends
+      val comm0 = Fixpoint.cut(
+        deg.select(col("node"), col("node").as("c"), col("d")))
+      val comm = Fixpoint.run(comm0, roundsPerLevel, cutEvery = 2,
+          stop = Option.when(earlyExit)(stop)) { (comm, round) =>
+        moveRound(levelEdges, comm, m2, (round - 1) % 2)
+      }.state
       assign =
         if (level == 1) comm.select("node", "c")
         else assign.join(
           comm.select(col("node").as("c"), col("c").as("c2")), "c")
           .select(col("node"), col("c2").as("c"))
-      assign = assign.localCheckpoint()
+      assign = Fixpoint.cut(assign)
       if (level < levels) {
         val a = comm.select(col("node").as("src"), col("c").as("ca"))
         val b = comm.select(col("node").as("dst"), col("c").as("cb"))
-        levelEdges = levelEdges.join(a, "src").join(b, "dst")
+        levelEdges = Fixpoint.cut(levelEdges.join(a, "src").join(b, "dst")
           .filter(col("ca") =!= col("cb"))
           .groupBy(col("ca").as("src"), col("cb").as("dst"))
-          .agg(sum("w").as("w"))
-          .localCheckpoint()
+          .agg(sum("w").as("w")))
         deg = comm.groupBy(col("c").as("node")).agg(sum("d").as("d"))
       }
     }

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** Weighted PageRank with a FIXED iteration count — the iterative
   * graph-centrality op (Brin & Page 1998) in its oracle-expressible
@@ -13,9 +14,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: the edge list is normalized once (out-weight join,
   * checkpointed); each round shuffles edge-count rows for the
   * contribution aggregate and node-count rows for the rank update —
-  * PageRank's canonical Pregel cost — and the rank frame is
-  * localCheckpoint'ed per round (the Bpe reuse idiom: without it every
-  * round re-executes the whole prefix). The node count enters as a
+  * PageRank's canonical Pregel cost — and the rank frame runs through
+  * [[graft.operators.Fixpoint]], cut every other round and on the last.
+  * The node count enters as a
   * broadcast 1-row aggregate (the J4 scalar idiom — no driver
   * round-trip). No dangling-mass term: callers feed symmetric
   * (both-direction) edge lists, where every node has out-edges.
@@ -51,11 +52,10 @@ object PageRank {
     // per-round InMemoryTableScan setup costs more. Kept on the
     // localCheckpoint form here; LabelProp/HyperAnf/Components measured
     // neutral-to-better and keep the keyed form. See OPTIMIZATION_r20.md.
-    val norm = edges.join(outw, "src")
-      .select($"src", $"dst", ($"w" / $"outw").as("wn"))
-      .localCheckpoint()
-    val nodes = edges.select($"src".as("node")).distinct()
-      .localCheckpoint() // symmetric edges: src set IS the node set
+    val norm = Fixpoint.cut(edges.join(outw, "src")
+      .select($"src", $"dst", ($"w" / $"outw").as("wn")))
+    // symmetric edges: src set IS the node set
+    val nodes = Fixpoint.cut(edges.select($"src".as("node")).distinct())
     val nn = nodes.agg(count(lit(1)).as("n"))
     // restart term (1−d)/n materialized ONCE per node (round-21, the
     // runPersonalized fix applied here too): the loop previously
@@ -64,26 +64,18 @@ object PageRank {
     // (1−d)/n is the same double computed once or per round, and the
     // update `r0 + d·coalesce(c, 0)` adds in the identical order, so
     // results are bit-identical.
-    val restart = nodes.crossJoin(broadcast(nn))
+    val restart = Fixpoint.cut(nodes.crossJoin(broadcast(nn))
       .select($"node", (lit(1.0) / $"n").as("pr0"),
-        (lit(1.0 - damping) / $"n").as("r0"))
-      .localCheckpoint()
-    var pr = restart.select($"node", $"pr0".as("pr"))
-    (1 to k).foreach { i =>
+        (lit(1.0 - damping) / $"n").as("r0")))
+    val pr0 = restart.select($"node", $"pr0".as("pr"))
+    Fixpoint.run(pr0, k, cutEvery = 2, cutLast = true) { (pr, _) =>
       val contrib = norm.join(pr.withColumnRenamed("node", "src"), "src")
         .groupBy($"dst".as("node"))
         .agg(sum($"pr" * $"wn").as("c"))
-      pr = restart.join(contrib, Seq("node"), "left")
+      restart.join(contrib, Seq("node"), "left")
         .select($"node",
           ($"r0" + lit(damping) * coalesce($"c", lit(0.0))).as("pr"))
-      // checkpoint every OTHER round (and the last): each round is used
-      // once by the next, so a depth-2 lineage stays linear while
-      // halving the eager materializations that dominate small-graph
-      // wall time; at cluster scale the cadence trades job-launch
-      // overhead against recompute depth, not correctness
-      if (i % 2 == 0 || i == k) pr = pr.localCheckpoint()
-    }
-    pr
+    }.state
   }
 
   /** DuckDB CTE chain replaying [[run]] on an `edges(src, dst, w)` CTE
@@ -127,13 +119,11 @@ object PageRank {
     val spark = edges.sparkSession
     import spark.implicits._
     val outw = edges.groupBy($"src").agg(sum($"w").as("outw"))
-    // localCheckpoint, not LoopFrames.keyed — see the measured note in
+    // a cut, not LoopFrames.keyed — see the measured note in
     // [[run]]
-    val norm = edges.join(outw, "src")
-      .select($"src", $"dst", ($"w" / $"outw").as("wn"))
-      .localCheckpoint()
-    val nodes = edges.select($"src".as("node")).distinct()
-      .localCheckpoint()
+    val norm = Fixpoint.cut(edges.join(outw, "src")
+      .select($"src", $"dst", ($"w" / $"outw").as("wn")))
+    val nodes = Fixpoint.cut(edges.select($"src".as("node")).distinct())
     val seedF = seeds.select($"node").distinct()
       .withColumn("is_seed", lit(1.0))
     val ns = seedF.agg(count(lit(1)).as("ns"))
@@ -146,22 +136,19 @@ object PageRank {
     // driver record — the rebuild cost is scheduling, which grows with
     // cores, not data). The node-sized frame is checkpointed once and
     // every round reads it.
-    val restart = nodes.join(broadcast(seedF), Seq("node"), "left")
+    val restart = Fixpoint.cut(nodes.join(broadcast(seedF), Seq("node"), "left")
       .crossJoin(broadcast(ns))
-      .select($"node", (coalesce($"is_seed", lit(0.0)) / $"ns").as("r0"))
-      .localCheckpoint()
-    var pr = restart.select($"node", $"r0".as("pr"))
-    (1 to k).foreach { i =>
+      .select($"node", (coalesce($"is_seed", lit(0.0)) / $"ns").as("r0")))
+    val pr0 = restart.select($"node", $"r0".as("pr"))
+    Fixpoint.run(pr0, k, cutEvery = 2, cutLast = true) { (pr, _) =>
       val contrib = norm.join(pr.withColumnRenamed("node", "src"), "src")
         .groupBy($"dst".as("node"))
         .agg(sum($"pr" * $"wn").as("c"))
-      pr = restart.join(contrib, Seq("node"), "left")
+      restart.join(contrib, Seq("node"), "left")
         .select($"node",
           (lit(1.0 - damping) * $"r0"
             + lit(damping) * coalesce($"c", lit(0.0))).as("pr"))
-      if (i % 2 == 0 || i == k) pr = pr.localCheckpoint()
-    }
-    pr
+    }.state
   }
 
   /** DuckDB CTE chain replaying [[runPersonalized]]; the caller

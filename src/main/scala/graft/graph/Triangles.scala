@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** Triangle enumeration over an undirected edge list in canonical
   * `ka < kb` form — count-probed hybrid of the two standard wedge
@@ -35,8 +36,8 @@ object Triangles {
   /** Triangle corner rows (a, b, c), a < b < c (id order — the output
     * contract is orientation-independent). */
   def enumerate(und: DataFrame): DataFrame = {
-    val e = und.select(col("ka"), col("kb"))
-      .localCheckpoint() // read by the probe + three join branches
+    // read by the probe + three join branches
+    val e = Fixpoint.cut(und.select(col("ka"), col("kb")))
     if (wedgeCount(e, byDegree = false) <= DirectWedgeCap) idOriented(e)
     else degreeOriented(e)
   }
@@ -54,8 +55,7 @@ object Triangles {
   /** Degree-oriented enumeration (see object doc): O(m^1.5) wedge
     * bound, same triangle set as [[idOriented]]. */
   private[graft] def degreeOriented(e: DataFrame): DataFrame = {
-    val o = orientByDegree(e)
-      .localCheckpoint() // read by both wedge branches + the closer
+    val o = Fixpoint.cut(orientByDegree(e)) // read by both wedge branches + the closer
     o.as("e1")
       .join(o.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.dkey") < col("e2.dkey"))

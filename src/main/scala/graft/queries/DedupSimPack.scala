@@ -8,6 +8,7 @@ import graft.queries.Rx.{r4, r6}
 import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.text.TextOps
+import graft.operators.Fixpoint
 
 /** Near-dedup + similarity search (BASELINE.json scale extensions).
   * Every operator here is the scale-path variant: LSH banding, blocked
@@ -217,9 +218,9 @@ object DedupSimPack extends QueryPack {
           .withColumn("t", lit(1L))
         val c2 = Dedup.lshCandidates(sigs2, Bands, RowsPerBand)
           .withColumn("t", lit(2L))
-        val cands = c1.unionByName(c2)
-          .groupBy($"id_a", $"id_b").agg(sum($"t").as("tables_hit"))
-          .localCheckpoint() // candidate build feeds verify + final join
+        // candidate build feeds verify + final join
+        val cands = Fixpoint.cut(c1.unionByName(c2)
+          .groupBy($"id_a", $"id_b").agg(sum($"t").as("tables_hit")))
         Dedup.verifyJaccard(cands.select($"id_a", $"id_b"), sh,
             sigs.select($"id", $"n_sh"))
           .join(cands, Seq("id_a", "id_b"))
@@ -342,9 +343,9 @@ object DedupSimPack extends QueryPack {
           Dedup.lshCandidates(sigsI, 2 * Bands, 2)
             .withColumn("t", lit(1L << i))
         }
-        val cands = perFam.reduce(_ unionByName _)
-          .groupBy($"id_a", $"id_b").agg(sum($"t").as("families_hit"))
-          .localCheckpoint() // candidate build feeds verify + final join
+        // candidate build feeds verify + final join
+        val cands = Fixpoint.cut(perFam.reduce(_ unionByName _)
+          .groupBy($"id_a", $"id_b").agg(sum($"t").as("families_hit")))
         Dedup.verifyJaccard(cands.select($"id_a", $"id_b"), sh,
             sigs.select($"id", $"n_sh"))
           .join(cands, Seq("id_a", "id_b"))
@@ -426,22 +427,20 @@ object DedupSimPack extends QueryPack {
         val (sh, sigs) = shingleSigs(s, dir)
         val nFam = Dedup.familiesForRecall(target = 0.9, s0 = 0.5,
           r = 2, b = 2 * Bands)
-        val cands = (0 until nFam).map { i =>
+        val cands = Fixpoint.cut((0 until nFam).map { i =>
           val sigsI = if (i == 0) sigs
             else Dedup.minhashSignatures(sh, NumPerm, permOffset = i * NumPerm)
           Dedup.lshCandidates(sigsI, 2 * Bands, 2)
-        }.reduce(_ unionByName _).distinct()
-          .localCheckpoint() // candidate build feeds verify twice (d21/d23 idiom)
-        val edges = Dedup.verifyJaccard(cands, sh,
+        }.reduce(_ unionByName _).distinct()) // candidate build feeds verify twice (d21/d23 idiom)
+        val edges = Fixpoint.cut(Dedup.verifyJaccard(cands, sh,
             sigs.select($"id", $"n_sh"))
           .filter($"jaccard" >= 0.5)
-          .select($"id_a", $"id_b")
+          .select($"id_a", $"id_b"))
           // components() references edges twice (a↔b symmetrization) and
           // probes + collects it — without a cut, each of those actions
           // re-executes the two-family union + verify DAG (measured at
           // sf0.01: 59s cold / 10.2s warm; checkpointed: see
           // OPTIMIZATION_r20.md).
-          .localCheckpoint()
         val drop = Dedup.components(edges)
           .filter($"id" =!= $"cluster").select($"id".as("doc_id"))
         Tables.documents(s, dir).select($"doc_id", $"lang", $"source")
@@ -1241,9 +1240,8 @@ object DedupSimPack extends QueryPack {
         // them 3× per element (the t14 CollapseProject hazard: an
         // inlined split() re-evaluates per lambda reference — measured
         // 18s vs 5s at sf0.1 on this very query before the barrier)
-        val toks = Tables.documents(s, dir)
-          .select($"doc_id", TextOps.tokens($"text").as("ts"))
-          .localCheckpoint()
+        val toks = Fixpoint.cut(Tables.documents(s, dir)
+          .select($"doc_id", TextOps.tokens($"text").as("ts")))
         // compiled gram kernel (round-21): the transform(sequence,
         // …md5…) HOF walked an interpreted tree per position — GramHash
         val grams = toks
@@ -1253,14 +1251,13 @@ object DedupSimPack extends QueryPack {
         // checkpointed: the df-band filter and BOTH self-join sides
         // read it — without the barrier the whole token→chunk pipeline
         // would re-run ×4
-        val chunks = grams
+        val chunks = Fixpoint.cut(grams
           .withColumn("chunk_no", sum(
             when($"gh" % 8 === 0 || $"pos" === 1, 1L).otherwise(0L)).over(w))
           .groupBy($"doc_id", $"chunk_no")
           .agg(md5(array_join(transform(
             array_sort(collect_list(struct($"pos", $"gh".as("g")))),
-            x => x("g").cast("string")), ",")).as("fp"))
-          .localCheckpoint()
+            x => x("g").cast("string")), ",")).as("fp")))
         val banded = chunks.join(
           chunks.groupBy($"fp").agg(countDistinct($"doc_id").as("ndocs"))
             .filter($"ndocs".between(2, 10)).select($"fp"), "fp")
@@ -2023,10 +2020,9 @@ object DedupSimPack extends QueryPack {
         // ≤ 7 rows, but its LINEAGE is the whole round-1 retrieval —
         // every broadcast of the query table would re-run BM25 pass 1
         // (27 shuffles unpinned vs 10 pinned, the d11 lesson)
-        val expanded = cand.select($"term")
+        val expanded = Fixpoint.cut(cand.select($"term")
           .unionByName(q0.toDF("term"))
-          .select(lit(0L).as("query_id"), $"term")
-          .localCheckpoint()
+          .select(lit(0L).as("query_id"), $"term"))
         graft.text.Bm25.topKBatch(docs, "doc_id", "text", expanded,
             "query_id", "term", k = 10)
           .select($"doc_id", $"n_terms", $"score", $"rank")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.queries.Rx.{r4, r6}
+import graft.operators.Fixpoint
 
 /** Event-analytics pack (beyond-reference completeness): the
   * product-analytics operators a clickstream/event warehouse runs daily —
@@ -973,8 +974,8 @@ object EventAnalyticsPack extends QueryPack {
           .groupBy($"user_id")
           .agg(max(($"event_type" === "purchase").cast("long")).as("conv"))
           .select(($"user_id" % 2).as("cohort"), $"conv")
-        val cells = u.groupBy($"cohort", $"conv")
-          .agg(count(lit(1)).as("o")).localCheckpoint()
+        val cells = Fixpoint.cut(u.groupBy($"cohort", $"conv")
+          .agg(count(lit(1)).as("o")))
         val tot = cells.agg(sum($"o").as("n"))
         val rowt = cells.groupBy($"cohort").agg(sum($"o").as("rt"))
         val colt = cells.groupBy($"conv").agg(sum($"o").as("ct"))
@@ -1048,10 +1049,9 @@ object EventAnalyticsPack extends QueryPack {
               .otherwise(($"tlast" - $"t0") / lit(DayUs))
               .cast("long").as("day"),
             $"tconv".isNotNull.cast("long").as("died"))
-        val byDay = durs.groupBy($"day").agg(
+        val byDay = Fixpoint.cut(durs.groupBy($"day").agg(
             sum($"died").as("n_conv"),
-            sum(lit(1L) - $"died").as("n_cens"))
-          .localCheckpoint()
+            sum(lit(1L) - $"died").as("n_cens")))
         // the life-table window below is unpartitioned by design (KM
         // survival is a global cumulative product over days at risk);
         // its input is one row per calendar DAY, bounded by the

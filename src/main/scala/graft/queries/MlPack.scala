@@ -7,6 +7,7 @@ import graft.io.{PersistRegistry, Stage, Tables}
 import graft.analytics.Analytics
 import graft.cluster.Clustering
 import graft.queries.Rx.{r4, r6}
+import graft.operators.Fixpoint
 
 /** Clustering / ML tier (SURVEY §2.10 M1-M8, §2.3 J6).
   *
@@ -146,8 +147,7 @@ object MlPack extends QueryPack {
   private def triPerNode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graphStage.memo(s, dir, ":tri") {
-      graft.graph.Triangles.perNode(corrGraph(s, dir).select($"ka", $"kb"))
-        .localCheckpoint()
+      Fixpoint.cut(graft.graph.Triangles.perNode(corrGraph(s, dir).select($"ka", $"kb")))
     }
   }
 
@@ -484,7 +484,7 @@ object MlPack extends QueryPack {
         // one materialization of the feature pipeline: the ε-tune scans
         // below AND DistributedDbscan's internal scans all read the
         // checkpointed blocks instead of re-running the window/agg chain
-        val feats = dbscanFeatures(s, dir).localCheckpoint()
+        val feats = Fixpoint.cut(dbscanFeatures(s, dir))
         // bounded ε-tune: ≤4096 sampled query points against the full
         // set (bit-identical to the collect-everything knee below the
         // cap, so the DuckDB oracle is unaffected at test scale)
@@ -874,12 +874,11 @@ object MlPack extends QueryPack {
         // inside KCore.profileCanonical — carries HALF the rows the
         // symmetrized edge list did (1.2 M vs 2.4 M at sf0.1).
         // Degrees are identical: deg(v) = |{v=a}| + |{v=b}|.
-        val pairs = li.as("a").join(li.as("b"),
+        val pairs = Fixpoint.cut(li.as("a").join(li.as("b"),
             $"a.l_orderkey" === $"b.l_orderkey" &&
               $"a.l_partkey" < $"b.l_partkey")
           .select($"a.l_partkey".as("a"), $"b.l_partkey".as("b"))
-          .distinct()
-          .localCheckpoint() // the quantile + 5 peel rounds re-read it
+          .distinct()) // the quantile + 5 peel rounds re-read it
         val k = pairs.select($"a".as("node"))
           .unionByName(pairs.select($"b".as("node")))
           .groupBy($"node").agg(count(lit(1)).as("deg"))

@@ -7,6 +7,7 @@ import graft.quality.DataQuality
 import graft.queries.Rx.{r4, r6}
 import graft.sketch.CountMin
 import graft.text.TextOps
+import graft.operators.Fixpoint
 
 /** Pipeline-operations pack (beyond-reference, 100 TB completeness):
   * the maintenance operators a production lakehouse runs around the
@@ -490,9 +491,8 @@ object PipelinePack extends QueryPack {
     Q("g21_user_entropy",
       (s, dir) => {
         import s.implicits._
-        val c = Tables.events(s, dir)
-          .groupBy($"user_id", $"event_type").agg(count(lit(1)).as("c"))
-          .localCheckpoint()
+        val c = Fixpoint.cut(Tables.events(s, dir)
+          .groupBy($"user_id", $"event_type").agg(count(lit(1)).as("c")))
         val n = c.groupBy($"user_id").agg(sum($"c").as("n"))
         c.join(broadcast(n), "user_id")
           .select($"user_id", $"n",
@@ -661,11 +661,10 @@ object PipelinePack extends QueryPack {
         import s.implicits._
         val e = Tables.events(s, dir).select($"event_type".as("x"), $"value")
         val st = e.agg(min($"value").as("vmin"), max($"value").as("vmax"))
-        val joint = e.crossJoin(broadcast(st))
+        val joint = Fixpoint.cut(e.crossJoin(broadcast(st))
           .select($"x", least(floor(($"value" - $"vmin")
               / (($"vmax" - $"vmin") / lit(8))), lit(7L)).cast("int").as("y"))
-          .groupBy($"x", $"y").agg(count(lit(1)).as("n_xy"))
-          .localCheckpoint()
+          .groupBy($"x", $"y").agg(count(lit(1)).as("n_xy")))
         val nx = joint.groupBy($"x").agg(sum($"n_xy").as("n_x"))
         val ny = joint.groupBy($"y").agg(sum($"n_xy").as("n_y"))
         val tot = joint.agg(sum($"n_xy").as("n"))
@@ -734,14 +733,13 @@ object PipelinePack extends QueryPack {
           .select(unix_micros($"ts").as("t"), $"value")
         val st = e.filter($"t" < cut)
           .agg(min($"value").as("vmin"), max($"value").as("vmax"))
-        val cnt = e.crossJoin(broadcast(st))
+        val cnt = Fixpoint.cut(e.crossJoin(broadcast(st))
           .select(least(greatest(floor(($"value" - $"vmin")
               / (($"vmax" - $"vmin") / lit(10))), lit(0L)), lit(9L))
             .as("bin"), ($"t" < cut).as("is_ref"))
           .groupBy($"bin")
           .agg(sum(when($"is_ref", 1L).otherwise(0L)).as("n_ref"),
-            sum(when(!$"is_ref", 1L).otherwise(0L)).as("n_cur"))
-          .localCheckpoint()
+            sum(when(!$"is_ref", 1L).otherwise(0L)).as("n_cur")))
         val tot = cnt.agg(sum($"n_ref").as("t_ref"),
           sum($"n_cur").as("t_cur"))
         val contrib = cnt.crossJoin(broadcast(tot))

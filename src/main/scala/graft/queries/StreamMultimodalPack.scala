@@ -7,6 +7,7 @@ import graft.multimodal.Multimodal
 import graft.queries.Rx.r6
 import graft.sim.Similarity
 import graft.streaming.StreamOps
+import graft.operators.Fixpoint
 
 /** Streaming + multimodal tier (SURVEY §2.9; BASELINE.json multimodal
   * extension). Every streaming query executes a REAL Structured Streaming
@@ -597,15 +598,14 @@ object StreamMultimodalPack extends QueryPack {
         // signatures, agg shingle sets — collapses to one aggregate
         // and one checkpoint; band keys are the same md5 composition
         // Dedup.bandIndex derives from the sig array)
-        val aggd = Dedup.shingleRows(docs, "doc_id", "text", 3)
+        val aggd = Fixpoint.cut(Dedup.shingleRows(docs, "doc_id", "text", 3)
           .withColumn("h30",
             pmod(graft.text.TextOps.hash60($"sh"), lit(1073741824L)))
           .groupBy($"id")
           .agg(collect_set($"sh").as("shs_c"),
             (0 until 16).map(i =>
               min(($"h30" * Dedup.permA(i) + Dedup.permB(i)) % p)
-                .as(s"__s$i")): _*)
-          .localCheckpoint()
+                .as(s"__s$i")): _*))
         val index = aggd.select($"id".as("corpus_id"),
           posexplode(array((0 until 4).map(b =>
             md5(concat_ws(",", (0 until 4).map(r =>
@@ -699,11 +699,10 @@ object StreamMultimodalPack extends QueryPack {
           .select($"vec_id", $"label",
             $"embedding".cast("array<double>").as("v"))
         val bits = Similarity.adaptiveBits(emb.count())
-        val index = Similarity.withNormalized(emb, "v", "nv")
+        val index = Fixpoint.cut(Similarity.withNormalized(emb, "v", "nv")
           .select($"vec_id".as("corpus_id"), $"label",
             Similarity.signBucket($"v", bits).as("probe"),
-            $"nv".as("nv_c"))
-          .localCheckpoint()
+            $"nv".as("nv_c")))
         val stream = Similarity.withNormalized(
             s.readStream.schema(Tables.embeddingsSchema)
               .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
@@ -798,15 +797,14 @@ object StreamMultimodalPack extends QueryPack {
         // groupBy(id)). Band keys replicate Dedup.bandIndex's md5
         // composition; the posexplode position namespaces the family
         // (band f·8+b), matching the streaming side's banding below.
-        val aggd = Dedup.shingleRows(docs, "doc_id", "text", 3)
+        val aggd = Fixpoint.cut(Dedup.shingleRows(docs, "doc_id", "text", 3)
           .withColumn("h30",
             pmod(graft.text.TextOps.hash60($"sh"), lit(1073741824L)))
           .groupBy($"id")
           .agg(collect_set($"sh").as("shs_c"),
             (0 until nFam * 16).map(i =>
               min(($"h30" * Dedup.permA(i) + Dedup.permB(i)) % p)
-                .as(s"__s$i")): _*)
-          .localCheckpoint()
+                .as(s"__s$i")): _*))
         val index = aggd.select($"id".as("corpus_id"),
           posexplode(array((for (f <- 0 until nFam; b <- 0 until 8)
             yield md5(concat_ws(",",
@@ -931,10 +929,9 @@ object StreamMultimodalPack extends QueryPack {
           .as[StreamOps.BucketRow]
         val out = StreamOps.drainToTable(StreamOps.bucketCountStream(stream),
           "append", "st21")
-        val sk = out.groupBy($"bucket").agg(max($"c").as("cnt"))
+        val sk = Fixpoint.cut(out.groupBy($"bucket").agg(max($"c").as("cnt"))
           .select(($"bucket" / width).cast("int").as("j"),
-            pmod($"bucket", lit(width.toLong)).as("bucket"), $"cnt")
-          .localCheckpoint()
+            pmod($"bucket", lit(width.toLong)).as("bucket"), $"cnt"))
         val grams = Tables.documents(s, dir)
           .select(graft.text.TextOps.tokens($"text").as("__toks"))
           .select(explode(graft.text.TextOps.ngrams($"__toks", 2)).as("gram"))
@@ -991,8 +988,8 @@ object StreamMultimodalPack extends QueryPack {
         val out = StreamOps.drainToTable(StreamOps.bucketCountStream(stream),
           "append", "st20")
         val curCnt = out.groupBy($"bucket".as("bin")).agg(max($"c").as("n_cur"))
-        val cnt = refCnt.join(curCnt, Seq("bin"), "full_outer")
-          .na.fill(0L, Seq("n_ref", "n_cur")).localCheckpoint()
+        val cnt = Fixpoint.cut(refCnt.join(curCnt, Seq("bin"), "full_outer")
+          .na.fill(0L, Seq("n_ref", "n_cur")))
         val tot = cnt.agg(sum($"n_ref").as("t_ref"),
           sum($"n_cur").as("t_cur"))
         val contrib = cnt.crossJoin(broadcast(tot))
@@ -1523,9 +1520,9 @@ object StreamMultimodalPack extends QueryPack {
         import s.implicits._
         val payloads = Multimodal.asPayload(
           Tables.documents(s, dir), "doc_id", "text", "source")
-        val feats = Multimodal.extractFeatures(payloads)
-          .select($"id", $"meta.n_bytes".as("n_bytes"), $"features")
-          .localCheckpoint() // decode once: cells + assignment both read it
+        // decode once: cells + assignment both read it
+        val feats = Fixpoint.cut(Multimodal.extractFeatures(payloads)
+          .select($"id", $"meta.n_bytes".as("n_bytes"), $"features"))
         val cells = graft.sim.IvfPq.coarseCells(feats, "id", "features", 4)
         // round-21: compiled per-row argmin over the collapsed
         // broadcast cell row (the CellAssign treatment — removes the
@@ -1681,10 +1678,9 @@ object StreamMultimodalPack extends QueryPack {
     Q("mm5_dhash_neardup",
       (s, dir) => {
         import s.implicits._
-        val bands = Multimodal.dHashBands(
+        val bands = Fixpoint.cut(Multimodal.dHashBands(
             Multimodal.synthPpmGroupPayload(
-              Tables.documents(s, dir), "doc_id"))
-          .localCheckpoint() // decode once: band join + both hamming reads
+              Tables.documents(s, dir), "doc_id"))) // decode once: band join + both hamming reads
         graft.dedup.BandedLsh.hammingPairs(bands, bandBits = 16,
             maxHamming = 6)
           .select($"id_a", $"id_b", $"hamming",
@@ -1754,10 +1750,10 @@ object StreamMultimodalPack extends QueryPack {
               Tables.documents(s, dir), "doc_id"))
         // 4×16-bit packed row-pairs → 8×8-bit row bands: band 2k is
         // the even row (low byte), band 2k+1 the odd row (high byte)
-        val b8 = b16.select($"id",
+        // decode once: band join + both hamming reads
+        val b8 = Fixpoint.cut(b16.select($"id",
             flatten(transform($"bands", b =>
-              array(b.bitwiseAND(lit(255L)), shiftright(b, 8)))).as("bands"))
-          .localCheckpoint() // decode once: band join + both hamming reads
+              array(b.bitwiseAND(lit(255L)), shiftright(b, 8)))).as("bands")))
         graft.dedup.BandedLsh.hammingPairs(b8, bandBits = 8, maxHamming = 6)
           .select($"id_a", $"id_b", $"hamming",
             (($"id_a" - $"id_a" % 8) === ($"id_b" - $"id_b" % 8))
@@ -1955,10 +1951,10 @@ object StreamMultimodalPack extends QueryPack {
         val b16 = Multimodal.dHashBands(
             Multimodal.synthPpmStraddlePayload(
               Tables.documents(s, dir), "doc_id"))
-        val b8 = b16.select($"id",
+        // decode once: band join + both hamming reads
+        val b8 = Fixpoint.cut(b16.select($"id",
             flatten(transform($"bands", b =>
-              array(b.bitwiseAND(lit(255L)), shiftright(b, 8)))).as("bands"))
-          .localCheckpoint() // decode once: band join + both hamming reads
+              array(b.bitwiseAND(lit(255L)), shiftright(b, 8)))).as("bands")))
         graft.dedup.BandedLsh.hammingPairsTables(b8, bandBits = 8,
             maxHamming = 4, tables = 2)
           .select($"id_a", $"id_b", $"hamming",
@@ -2063,13 +2059,13 @@ object StreamMultimodalPack extends QueryPack {
               Tables.documents(s, dir), "doc_id"))
         // 4×16-bit packed row-pairs → 16×4-bit nibble bands, low
         // nibble first (band 4k+i = bits 4i..4i+3 of packed band k)
-        val b4 = b16.select($"id",
+        // decode once: band join + both hamming reads
+        val b4 = Fixpoint.cut(b16.select($"id",
             flatten(transform($"bands", b =>
               array(b.bitwiseAND(lit(15L)),
                 shiftright(b, 4).bitwiseAND(lit(15L)),
                 shiftright(b, 8).bitwiseAND(lit(15L)),
-                shiftright(b, 12).bitwiseAND(lit(15L))))).as("bands"))
-          .localCheckpoint() // decode once: band join + both hamming reads
+                shiftright(b, 12).bitwiseAND(lit(15L))))).as("bands")))
         graft.dedup.BandedLsh.hammingPairs(b4, bandBits = 4, maxHamming = 6)
           .select($"id_a", $"id_b", $"hamming",
             (($"id_a" - $"id_a" % 8) === ($"id_b" - $"id_b" % 8))
@@ -2658,10 +2654,9 @@ object StreamMultimodalPack extends QueryPack {
     Q("mm7_audio_neardup",
       (s, dir) => {
         import s.implicits._
-        val bands = Multimodal.audioFingerprintBands(
+        val bands = Fixpoint.cut(Multimodal.audioFingerprintBands(
             Multimodal.synthWavGroupPayload(
-              Tables.documents(s, dir), "doc_id"))
-          .localCheckpoint() // decode once: band join + both hamming reads
+              Tables.documents(s, dir), "doc_id"))) // decode once: band join + both hamming reads
         graft.dedup.BandedLsh.hammingPairs(bands, bandBits = 16,
             maxHamming = 4)
           .select($"id_a", $"id_b", $"hamming",

@@ -5,6 +5,7 @@ import graft.io.Tables
 import graft.queries.Rx.{r4, r6}
 import graft.text.TextOps
 import graft.dedup.Dedup
+import graft.operators.Fixpoint
 
 /** Text analysis + exact dedup over `documents` (BASELINE.json scale
   * extensions: language-ID, quality scoring, token counting,
@@ -774,10 +775,9 @@ object TextPack extends QueryPack {
     Q("t31_novelty",
       (s, dir) => {
         import s.implicits._
-        val dt = Tables.documents(s, dir)
+        val dt = Fixpoint.cut(Tables.documents(s, dir)
           .select($"doc_id", explode(TextOps.tokens($"text")).as("tok"))
-          .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("cdt"))
-          .localCheckpoint()
+          .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("cdt")))
         val ct = dt.groupBy($"tok").agg(sum($"cdt").as("ct"))
         val nd = dt.groupBy($"doc_id").agg(sum($"cdt").as("nd"))
         val n = dt.agg(sum($"cdt").as("n"))
@@ -889,11 +889,10 @@ object TextPack extends QueryPack {
     Q("t32_dsir_selection",
       (s, dir) => {
         import s.implicits._
-        val dt = Tables.documents(s, dir)
+        val dt = Fixpoint.cut(Tables.documents(s, dir)
           .select($"doc_id", $"lang",
             explode(TextOps.tokens($"text")).as("tok"))
-          .groupBy($"doc_id", $"lang", $"tok").agg(count(lit(1)).as("cdt"))
-          .localCheckpoint()
+          .groupBy($"doc_id", $"lang", $"tok").agg(count(lit(1)).as("cdt")))
         val src = dt.groupBy($"tok").agg(sum($"cdt").as("cs"))
         val tgt = dt.filter($"lang" === "en")
           .groupBy($"tok").agg(sum($"cdt").as("ct"))

@@ -4,6 +4,7 @@ import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** A fitted IVF coarse quantizer — the production lifecycle is build
   * the index ONCE, query it many times, so the model is a first-class
@@ -118,7 +119,7 @@ object IvfAnn {
                    queryPred: Column, k: Int, nCells: Int, nprobe: Int,
                    dims: Int, corpusPred: Option[Column] = None): DataFrame = {
     require(nprobe <= nCells, s"nprobe $nprobe exceeds nCells $nCells")
-    val cells = IvfPq.coarseCells(df, idCol, vecCol, nCells).localCheckpoint()
+    val cells = Fixpoint.cut(IvfPq.coarseCells(df, idCol, vecCol, nCells))
     val base = df.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
     // nearest cell per corpus row (argmin d2, ties to smallest cell id)
     // as ONE compiled per-row loop over the collapsed broadcast cell
@@ -274,7 +275,7 @@ object IvfAnn {
       if (nprobeScale > 0)
         math.max(nprobeSup, math.ceil(math.sqrt(sCount.toDouble)).toInt)
       else nprobeSup
-    val cells = IvfPq.coarseCells(df, idCol, vecCol, kc).localCheckpoint()
+    val cells = Fixpoint.cut(IvfPq.coarseCells(df, idCol, vecCol, kc))
     val supers = cells.filter(col("cell") < sCount)
       .select(col("cell").as("sup"), col("cellv").as("supv"))
     // round-21: every CORPUS-SIDE stage of the two-level routing is a
@@ -289,11 +290,10 @@ object IvfAnn {
     // bounded window form.
     val supRow = broadcast(CellAssign.collapse(supers, "sup", "supv"))
     // cell → nearest super (kc·S distances — tiny, driver-free)
-    val cellSup = cells.crossJoin(supRow)
+    val cellSup = Fixpoint.cut(cells.crossJoin(supRow)
       .select(col("cell"), col("cellv"),
         CellAssign.nearest(col("cellv"), col("__cents"), dims)
-          .getField("cid").as("sup"))
-      .localCheckpoint()
+          .getField("cid").as("sup")))
     val base = df.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
     // each super's member cells, collapsed for the per-super argmin
     val members = broadcast(cellSup.groupBy(col("sup")).agg(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.TopK
 import graft.text.TextOps
+import graft.operators.Fixpoint
 
 /** IVF-PQ: the composition of the two halves that individually exist as
   * s3 (IVF cell shortlisting, `IvfAnn`) and s7 (PQ code compression,
@@ -62,9 +63,8 @@ object IvfPq {
     require(dims % m == 0, s"dims $dims not divisible by m $m")
     require(nprobe <= nCells, s"nprobe $nprobe exceeds nCells $nCells")
     val subLen = dims / m
-    val cells = coarseCells(corpus, idCol, vecCol, nCells).localCheckpoint()
-    val cb = Pq.codebook(corpus, idCol, vecCol, m, subLen, nCentroids)
-      .localCheckpoint()
+    val cells = Fixpoint.cut(coarseCells(corpus, idCol, vecCol, nCells))
+    val cb = Fixpoint.cut(Pq.codebook(corpus, idCol, vecCol, m, subLen, nCentroids))
     // nearest cell per corpus row (ties to the smallest cell id) as a
     // compiled per-row argmin over the collapsed broadcast cell row
     // (round-21 — removes the ×nCells explode + corpus-keyed Exchange;

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.TopK
+import graft.operators.Fixpoint
 
 /** IVF-SQ: coarse cell shortlisting ([[IvfPq.coarseCells]]) composed
   * with scalar-quantized codes ([[Sq]]) — the third point of the
@@ -29,9 +30,8 @@ object IvfSq {
            queryPred: Column, k: Int, kShort: Int, dims: Int,
            levels: Int, nCells: Int, nprobe: Int): DataFrame = {
     require(nprobe <= nCells, s"nprobe $nprobe exceeds nCells $nCells")
-    val cells = IvfPq.coarseCells(corpus, idCol, vecCol, nCells)
-      .localCheckpoint()
-    val stats = Sq.fit(corpus, vecCol, dims, levels).localCheckpoint()
+    val cells = Fixpoint.cut(IvfPq.coarseCells(corpus, idCol, vecCol, nCells))
+    val stats = Fixpoint.cut(Sq.fit(corpus, vecCol, dims, levels))
     // compiled per-row argmin over the collapsed broadcast cell row
     // (round-21 — removes the ×nCells explode + corpus-keyed Exchange;
     // CellAssign scaladoc has the parity argument)

@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** Maximal Marginal Relevance (Carbonell & Goldstein 1998) — the
   * diversity rerank a retrieval pipeline runs over an ANN shortlist:
@@ -60,7 +61,7 @@ object Mmr {
         .select(col("query_id"), col("p.corpus_id"),
           lit(i).as("pick"), col("p.score"))
       sel = if (sel == null) pick else sel.unionByName(pick)
-      sel = sel.localCheckpoint()
+      sel = Fixpoint.cut(sel)
     }
     sel
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.TopK
 import graft.text.TextOps
+import graft.operators.Fixpoint
 
 /** Product quantization for embedding columns — the compression half of
   * billion-scale ANN (IVF-PQ à la Jégou et al. 2011, "Product
@@ -132,8 +133,7 @@ object Pq {
     // m × nCentroids tiny rows, read by BOTH the encode and LUT
     // branches — checkpoint so each branch doesn't re-run the corpus
     // sample (the Bpe reuse idiom)
-    val cb = codebook(corpus, idCol, vecCol, m, subLen, nCentroids)
-      .localCheckpoint()
+    val cb = Fixpoint.cut(codebook(corpus, idCol, vecCol, m, subLen, nCentroids))
     val codes = encode(corpus, idCol, vecCol, cb, m, subLen)
       .select(col(idCol).as("corpus_id"), col("codes"))
     // per-query LUT: lut(sub)(cid) = dist2(query subvector, centroid)

@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
   * web-scale through semantic deduplication", arXiv:2303.09540):
@@ -77,8 +78,7 @@ object SemDedup {
       if (targetCell > 0)
         math.max(1L, (df.count() + targetCell - 1) / targetCell).toInt
       else nCells
-    val cells = IvfPq.coarseCells(df, idCol, vecCol, k)
-      .localCheckpoint()
+    val cells = Fixpoint.cut(IvfPq.coarseCells(df, idCol, vecCol, k))
     val asg = if (k > HierSwitch) assignHier(df, idCol, vecCol, dims, cells, k)
               else assignFlat(df, idCol, vecCol, dims, cells)
     pairStage(df, idCol, vecCol, asg, threshold, paperRule)
@@ -128,8 +128,7 @@ object SemDedup {
                 paperRule: Boolean = false): DataFrame = {
     require(targetCell > 0, s"targetCell $targetCell")
     val k = math.max(1L, (df.count() + targetCell - 1) / targetCell).toInt
-    val cells = IvfPq.coarseCells(df, idCol, vecCol, k)
-      .localCheckpoint()
+    val cells = Fixpoint.cut(IvfPq.coarseCells(df, idCol, vecCol, k))
     pairStage(df, idCol, vecCol,
       assignHier(df, idCol, vecCol, dims, cells, k), threshold, paperRule)
   }
@@ -153,11 +152,10 @@ object SemDedup {
     // members → project.
     val supRow = broadcast(CellAssign.collapse(supers, "sup", "supv"))
     // cell → nearest super (nCells·S distances — driver-free, tiny)
-    val cellSup = cells.crossJoin(supRow)
+    val cellSup = Fixpoint.cut(cells.crossJoin(supRow)
       .select(col("cell"), col("cellv"),
         CellAssign.nearest(col("cellv"), col("__cents"), dims)
-          .getField("cid").as("sup"))
-      .localCheckpoint()
+          .getField("cid").as("sup")))
     // each super's member cells, collapsed for the per-super argmin
     val members = broadcast(cellSup.groupBy(col("sup")).agg(
       sort_array(collect_list(struct(col("cell").cast("int").as("cid"),

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.TopK
+import graft.operators.Fixpoint
 
 /** Scalar quantization for embedding columns — the third compression
   * tier next to sign-LSH (s2) and product quantization (s7/s8): each
@@ -97,7 +98,7 @@ object Sq {
   def rerankTopK(corpus: DataFrame, idCol: String, vecCol: String,
                  queryPred: Column, k: Int, kShort: Int, dims: Int,
                  levels: Int): DataFrame = {
-    val stats = fit(corpus, vecCol, dims, levels).localCheckpoint()
+    val stats = Fixpoint.cut(fit(corpus, vecCol, dims, levels))
     val codes = encode(corpus, idCol, vecCol, stats, dims, levels)
       .select(col(idCol).as("corpus_id"), col("codes"))
     val qv = corpus.filter(queryPred)

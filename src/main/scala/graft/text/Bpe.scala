@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** T18 (beyond-reference, LLM pipeline): BPE-style pair-merge
   * vocabulary induction — the iterative half of tokenizer training that
@@ -24,9 +25,10 @@ import org.apache.spark.sql.functions._
   *      successors dropped.
   * The winning pair rides into the merge step as a broadcast 1-row
   * crossJoin (the J4 scalar idiom — no driver round-trip in the plan);
-  * each round's symbol table is localCheckpoint'ed because it feeds
-  * BOTH the next round's two branches (pair count + merge), which
-  * would otherwise re-execute the whole prefix exponentially.
+  * each round's symbol table is cut ([[graft.operators.Fixpoint]])
+  * because it feeds BOTH the next round's two branches (pair count +
+  * merge), which would otherwise re-execute the whole prefix
+  * exponentially.
   *
   * All-integer/string arithmetic — engine-exact, so the DuckDB oracle
   * (the same construction as K chained CTE blocks) hash-matches with
@@ -61,19 +63,19 @@ object Bpe {
     // sequence(1, 0) would generate a DESCENDING [1, 0] for the empty
     // word — filter zero-length words instead (the oracle's range(1, 1)
     // is empty for them, so net symbol rows agree)
-    var tok = words.filter(length($"w") >= 1)
+    val tok0 = Fixpoint.cut(words.filter(length($"w") >= 1)
       .select($"w", $"freq",
         explode(sequence(lit(1), length($"w"))).as("pos"))
-      .select($"w", $"freq", $"pos", $"w".substr($"pos", lit(1)).as("sym"))
-      .localCheckpoint()
+      .select($"w", $"freq", $"pos", $"w".substr($"pos", lit(1)).as("sym")))
 
-    val steps = (0 until k).map { i =>
+    val steps = Seq.newBuilder[DataFrame]
+    val tok = Fixpoint.run(tok0, k, cutEvery = 1) { (tok, round) =>
       val withNext = tok.withColumn("nxt", lead($"sym", 1).over(wOrd))
-      val top1 = withNext.filter($"nxt".isNotNull)
+      // 1 row; read by the merge step AND the output
+      val top1 = Fixpoint.cut(withNext.filter($"nxt".isNotNull)
         .groupBy($"sym".as("lhs"), $"nxt".as("rhs"))
         .agg(sum($"freq").as("c"))
-        .orderBy(desc("c"), $"lhs", $"rhs").limit(1)
-        .localCheckpoint() // 1 row; read by the merge step AND the output
+        .orderBy(desc("c"), $"lhs", $"rhs").limit(1))
       val st = withNext.crossJoin(broadcast(top1))
         .withColumn("is_start",
           when($"sym" === $"lhs" && $"nxt" === $"rhs", 1).otherwise(0))
@@ -84,16 +86,15 @@ object Bpe {
             Window.partitionBy($"w", $"is_start", $"grp").orderBy($"pos"))
           % 2 === 1, 1).otherwise(0))
       val mg = par.withColumn("prev_m", lag($"do_merge", 1).over(wOrd))
-      tok = mg.filter($"prev_m".isNull || $"prev_m" === 0)
+      steps += top1.select(lit(round).as("step"), $"lhs", $"rhs",
+        concat($"lhs", $"rhs").as("merged"),
+        $"c".cast("long").as("pair_count"))
+      mg.filter($"prev_m".isNull || $"prev_m" === 0)
         .select($"w", $"freq", row_number().over(wOrd).as("pos"),
           when($"do_merge" === 1, concat($"sym", $"nxt"))
             .otherwise($"sym").as("sym"))
-        .localCheckpoint()
-      top1.select(lit(i + 1).as("step"), $"lhs", $"rhs",
-        concat($"lhs", $"rhs").as("merged"),
-        $"c".cast("long").as("pair_count"))
-    }
-    (tok, steps)
+    }.state
+    (tok, steps.result())
   }
 
   /** The DuckDB oracle for [[merges]]: the identical construction as K

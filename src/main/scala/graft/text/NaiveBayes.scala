@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.queries.Rx.r4
+import graft.operators.Fixpoint
 
 /** Multinomial Naive Bayes over token arrays — train and inference as
   * one declarative plan (the t24 query wraps this over the documents
@@ -35,14 +36,12 @@ object NaiveBayes {
                          ptot: DataFrame, vv: DataFrame)
 
   def fit(train: DataFrame, labelCol: String, toksCol: String): Model = {
-    val ctc = train
+    val ctc = Fixpoint.cut(train
       .select(col(labelCol).as("c"), explode(col(toksCol)).as("tok"))
-      .groupBy(col("c"), col("tok")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy(col("c"), col("tok")).agg(count(lit(1)).as("cnt")))
     val tot = ctc.groupBy(col("c")).agg(sum(col("cnt")).as("tot_c"))
-    val pri = train.groupBy(col(labelCol).as("c"))
-      .agg(count(lit(1)).as("nd"))
-      .localCheckpoint()
+    val pri = Fixpoint.cut(train.groupBy(col(labelCol).as("c"))
+      .agg(count(lit(1)).as("nd")))
     val ptot = pri.agg(sum(col("nd")).as("ndocs"))
     val vv = ctc.agg(countDistinct(col("tok")).as("v"))
     Model(ctc, tot, pri, ptot, vv)

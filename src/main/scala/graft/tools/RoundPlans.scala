@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** Dev utility (round-21, VERDICT r20 item 6): dump the PER-ROUND
   * physical plan of every iterative graph operator that keys its
@@ -16,9 +17,9 @@ import org.apache.spark.sql.functions._
   * side must show `InMemoryTableScan` with NO Exchange and NO Sort
   * above it inside the round's sort-merge join — only the node-sized
   * state side shuffles. `LabelProp.run(e, 1)`, `HyperAnf.khopExact(e,
-  * 1)`, `HyperAnf.registerRounds(e, 1, p).last`, `Components.run(e,
-  * 3)` (rounds 1-2 checkpointed, round 3 unrolled) all have that
-  * property.
+  * 1)` and `HyperAnf.registerRounds(e, 1, p).last` have that property;
+  * `Components.run` cuts its last round, so its round is replicated
+  * below.
   *
   * The graph is a synthetic symmetric 100-node ring-with-chords — the
   * plan SHAPE is partition-count- and data-independent; what the dump
@@ -57,8 +58,8 @@ object RoundPlans {
     // label frame, the round-2+ shape) for the dump:
     locally {
       val e = graft.operators.LoopFrames.keyed(edges, "src")
-      val labels0 = e.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("label")).localCheckpoint()
+      val labels0 = Fixpoint.cut(e.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("label")))
       val nbrMin = e.hint("merge")
         .join(labels0.select(col("node").as("src"), col("label").as("slabel")),
           "src")
@@ -70,18 +71,18 @@ object RoundPlans {
     dump("round_khop", graft.graph.HyperAnf.khopExact(edges, 1))
     dump("round_hyperanf_regs",
       graft.graph.HyperAnf.registerRounds(edges, 1, 8).last)
-    // PageRank deliberately keeps localCheckpoint (round-20 measured
-    // revert), and ITS final round is always checkpoint-truncated — so
-    // for contrast the loop body is replicated here verbatim
-    // (PageRank.run's contrib+update over a localCheckpointed norm/pr):
+    // PageRank deliberately keeps cut loop constants, not
+    // LoopFrames.keyed (round-20 measured revert), and ITS final round
+    // is always cut — so for contrast the loop body is replicated here
+    // verbatim (PageRank.run's contrib+update over a cut norm/pr):
     // the edge side shows Exchange+Sort INSIDE the round, the
     // documented gate-scale trade.
     locally {
       val outw = wedges.groupBy($"src").agg(sum($"w").as("outw"))
-      val norm = wedges.join(outw, "src")
-        .select($"src", $"dst", ($"w" / $"outw").as("wn")).localCheckpoint()
-      val pr0 = norm.select($"src".as("node")).distinct()
-        .select($"node", lit(0.01).as("pr")).localCheckpoint()
+      val norm = Fixpoint.cut(wedges.join(outw, "src")
+        .select($"src", $"dst", ($"w" / $"outw").as("wn")))
+      val pr0 = Fixpoint.cut(norm.select($"src".as("node")).distinct()
+        .select($"node", lit(0.01).as("pr")))
       val contrib = norm.join(pr0.withColumnRenamed("node", "src"), "src")
         .groupBy($"dst".as("node")).agg(sum($"pr" * $"wn").as("c"))
       dump("round_pagerank_contrast", contrib)

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** Dev utility: measure the Salting primitives against their naive
   * shapes on a deliberately skewed fixture (one hot key carrying most
@@ -19,12 +20,10 @@ object SkewBench {
     import spark.implicits._
 
     val hot = (rows * hotShare).toLong
-    val df = spark.range(rows).select($"id",
+    val df = Fixpoint.cut(spark.range(rows).select($"id",
         when($"id" < hot, lit(0L)).otherwise(pmod($"id", lit(1000L)) + 1).as("k"),
-        (rand(42) * 100).as("v"))
-      .localCheckpoint() // materialize input so timings exclude generation
-    val dim = spark.range(1001).select($"id".as("k"), (rand(7) * 50).as("thr"))
-      .localCheckpoint()
+        (rand(42) * 100).as("v"))) // materialize input so timings exclude generation
+    val dim = Fixpoint.cut(spark.range(1001).select($"id".as("k"), (rand(7) * 50).as("thr")))
 
     // report the second (warm) run: arms execute in sequence, so a
     // single-run report would flatter whichever arm runs last (page

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** Dev measurement main (round-17): planted-pair recall of the
   * widened banded-LSH candidate stage, single-table vs two-table
@@ -22,9 +23,8 @@ object WidenRecall {
     val docs = graft.io.Tables.documents(spark, sfDir)
     val nDocs = docs.count()
     val planted = (nDocs / 8) * 28
-    val bands = graft.multimodal.Multimodal.dHashBands(
-      graft.multimodal.Multimodal.synthPpmGroupPayload(docs, "doc_id"))
-      .localCheckpoint()
+    val bands = Fixpoint.cut(graft.multimodal.Multimodal.dHashBands(
+      graft.multimodal.Multimodal.synthPpmGroupPayload(docs, "doc_id")))
     Seq(1, 2).foreach { t =>
       val t0 = System.nanoTime()
       val got = graft.dedup.BandedLsh.hammingPairsTables(

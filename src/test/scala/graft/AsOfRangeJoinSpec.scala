@@ -45,23 +45,6 @@ class AsOfRangeJoinSpec extends AnyFunSuite {
       (2L, 10L, -1L, -1.0)))   // no right >= 10 for key 2 → null match
   }
 
-  test("components resolves a long chain and separate clusters deterministically") {
-    // chain 1-2-3-...-9 (diameter 8 → needs >1 propagation round even
-    // with pointer jumping) + isolated pair (100,101); run BOTH paths —
-    // driver union-find (default threshold) and the distributed loop
-    // (threshold 0) — and require identical results.
-    val edges = ((1L to 8L).map(i => (i, i + 1)) :+ (100L, 101L))
-      .toDF("id_a", "id_b")
-    for (threshold <- Seq(5000000L, 0L)) {
-      val comp = graft.dedup.Dedup.components(edges,
-          collectEdgeThreshold = threshold)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      (1L to 9L).foreach(i => assert(comp(i) == 1L, s"node $i thr=$threshold"))
-      assert(comp(100L) == 100L && comp(101L) == 100L, s"thr=$threshold")
-      assert(comp.size == 11, s"thr=$threshold")
-    }
-  }
-
   test("frameSample at stride 1 reconstructs the payload hex exactly") {
     import org.apache.spark.sql.functions._
     val docs = Seq((1L, "a" * 64 + "b" * 64 + "cdef"), (2L, "short"),

@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.dedup.Dedup
 import graft.graph.Components
 
-/** Contracts for min-label-propagation connected components: exact
-  * component recovery on a fixture, k = diameter sufficiency on a path
-  * graph, and — the claim the g16 hash gate can't see — that the
-  * declared query's round count reaches the FIXPOINT on the panel
-  * graph (so the output is true WCC, not k-hop minima). */
+/** Contracts for connected components. Fixed-K min-label propagation
+  * (`run`): exact component recovery on a fixture, k = diameter
+  * sufficiency on a path graph, and — the claim the g16 hash gate can't
+  * see — that the declared query's round count reaches the FIXPOINT on
+  * the panel graph (so the output is true WCC, not k-hop minima). The
+  * resolver (`resolve`, through `Dedup.components`): both of its paths
+  * agree, and it fails past its round cap. */
 class ComponentsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -54,66 +57,39 @@ class ComponentsSpec extends AnyFunSuite {
     val at8 = Components.run(edges, k = 8)
     assert(at7.exceptAll(at8).isEmpty && at8.exceptAll(at7).isEmpty,
       "round 8 must equal round 7 — k=8 is claimed to be past the fixpoint")
-    // the star-contraction scale path lands on the same fixpoint
-    val stars = Components.runStars(edges, rounds = 6)
-    assert(stars.exceptAll(at8).isEmpty && at8.exceptAll(stars).isEmpty,
-      "runStars must match min-propagation's fixpoint on the panel graph")
   }
 
-  test("dual gate at the bench SF: runStars == fixed-K fixpoint on the " +
-      "REAL sf0.1 corr graph (round-12, VERDICT item 4)") {
-    // The sf0.001 test above proves the algorithms agree on a small
-    // instance; the driver benches at sf0.1, so the promotion gate for
-    // the O(log n) scale path must hold on the graph that round's g16
-    // actually computes. Also measures the round economics the scale
-    // argument rests on: star contraction's edge set must be EMPTY
-    // (fully contracted) within 6 rounds while min-propagation needs
-    // its diameter-dependent 8.
-    import graft.io.Tables
-    import graft.analytics.Analytics
-    import graft.queries.Rx.r4
-    assume(new java.io.File("/root/testdata/sf0.1").isDirectory)
-    val daily = Tables.events(spark, "/root/testdata/sf0.1")
-      .filter($"user_id" < 200)
-      .groupBy(unix_micros(date_trunc("day", $"ts")).as("day"), $"user_id")
-      .agg(sum($"value").as("v"))
-    val und = Analytics.pairwiseCorr(daily, "day", "user_id", "v")
-      .select($"key_a".cast("long").as("ka"),
-        $"key_b".cast("long").as("kb"), r4($"corr").as("r"))
-      .filter(abs($"r") > 0.3)
-      .select($"ka", $"kb")
-    val edges = und.select($"ka".as("src"), $"kb".as("dst"))
-      .unionByName(und.select($"kb".as("src"), $"ka".as("dst")))
-      .localCheckpoint()
-    val fixed = Components.run(edges, k = 8)
-    val stars = Components.runStars(edges, rounds = 6)
-    assert(stars.exceptAll(fixed).isEmpty && fixed.exceptAll(stars).isEmpty,
-      "runStars must match the declared g16 fixed-K output on the sf0.1 graph")
-  }
-
-  test("star contraction collapses a 64-chain in O(log n) rounds, " +
-      "where min-propagation at the same budget provably has not converged") {
+  test("min-propagation moves the min label one hop per round on a 64-chain") {
     val chain = sym((1L to 63L).map(i => (i, i + 1)): _*)
-    val stars = Components.runStars(chain, rounds = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(stars === (1L to 64L).map(_ -> 1L).toMap,
-      "6 star rounds must fully collapse the 64-chain")
-    // min-propagation moves the min label one hop per round: node 64
-    // still carries label 64-6=58 after 6 rounds, and needs all 63
+    // node 64 still carries label 64-6=58 after 6 rounds, and needs all 63
     val prop6 = Components.run(chain, k = 6)
       .filter($"node" === 64L).head().getLong(1)
     assert(prop6 === 58L,
       "min-propagation at 6 rounds must NOT have converged on the chain")
   }
 
-  test("star contraction handles forests, isolated-star inputs, and min roots") {
-    // two components with interleaved ids + a pre-collapsed star
-    val g = sym((5L, 9L), (9L, 2L), (7L, 3L), (3L, 11L), (20L, 21L),
-      (20L, 22L), (20L, 23L))
-    val got = Components.runStars(g, rounds = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got === Map(5L -> 2L, 9L -> 2L, 2L -> 2L,
-      7L -> 3L, 3L -> 3L, 11L -> 3L,
-      20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L))
+  test("components resolves a long chain and separate clusters deterministically") {
+    // chain 1-2-3-...-9 (diameter 8 → needs >1 propagation round even
+    // with pointer jumping) + isolated pair (100,101); run BOTH paths —
+    // driver union-find (default threshold) and the distributed loop
+    // (threshold 0) — and require identical results.
+    val edges = ((1L to 8L).map(i => (i, i + 1)) :+ (100L, 101L))
+      .toDF("id_a", "id_b")
+    for (threshold <- Seq(5000000L, 0L)) {
+      val comp = Dedup.components(edges,
+          collectEdgeThreshold = threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      (1L to 9L).foreach(i => assert(comp(i) == 1L, s"node $i thr=$threshold"))
+      assert(comp(100L) == 100L && comp(101L) == 100L, s"thr=$threshold")
+      assert(comp.size == 11, s"thr=$threshold")
+    }
+  }
+
+  test("the resolver fails, naming itself and its cap, when labels still change") {
+    val edges = (1L to 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException](
+      Dedup.components(edges, maxIter = 1, collectEdgeThreshold = 0L).collect())
+    assert(e.getMessage.contains("Components.resolve") &&
+      e.getMessage.contains("maxIter=1"), e.getMessage)
   }
 }

@@ -127,6 +127,16 @@ class StreamDrainSpec extends AnyFunSuite {
       graft.io.Tables.events(spark, Sf)
         .select($"ts", $"user_id", $"event_type")
         .repartition(12).write.parquet(s"$dir/in")
+      // the file source reads files in modification-time order, which
+      // would follow whichever write task finished last; name order
+      // fixes the batch sequence, and with it whether the last batch
+      // moves the watermark and so adds a trailing no-data batch
+      val inputs = new java.io.File(s"$dir/in").listFiles()
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      val written = inputs.map(_.lastModified).max
+      inputs.zipWithIndex.foreach { case (f, i) =>
+        assert(f.setLastModified(written + 1000L * (i + 1)))
+      }
       // the manager conf holds for the whole run, as drainToTable holds
       // it: the file source builds its log on the stream thread
       def run(manager: String, dirName: String)(body: StreamingQuery => Unit): Unit =

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One way to do each thing: the engine builds sessions in one place
   * (`GraftSession`), keeps session-scoped state in one store
   * (`graft.io.PersistRegistry`), writes per-row kernels one way
-  * (plain methods called through `graft.Kernel`) and runs streams one
-  * way (`StreamOps.drainToTable`). Fails when another pattern appears
+  * (plain methods called through `graft.Kernel`), runs streams one
+  * way (`StreamOps.drainToTable`) and cuts lineage one way
+  * (`graft.operators.Fixpoint.cut`). Fails when another pattern appears
   * under src/main/scala, so none can grow back. */
 class StructureGuardSpec extends AnyFunSuite {
   private val sources: Seq[java.io.File] = {
@@ -60,6 +61,14 @@ class StructureGuardSpec extends AnyFunSuite {
     val hits = offenders("""\.writeStream\b|processAllAvailable""", "StreamOps.scala")
     assert(hits.isEmpty,
       hits.mkString("run the stream through StreamOps.drainToTable instead:\n", "\n", ""))
+  }
+
+  test("lineage is cut only through Fixpoint") {
+    // one place decides how state is truncated, so making the cut
+    // survive a lost executor is a change to Fixpoint.cut alone
+    val hits = offenders("""localCheckpoint\(""", "Fixpoint.scala")
+    assert(hits.isEmpty,
+      hits.mkString("cut lineage with graft.operators.Fixpoint.cut instead:\n", "\n", ""))
   }
 
   test("MlPack runs the pairwise-corr build only in its two graph memos") {
