@@ -27,8 +27,7 @@ object StreamOps {
   private[graft] val CheckpointManagerKey =
     "spark.sql.streaming.checkpointFileManagerClass"
   private[graft] val IsolationKey = "spark.sql.artifact.isolation.enabled"
-  private val FileSystemManager = "org.apache.spark.sql.execution.streaming." +
-    "checkpointing.FileSystemBasedCheckpointFileManager"
+  private val FileSystemManager = classOf[LocalCheckpointFileManager].getName
 
   /** Run `df` as a stream into a memory sink named `<prefix>_out_<n>`,
     * drain everything available, stop it, record its state peaks under
@@ -39,14 +38,16 @@ object StreamOps {
     * restored (or unset). `start()` copies them into the stream's cloned
     * session, but a file source builds its log on the stream thread
     * from the caller's session, so they hold until the stream stops:
-    *  - the checkpoint file manager becomes Spark's FileSystem-based one
+    *  - the checkpoint file manager becomes [[LocalCheckpointFileManager]]
+    *    (Spark's FileSystem-based one, setting modes through `java.nio`)
     *    unless the caller chose one or the session checkpoints off the
     *    local file system. Without Hadoop's native library the default
     *    FileContext manager forks a `readlink` process for the symlink
     *    check of every rename (64 per stream run on perfbench's
-    *    `stream` workload); the FileSystem manager's local rename
-    *    needs none. `.crc` files and Spark's state-file checksums are
-    *    written either way;
+    *    `stream` workload), and both of Spark's managers fork a `chmod`
+    *    for every file, `.crc` and directory they create (about 25 per
+    *    stream run); this one forks neither. `.crc` files and Spark's
+    *    state-file checksums are written either way;
     *  - artifact isolation goes off unless the session added artifacts.
     *    With it on, every clone gets a new session id, so executors run
     *    its tasks in a new class loader, and the codegen cache (keyed by

@@ -6,14 +6,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.graftbridge.SessionBridge
-import graft.streaming.StreamOps
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import graft.streaming.{LocalCheckpointFileManager, StreamOps}
 
 /** `StreamOps.drainToTable` runs a stream without forking processes for
-  * its checkpoint renames and without a fresh executor class loader per
-  * run, leaves the caller's session confs as it found them, and the
-  * FileSystem checkpoint manager it picks restarts a stream exactly like
-  * the FileContext one it replaces — including from a checkpoint the
-  * FileContext manager wrote. */
+  * its checkpoint renames and file modes and without a fresh executor
+  * class loader per run, and leaves the caller's session confs as it
+  * found them. The manager it picks, graft's
+  * `LocalCheckpointFileManager` (Spark's FileSystem-based one setting
+  * modes through `java.nio`), writes the same files with the same modes
+  * as Spark's and restarts a stream exactly like the FileContext manager
+  * it replaces — including from a checkpoint either of Spark's managers
+  * wrote. */
 class StreamDrainSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -23,6 +28,7 @@ class StreamDrainSpec extends AnyFunSuite {
     "checkpointing.FileContextBasedCheckpointFileManager"
   private val FileSystemManager = "org.apache.spark.sql.execution.streaming." +
     "checkpointing.FileSystemBasedCheckpointFileManager"
+  private val GraftManager = classOf[LocalCheckpointFileManager].getName
   private val Keys = Seq(StreamOps.CheckpointManagerKey, StreamOps.IsolationKey)
 
   /** The commands of every process the JVM started while `body` ran. */
@@ -66,16 +72,97 @@ class StreamDrainSpec extends AnyFunSuite {
       launches(st1())
     }
     val controlByProgram = control.groupBy(program).view.mapValues(_.size).toMap
-    info(s"process launches per st1 drain: FileSystem manager $byProgram, " +
-      s"FileContext manager $controlByProgram")
+    // Spark's own FileSystem manager, as the caller's choice: what each
+    // stream cost before graft's manager set modes through java.nio
+    val sparkFs = withCallerConfs(Map(StreamOps.CheckpointManagerKey -> FileSystemManager)) {
+      launches(st1())
+    }
+    val sparkFsByProgram = sparkFs.groupBy(program).view.mapValues(_.size).toMap
+    info(s"process launches per st1 drain: graft's manager $byProgram, " +
+      s"Spark's FileSystem manager $sparkFsByProgram, FileContext manager $controlByProgram")
     assert(byProgram.getOrElse("readlink", 0) == 0,
       s"the drain forked readlink: ${drained.filter(program(_) == "readlink").take(3)}")
+    assert(byProgram.getOrElse("chmod", 0) == 0,
+      s"the drain forked chmod: ${drained.filter(program(_) == "chmod").take(3)}")
     // without Hadoop's native library the FileContext manager forks a
-    // readlink per rename; the zero above is meaningful only if the
+    // readlink per rename and Spark's FileSystem manager a chmod per
+    // file created; the zeros above are meaningful only if the
     // recording sees those launches
-    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
+    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded) {
       assert(controlByProgram.getOrElse("readlink", 0) > 0,
         s"the FileContext control forked no readlink: $controlByProgram")
+      assert(sparkFsByProgram.getOrElse("chmod", 0) > 0,
+        s"the FileSystem control forked no chmod: $sparkFsByProgram")
+    }
+  }
+
+  /** The permission bits (`07777`) of `p`. */
+  private def mode(p: java.nio.file.Path): Int =
+    java.nio.file.Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+
+  test("graft's raw file system leaves the modes Hadoop's leaves") {
+    TestDirs.withTempDir("graft_drain_modes") { dir =>
+      val conf = new org.apache.hadoop.conf.Configuration()
+      val systems = Seq("graft" -> new LocalCheckpointFileManager.NioPermissions,
+        "hadoop" -> new RawLocalFileSystem)
+      systems.foreach(_._2.initialize(java.net.URI.create("file:///"), conf))
+      // 01777 has the sticky bit, which java.nio cannot set: graft's
+      // file system must hand it to Hadoop's chmod path
+      for (octal <- Seq("644", "600", "755", "1777"); kind <- Seq("file", "dir")) {
+        val modes = systems.map { case (name, fs) =>
+          val p = java.nio.file.Paths.get(dir, s"$name-$kind-$octal")
+          if (kind == "file") java.nio.file.Files.createFile(p)
+          else java.nio.file.Files.createDirectory(p)
+          fs.setPermission(new Path(p.toUri), new FsPermission(Integer.parseInt(octal, 8).toShort))
+          name -> Integer.toOctalString(mode(p))
+        }.toMap
+        assert(modes == Map("graft" -> octal, "hadoop" -> octal), s"$kind mode $octal: $modes")
+      }
+    }
+  }
+
+  test("graft's and Spark's FileSystem managers write the same checkpoint tree") {
+    TestDirs.withTempDir("graft_drain_tree") { dir =>
+      graft.io.Tables.events(spark, Sf)
+        .select($"ts", $"user_id", $"event_type")
+        .repartition(3).write.parquet(s"$dir/in")
+      def tree(manager: String): Seq[(String, String)] = {
+        val out = s"$dir/${manager.split('.').last}"
+        withCallerConfs(Map(StreamOps.CheckpointManagerKey -> manager)) {
+          val q = StreamOps.dedupWithinWatermark(
+              spark.readStream.schema("ts TIMESTAMP, user_id LONG, event_type STRING")
+                .option("maxFilesPerTrigger", "1").parquet(s"$dir/in"),
+              "ts", Seq("user_id", "event_type"), "365 days")
+            .select($"user_id", $"event_type")
+            .writeStream.outputMode("append").format("parquet")
+            .option("path", s"$out/out").option("checkpointLocation", s"$out/ckpt").start()
+          try q.processAllAvailable() finally q.stop()
+          // a state store rewriting a version overwrites its file: the
+          // rename follows the session's local file system either way
+          val fm = org.apache.spark.sql.execution.streaming.checkpointing
+            .CheckpointFileManager.create(new Path(s"$out/ckpt"),
+              spark.sessionState.newHadoopConf())
+          assert(fm.getClass.getName == manager)
+          Seq("first", "second").foreach { body =>
+            val os = fm.createAtomic(new Path(s"$out/ckpt/rewritten"), overwriteIfPossible = true)
+            try os.write(body.getBytes("UTF-8")) finally os.close()
+          }
+        }
+        val root = java.nio.file.Paths.get(s"$out/ckpt")
+        val walk = java.nio.file.Files.walk(root)
+        try walk.iterator.asScala.filterNot(_ == root).map { p =>
+          // state schema files carry a random id in their name
+          root.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}",
+            "<uuid>") -> f"${mode(p)}%o"
+        }.toSeq.sorted finally walk.close()
+      }
+      val bySpark = tree(FileSystemManager)
+      val byGraft = tree(GraftManager)
+      assert(bySpark.exists(_._1.startsWith("state")) && bySpark.exists(_._1.endsWith(".crc")),
+        s"the checkpoint holds no state or checksum files: $bySpark")
+      assert(byGraft == bySpark, s"only Spark's: ${bySpark.diff(byGraft).take(5)} " +
+        s"only graft's: ${byGraft.diff(bySpark).take(5)}")
+    }
   }
 
   test("draining st1 again compiles no new classes and returns the same rows") {
@@ -175,6 +262,19 @@ class StreamDrainSpec extends AnyFunSuite {
       assert(commits("cut") == 12)
       assert(!restarted.exists(program(_) == "readlink"),
         "the restarted run checkpointed through the FileContext manager")
+      // only Spark's managers fork a chmod per checkpoint file. Counted
+      // on the offset and commit logs, which only a run's own query
+      // thread writes: tasks of the stopped run's last batch may still
+      // be writing state deltas through its manager after the restart
+      // began, and the parquet sink's files fork a chmod under any manager
+      def logChmods(run: Seq[String]): Seq[String] = run.filter(c => program(c) == "chmod" &&
+        Seq("offsets", "commits").exists(log => c.contains(s"$dir/cut/ckpt/$log/")))
+      if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded) {
+        assert(logChmods(first).nonEmpty == (firstManager != GraftManager),
+          logChmods(first).take(3))
+        assert(logChmods(restarted).nonEmpty == (restartManager != GraftManager),
+          logChmods(restarted).take(3))
+      }
       val want = sunk("whole")
       val got = sunk("cut")
       assert(want.nonEmpty && got.sorted == want.sorted,
@@ -183,10 +283,14 @@ class StreamDrainSpec extends AnyFunSuite {
     }
 
   test("restart parity: FileSystem manager, stopped partway and restarted") {
-    restartParity(FileSystemManager, FileSystemManager)
+    restartParity(GraftManager, GraftManager)
   }
 
   test("restart parity: a FileContext checkpoint restarts under the FileSystem manager") {
-    restartParity(FileContextManager, FileSystemManager)
+    restartParity(FileContextManager, GraftManager)
+  }
+
+  test("restart parity: a checkpoint of Spark's FileSystem manager restarts under graft's") {
+    restartParity(FileSystemManager, GraftManager)
   }
 }

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`GraftSession`), keeps session-scoped state in one store
   * (`graft.io.PersistRegistry`), writes per-row kernels one way
   * (plain methods called through `graft.Kernel`), runs streams one
-  * way (`StreamOps.drainToTable`) and cuts lineage one way
+  * way (`StreamOps.drainToTable`, which alone picks the checkpoint
+  * file manager) and cuts lineage one way
   * (`graft.operators.Fixpoint.cut`). Fails when another pattern appears
   * under src/main/scala, so none can grow back. */
 class StructureGuardSpec extends AnyFunSuite {
@@ -19,9 +20,9 @@ class StructureGuardSpec extends AnyFunSuite {
 
   // whitespace is dropped before matching, so a pattern split across
   // lines (`ConcurrentHashMap[` + newline + `(SparkSession`) still hits
-  private def offenders(pattern: String, allowed: String): Seq[String] = {
+  private def offenders(pattern: String, allowed: String*): Seq[String] = {
     val re = pattern.r
-    sources.filterNot(_.getName == allowed).filter { f =>
+    sources.filterNot(f => allowed.contains(f.getName)).filter { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       try re.findFirstIn(src.mkString.replaceAll("\\s+", "")).isDefined
       finally src.close()
@@ -61,6 +62,16 @@ class StructureGuardSpec extends AnyFunSuite {
     val hits = offenders("""\.writeStream\b|processAllAvailable""", "StreamOps.scala")
     assert(hits.isEmpty,
       hits.mkString("run the stream through StreamOps.drainToTable instead:\n", "\n", ""))
+  }
+
+  test("the checkpoint file manager is picked only in StreamOps") {
+    // drainToTable picks the manager for every stream and restores the
+    // caller's choice; a second place setting the conf or naming a
+    // manager class would fork a process per checkpoint file again
+    val hits = offenders("""checkpointFileManagerClass|CheckpointFileManager""",
+      "StreamOps.scala", "LocalCheckpointFileManager.scala")
+    assert(hits.isEmpty,
+      hits.mkString("let StreamOps.drainToTable pick the checkpoint manager:\n", "\n", ""))
   }
 
   test("lineage is cut only through Fixpoint") {
