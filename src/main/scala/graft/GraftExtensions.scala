@@ -14,13 +14,19 @@ import graft.features.EwmAgg
   *
   * Two entry points for the same builders:
   *  - config-time: `spark.sql.extensions=graft.GraftExtensions`
-  *    (or `.withExtensions(new GraftExtensions)`);
-  *  - runtime: `GraftExtensions.register(spark)` on a live session.
+  *    (or `.withExtensions(new GraftExtensions)`), which also injects
+  *    the two EWM planner strategies;
+  *  - runtime: `GraftExtensions.register(spark)` on a live session,
+  *    functions only.
+  * Neither adds an optimizer rule: a per-key top-k is written as
+  * `graft.operators.TopK.perKey` (or `graft_topk` in SQL), not as a
+  * row_number window that a rule would have to recognise.
   *
   * Surface: `ewm(x, span)` (window aggregate), `graft_dot(a, b)`,
   * `graft_cosine(a, b)` (array<double> similarity), `graft_clip(x, lo,
   * hi)`, `graft_fingerprint(text)`, `graft_tokens(text)`,
-  * `graft_token_count(text)`.
+  * `graft_token_count(text)`, `graft_topk(sort_key, payload, k)`,
+  * `graft_hll(key, p)`.
   *
   * The builders mirror the Column-API definitions in `sim.Similarity` /
   * `text.TextOps` / `features.WindowOps` as UnresolvedFunction trees
@@ -38,7 +44,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     e.injectPlannerStrategy(_ => graft.plans.EwmMacdStrategy)
     e.injectPlannerStrategy(_ => graft.plans.EwmStrategy)
-    e.injectOptimizerRule(_ => graft.plans.TopKRewrite)
   }
 }
 

@@ -31,7 +31,8 @@ object Metrics {
   /** Per-class TP/FP/FN + precision/recall/F1 + global accuracy
     * (repeated per row), all derived from the confusion long-form. */
   def perClassF1(df: DataFrame, trueCol: String, predCol: String): DataFrame = {
-    val cm = confusionLong(df, trueCol, predCol).cache()
+    val cm = graft.io.PersistRegistry.trackPersist(
+      confusionLong(df, trueCol, predCol))
     val acc = cm.agg(
       (sum(when(col("label_true") === col("label_pred"), col("n")).otherwise(0L)) /
         sum(col("n"))).as("accuracy"))

@@ -108,6 +108,13 @@ object Tables {
     else df
   }
 
+  /** The streaming twin of [[apply]]: a file stream over `dir` that
+    * picks up only `<name>.parquet`. `ts` stays the raw µs long; stream
+    * lines convert it themselves where they need calendar semantics. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.readStream.schema(schemas(name))
+      .option("pathGlobFilter", s"$name.parquet").parquet(dir)
+
   /** S1: the reference's per-symbol file layout (`{SYM}_data.parquet`,
     * one file per asset) read as ONE scan, with the symbol recovered
     * from the file name (`data_merger.py:25` derives it from the stem) —

@@ -1733,9 +1733,9 @@ object DedupSimPack extends QueryPack {
         val e = Tables.embeddings(s, dir)
           .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         val queries = e.filter($"vec_id" < 3)
-        val pool = Similarity.cosineTopK(e, queries, "vec_id", "v", 20)
-          .select($"query_id", $"corpus_id", $"cos".as("rel"))
-          .persist()
+        val pool = PersistRegistry.trackPersist(
+          Similarity.cosineTopK(e, queries, "vec_id", "v", 20)
+            .select($"query_id", $"corpus_id", $"cos".as("rel")))
         val nv = Similarity.withNormalized(e, "v", "nv")
           .select($"vec_id", $"nv")
         val a = pool.select($"query_id", $"corpus_id".as("a"))

@@ -146,7 +146,7 @@ object PipelinePack extends QueryPack {
     // retained hashes, every unordered segment pair estimated for
     // union size, intersection size and Jaccard from the k-sample of
     // the pair union (ThetaKmv scaladoc has the estimator argument;
-    // RSE ≈ 1/√k ≈ 6%). The register build is the TopKRewrite heap
+    // RSE ≈ 1/√k ≈ 6%). The register build is the graft_topk heap
     // aggregate (combine state ≤ k per group per partition); the pair
     // expansion broadcasts a ≤ groups²/2-row frame — so the 100 TB
     // shape is: one scan of raw keys, then k·groups-row algebra. The
@@ -324,8 +324,8 @@ object PipelinePack extends QueryPack {
         val log = Tables.events(s, dir)
           .select($"user_id", unix_micros($"ts").as("t"),
             $"event_id", $"event_type")
-        val hist = Cdc.scd2(log, Seq("user_id"), "t", "event_id",
-          "event_type").persist()
+        val hist = graft.io.PersistRegistry.trackPersist(Cdc.scd2(log,
+          Seq("user_id"), "t", "event_id", "event_type"))
         def at(ts: Long) = hist
           .filter($"valid_from" <= ts &&
             ($"valid_to".isNull || $"valid_to" > ts))

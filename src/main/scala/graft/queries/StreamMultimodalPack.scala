@@ -25,8 +25,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st1_stream_daily",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .withColumn("ts", timestamp_micros($"ts"))
         StreamOps.drainToTable(StreamOps.dailyCounts(stream), "complete", "st1")
           .select(unix_micros($"day").as("day"), $"event_type", $"n",
@@ -45,8 +44,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st6_stream_topk",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
         val agg = stream.groupBy($"user_id")
           .agg(graft.operators.TopKAgg.topK(
             struct($"value".isNull.cast("int"), negate($"value"), $"event_id"),
@@ -79,8 +77,7 @@ object StreamMultimodalPack extends QueryPack {
               .select($"vec_id", $"embedding".cast("array<double>").as("v"))
               .filter($"vec_id" < 10), "v", "qv")
           .select($"vec_id".as("query_id"), $"qv")
-        val stream = s.readStream.schema(Tables.embeddingsSchema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "embeddings")
           .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         val scored = graft.sim.Similarity.withNormalized(stream, "v", "cv")
           .join(broadcast(queries), $"query_id" =!= $"vec_id")
@@ -129,8 +126,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st9_stream_join",
       (s, dir) => {
         import s.implicits._
-        def stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        def stream = Tables.stream(s, dir, "events")
           .withColumn("ts", timestamp_micros($"ts"))
           .select($"user_id", $"event_id", $"ts", $"event_type", $"value")
         val clicks = stream.filter($"event_type" === "click").drop("event_type")
@@ -163,8 +159,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st12_stream_left_join",
       (s, dir) => {
         import s.implicits._
-        def stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        def stream = Tables.stream(s, dir, "events")
           .withColumn("ts", timestamp_micros($"ts"))
           .select($"user_id", $"event_id", $"ts", $"event_type", $"value")
         val clicks = stream.filter($"event_type" === "click").drop("event_type")
@@ -210,8 +205,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st10_stream_sessions",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .withColumn("ts", timestamp_micros($"ts"))
           .withWatermark("ts", "0 seconds")
         val agg = stream
@@ -248,8 +242,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st11_stream_enrich",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .withColumn("ts", timestamp_micros($"ts"))
           .select($"user_id", $"ts", $"event_type", $"value")
         val dim = Tables.customer(s, dir).select($"c_custkey", $"c_mktsegment")
@@ -273,8 +266,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st2_stream_transitions",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .select($"user_id", $"ts".as("t"), $"event_id", $"event_type")
           .as[StreamOps.KeyedEvent]
         StreamOps.drainToTable(StreamOps.transitionsStream(stream),
@@ -315,8 +307,7 @@ object StreamMultimodalPack extends QueryPack {
       (s, dir) => {
         import s.implicits._
         val stages = Seq("signup", "view", "click", "purchase")
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .filter($"event_type".isin(stages: _*))
           .select($"user_id", $"ts".as("t"), $"event_id", $"event_type")
           .as[StreamOps.KeyedEvent]
@@ -355,8 +346,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st15_stream_holt",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .select($"user_id", $"ts".as("t"), $"event_id", $"value")
           .as[StreamOps.ValueEvent]
         StreamOps.drainToTable(StreamOps.holtStream(stream, alpha = 0.5, beta = 0.3),
@@ -409,8 +399,7 @@ object StreamMultimodalPack extends QueryPack {
           .select($"doc_id", $"lang",
             graft.text.TextOps.tokens($"text").as("ts"))
         val model = graft.text.NaiveBayes.fit(tr, "lang", "ts")
-        val stream = s.readStream.schema(Tables.documentsSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "documents")
           .filter($"doc_id" % 5 === 0)
           .select($"doc_id".as("__id"), $"lang".as("true_label"),
             explode(graft.text.TextOps.tokens($"text")).as("tok"))
@@ -470,8 +459,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st23_stream_asof",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .filter($"event_type".isin("view", "purchase"))
           .select($"user_id", $"ts".as("t"), $"event_id", $"event_type",
             $"value")
@@ -522,8 +510,7 @@ object StreamMultimodalPack extends QueryPack {
             "event_id", "band")
           .select($"user_id", $"band", $"valid_from", $"valid_to",
             $"version")
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .filter($"event_type" === "purchase")
           .select($"user_id".as("p_user"), $"event_id", $"ts".as("t"))
         val joined = stream.join(dim,
@@ -619,8 +606,7 @@ object StreamMultimodalPack extends QueryPack {
         // sf0.1 — while staying in-row is what keeps the stream
         // stateless; parity with the HOF form is pinned in
         // ShingleMinHashSpec and by this query's oracle hash
-        val stream = s.readStream.schema(Tables.documentsSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "documents")
           .filter($"doc_id" % 5 === 0)
           .select($"doc_id",
             graft.text.ShingleMinHash($"text", 3, 16).as("ss"))
@@ -704,8 +690,7 @@ object StreamMultimodalPack extends QueryPack {
             Similarity.signBucket($"v", bits).as("probe"),
             $"nv".as("nv_c")))
         val stream = Similarity.withNormalized(
-            s.readStream.schema(Tables.embeddingsSchema)
-              .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+            Tables.stream(s, dir, "embeddings")
               .filter($"vec_id" % 5 === 0)
               .select($"vec_id", $"label",
                 $"embedding".cast("array<double>").as("v")),
@@ -816,8 +801,7 @@ object StreamMultimodalPack extends QueryPack {
         // (permutation indices 0..2F·16−1 are contiguous across
         // families) — see the st28 note; parity pinned in
         // ShingleMinHashSpec and by this query's oracle hash
-        val scored = s.readStream.schema(Tables.documentsSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        val scored = Tables.stream(s, dir, "documents")
           .filter($"doc_id" % 5 === 0)
           .select($"doc_id",
             graft.text.ShingleMinHash($"text", 3, nFam * 16).as("ss"))
@@ -921,8 +905,7 @@ object StreamMultimodalPack extends QueryPack {
         def cellIds(gram: org.apache.spark.sql.Column) =
           array((0 until depth).map(j => lit(j.toLong * width)
             + pmod(xxhash64(gram, lit(j)), lit(width.toLong))): _*)
-        val stream = s.readStream.schema(Tables.documentsSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "documents")
           .select(graft.text.TextOps.tokens($"text").as("__toks"))
           .select(explode(graft.text.TextOps.ngrams($"__toks", 2)).as("gram"))
           .select(explode(cellIds($"gram")).as("bucket"))
@@ -980,8 +963,7 @@ object StreamMultimodalPack extends QueryPack {
           .agg(count(lit(1)).as("n_ref"))
         // eventsSchema reads ts as the raw µs epoch long (the
         // TIMESTAMP(MICROS) contract) — no conversion needed
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .filter($"ts" >= cut)
           .select(binOf($"value").as("bucket"))
           .as[StreamOps.BucketRow]
@@ -1044,8 +1026,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st19_stream_kalman",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .select($"user_id", $"ts".as("t"), $"event_id", $"value")
           .as[StreamOps.ValueEvent]
         StreamOps.drainToTable(StreamOps.kalmanStream(stream, q = 0.1, r = 1.0),
@@ -1098,8 +1079,7 @@ object StreamMultimodalPack extends QueryPack {
           .agg(r6(avg($"value")).as("mu"),
             r6(stddev_samp($"value")).as("sd"))
           .filter($"sd".isNotNull && $"sd" > 0)
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .select($"user_id", $"ts".as("t"), $"event_id", $"value")
           .join(broadcast(prior), Seq("user_id")) // stream-static inner
           .select($"user_id", $"t", $"event_id", $"value", $"mu", $"sd")
@@ -1180,8 +1160,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st17_stream_hll",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
         val regs = graft.sketch.Hll.withRegisterCols(stream, "event_id", 12)
           .select($"bucket", $"rank".cast("int").as("rank"))
           .as[StreamOps.RegisterRow]
@@ -1209,8 +1188,7 @@ object StreamMultimodalPack extends QueryPack {
         val st = Tables.events(s, dir)
           .agg(min($"value"), max($"value"), count(lit(1))).head()
         val (vmin, vmax, n) = (st.getDouble(0), st.getDouble(1), st.getLong(2))
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .select(graft.sketch.HistQuantile.bucketOf(
             $"value", lit(vmin), lit(vmax), nBins).as("bucket"))
           .as[StreamOps.BucketRow]
@@ -1227,8 +1205,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st4_stream_rolling",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .select($"user_id", $"ts".as("t"), $"event_id", $"value")
           .as[StreamOps.ValueEvent]
         StreamOps.drainToTable(StreamOps.rollingFeaturesStream(stream, 24),
@@ -1255,8 +1232,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st5_stream_ewm",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .select($"user_id", $"ts".as("t"), $"event_id", $"value")
           .as[StreamOps.ValueEvent]
         StreamOps.drainToTable(StreamOps.ewmStream(stream, span = 12.0),
@@ -1289,8 +1265,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st13_stream_upsert",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .select($"user_id", $"ts".as("t"), $"event_id",
             $"event_type", $"value")
         val agg = stream.groupBy($"user_id")
@@ -1320,8 +1295,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st3_stream_dedup",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
           .withColumn("ts", timestamp_micros($"ts"))
           .select($"ts", $"user_id", $"event_type")
         StreamOps.drainToTable(
@@ -2833,8 +2807,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st25_stream_jpeg",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.documentsSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "documents")
         val feats = Multimodal.netpbmFeatures(
           Multimodal.synthJpegMixedPayload(stream, "doc_id"))
         val agg = feats
@@ -2880,8 +2853,7 @@ object StreamMultimodalPack extends QueryPack {
     Q("st26_stream_flac",
       (s, dir) => {
         import s.implicits._
-        val stream = s.readStream.schema(Tables.documentsSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "documents")
         val feats = Multimodal.flacFeatures(
           Multimodal.synthFlacPayload(stream, "doc_id"))
         val agg = feats
@@ -2946,8 +2918,7 @@ object StreamMultimodalPack extends QueryPack {
       (s, dir) => {
         import s.implicits._
         val k = 256
-        val stream = s.readStream.schema(Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
+        val stream = Tables.stream(s, dir, "events")
         val rows = stream.select($"event_type".cast("string").as("g"),
             graft.sketch.ThetaKmv.hash52($"user_id").as("h"))
           .as[StreamOps.KmvRow]

@@ -40,8 +40,7 @@ object StreamProbe {
     locally {
       val t0 = System.nanoTime()
       graft.streaming.StreamOps.drainToTable(
-        spark.readStream.schema(graft.io.Tables.eventsSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(sfDir)
+        graft.io.Tables.stream(spark, sfDir, "events")
           .select(count(lit(1)).as("n")),
         "complete", "probe_floor")
       println(f"[streamprobe] floor_total ${(System.nanoTime() - t0) / 1e9}%.2fs")

@@ -32,9 +32,6 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - a LocalRelation (driver-computed literal rows in data order).
   */
 class DeterministicOrderSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestSession.spark
-  private val sf = "/root/testdata/sf0.001"
-
   /** True iff the plan's row order is a declared total order (or the
     * plan emits at most one row). */
   private def deterministic(plan: LogicalPlan): Boolean = plan match {
@@ -58,9 +55,9 @@ class DeterministicOrderSpec extends AnyFunSuite {
 
   test("every declared query's optimized plan ends in a global Sort " +
     "or a single-row aggregate; no unbounded cross join anywhere") {
-    // Two structural gates in ONE pass over the optimized plans
-    // (building a plan executes the streaming queries' drains, so a
-    // second loop would double the spec's cost):
+    // Two structural gates over the optimized plans of the shared
+    // QuerySweep (building a plan executes the streaming queries'
+    // drains, so the gates share one walk of the builders):
     //  1. the determinism wrapper is in place (above);
     //  2. every condition-free / Cross join has a ≤1-row side (the
     //     crossJoin(broadcast(1-row agg)) scalar idiom) or an
@@ -73,9 +70,10 @@ class DeterministicOrderSpec extends AnyFunSuite {
     //     permanent gate: an UNHINTED unbounded cross join — the one
     //     plan shape that cannot survive 100 TB — fails here by
     //     query name.
-    val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, sf).queryExecution.optimizedPlan
+    val violations = QuerySweep.results.toSeq.flatMap {
+      case (name, Left(error)) => Seq(s"$name: $error")
+      case (name, Right(q)) =>
+        val plan = q.optimized
         val order =
           if (deterministic(plan)) None
           else Some(s"$name: no deterministic terminal order " +

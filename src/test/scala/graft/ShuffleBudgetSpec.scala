@@ -16,10 +16,11 @@ import graft.tools.ExchangeAudit
   * recorded, so the budget can't rot by omission.
   *
   * Streaming (`st*`) queries are exempt: their declared plan is the
-  * post-drain memory-sink aggregate (the interesting streaming state
-  * is gated by StreamingSpec/WatermarkSpec and the StateMetrics bench
-  * sideline), and re-executing every stream here would double suite
-  * cost for a constant-shape plan.
+  * post-drain memory-sink aggregate, a constant-shape plan (the
+  * interesting streaming state is gated by StreamingSpec/WatermarkSpec
+  * and the StateMetrics bench sideline). The counts are read from the
+  * shared [[QuerySweep]], which builds every query once for all three
+  * whole-suite gates.
   */
 class ShuffleBudgetSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -57,27 +58,23 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   }
 
   test("every batch query stays within its recorded shuffle budget") {
-    // Hermetic cold-cache state: a previously materialized shared frame
-    // (dedup pairs, ML features, corr graph) prints its InMemoryRelation
-    // build subtree at every reference, inflating the textual Exchange
-    // count — clear everything so plans match the generator's fresh
-    // session, independent of which specs ran before this one.
-    SparkEntry.clearPackCaches(spark)
-    spark.catalog.clearCache() // Metrics.confusion & friends cache by plan
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1)
+    // The counts come from QuerySweep, which walks the queries on a
+    // cleared store (the generator's cold state) and counts each
+    // query's executed plan before that query runs an action.
+    val failures = QuerySweep.results.toSeq
       .filterNot(_._1.startsWith("st"))
-      .flatMap { case (name, fn) =>
-        val plan = fn(spark, "/root/testdata/sf0.001")
-          .queryExecution.executedPlan
-        val got = ExchangeAudit.countShuffles(plan)
-        budget.get(name) match {
-          case None => Some(s"$name: no budget line — run ExchangeAudit and " +
-            s"record it (currently $got shuffles)")
-          case Some(b) if got > b =>
-            Some(s"$name: $got shuffles, budget $b — the plan gained an " +
-              "Exchange; fix the regression or consciously raise the budget")
-          case _ => None
-        }
+      .flatMap {
+        case (name, Left(error)) => Some(s"$name: $error")
+        case (name, Right(q)) =>
+          val got = q.shuffles.get // counted for every batch query
+          budget.get(name) match {
+            case None => Some(s"$name: no budget line — run ExchangeAudit and " +
+              s"record it (currently $got shuffles)")
+            case Some(b) if got > b =>
+              Some(s"$name: $got shuffles, budget $b — the plan gained an " +
+                "Exchange; fix the regression or consciously raise the budget")
+            case _ => None
+          }
       }
     assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
   }

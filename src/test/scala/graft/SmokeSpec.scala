@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The specs' shared session: the one engine config (`GraftSession`)
-  * on a fixed local[4], so plan shapes do not depend on the host. */
-object SparkTestSession {
-  lazy val spark: SparkSession = GraftSession.local(4)
-}
-
 /** Driver-contract smoke: entry() yields rows; every declared query runs
-  * and yields rows on sf0.001; every oracle key has a query. */
+  * and yields rows on sf0.001 (read from the shared [[QuerySweep]]);
+  * every oracle key has a query. */
 class SmokeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val sf = "/root/testdata/sf0.001"
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -32,10 +25,13 @@ class SmokeSpec extends AnyFunSuite {
     * sparse corr graph peels away entirely (sf0.01 keeps 1623 edges). */
   private val mayBeEmpty = Set("d2_minhash_lsh", "w13_flags", "g29_ktruss")
 
-  for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+  for (name <- SparkEntry.queries.keys.toSeq.sorted) {
     test(s"query $name runs and returns rows on sf0.001") {
-      val n = fn(spark, sf).count()
-      if (!mayBeEmpty(name)) assert(n > 0, s"$name returned no rows")
+      QuerySweep.results(name) match {
+        case Left(error) => fail(s"$name: $error")
+        case Right(q) =>
+          if (!mayBeEmpty(name)) assert(q.rows > 0, s"$name returned no rows")
+      }
     }
   }
 }

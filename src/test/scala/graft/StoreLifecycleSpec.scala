@@ -72,6 +72,32 @@ class StoreLifecycleSpec extends AnyFunSuite {
     assert(queries.map(run) == rows, "re-running after the clear changed rows")
   }
 
+  test("clearPackCaches releases what query paths persist (cdc4, s13, g14, m9)") {
+    val sc = spark.sparkContext
+    val cache = spark.sharedState.cacheManager
+    // each query persists a frame on its own path: cdc4's SCD2 history,
+    // s13's MMR pool, and Metrics.perClassF1's confusion counts (g14
+    // directly, m9 through ClassifierPipeline)
+    val left = Seq("cdc4_snapshot_diff", "s13_mmr_diverse", "g14_f1",
+      "m9_classifier").flatMap { name =>
+      SparkEntry.clearPackCaches(spark)
+      spark.catalog.clearCache()
+      val before = sc.getPersistentRDDs.keySet
+      run(name)
+      // a lineage cut (Fixpoint.cut's local checkpoint) is not the
+      // store's: the context cleaner drops it once its frame is gone
+      val added = (sc.getPersistentRDDs -- before)
+        .filterNot(_._2.isCheckpointed).keySet
+      assert(!cache.isEmpty && added.nonEmpty, s"$name persisted nothing")
+      SparkEntry.clearPackCaches(spark)
+      val rdds = sc.getPersistentRDDs.keySet intersect added
+      if (cache.isEmpty && rdds.isEmpty) None
+      else Some(s"$name: cached entries left: ${!cache.isEmpty}, " +
+        s"persistent RDDs left: $rdds")
+    }
+    assert(left.isEmpty, left.mkString("still persisted after clear:\n", "\n", ""))
+  }
+
   test("m6/m6i/m10/m10i collect the corr network once; a clear rebuilds it") {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger

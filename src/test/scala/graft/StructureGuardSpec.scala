@@ -7,9 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`graft.io.PersistRegistry`), writes per-row kernels one way
   * (plain methods called through `graft.Kernel`), runs streams one
   * way (`StreamOps.drainToTable`, which alone picks the checkpoint
-  * file manager) and cuts lineage one way
-  * (`graft.operators.Fixpoint.cut`). Fails when another pattern appears
-  * under src/main/scala, so none can grow back. */
+  * file manager), opens file streams one way (`Tables.stream`),
+  * persists query-path frames one way (`PersistRegistry.trackPersist`)
+  * and cuts lineage one way (`graft.operators.Fixpoint.cut`). Fails
+  * when another pattern appears under src/main/scala, so none can grow
+  * back. */
 class StructureGuardSpec extends AnyFunSuite {
   private val sources: Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -72,6 +74,22 @@ class StructureGuardSpec extends AnyFunSuite {
       "StreamOps.scala", "LocalCheckpointFileManager.scala")
     assert(hits.isEmpty,
       hits.mkString("let StreamOps.drainToTable pick the checkpoint manager:\n", "\n", ""))
+  }
+
+  test("frames persist through the store: no .cache(), no .persist( in a query") {
+    // an untracked persist outlives clearPackCaches; library code that
+    // persists and unpersists in one scope may call persist directly
+    val hits = offenders("""\.cache\(\)""") ++
+      offenders("""\.persist\(""").filter(_.contains("graft/queries/"))
+    assert(hits.isEmpty, hits.distinct.mkString(
+      "persist through graft.io.PersistRegistry.trackPersist instead:\n", "\n", ""))
+  }
+
+  test("file streams open only through Tables.stream") {
+    // one place pairs a table's schema with its file filter
+    val hits = offenders("""readStream\.schema\(""", "Tables.scala")
+    assert(hits.isEmpty,
+      hits.mkString("open the stream with graft.io.Tables.stream instead:\n", "\n", ""))
   }
 
   test("lineage is cut only through Fixpoint") {
