@@ -183,7 +183,7 @@ object Dedup {
     * canonical representative). */
   def components(edges: DataFrame, idA: String = "id_a", idB: String = "id_b",
                  maxIter: Int = graft.graph.Components.MaxIter,
-                 collectEdgeThreshold: Long = 5000000L): DataFrame = {
+                 collectEdgeThreshold: Long = graft.graph.DriverEdges.CollectThreshold): DataFrame = {
     val sym = edges.select(col(idA).as("a"), col(idB).as("b"))
       .unionByName(edges.select(col(idB).as("a"), col(idA).as("b")))
       .distinct().persist()

@@ -22,8 +22,14 @@ import graft.operators.{Fixpoint, LoopFrames}
   * Scale shape of a propagation round: ONE edge-keyed shuffle join
   * (edge list against the node-sized label frame) plus one
   * destination-keyed min aggregate — the canonical Pregel round — with
-  * the label frame cut through [[Fixpoint]]. No driver-side iteration
-  * state.
+  * the label frame cut through [[Fixpoint]].
+  *
+  * Size rule, shared by both: an edge list of at most
+  * [[DriverEdges.CollectThreshold]] rows is fetched once and the loop
+  * runs on the driver (union-find in [[resolve]], the K min-label
+  * rounds in [[run]]); only a larger one keeps its iteration state in
+  * distributed frames. Min-label propagation over integers is exact,
+  * so both paths of [[run]] give the same rows and schema.
   */
 object Components {
 
@@ -32,21 +38,50 @@ object Components {
     *              (the [[PageRank.run]] contract).
     * @return (node, label) after `k` rounds; label = component min id
     *         once k ≥ diameter. */
-  def run(edges: DataFrame, k: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
+  def run(edges: DataFrame, k: Int): DataFrame =
+    DriverEdges.fixedRounds(edges, schema(edges, k))(distributed(_, k))(local(_, k))
+
+  /** The distributed rounds; the label frame is cut every other round
+    * and on the last. */
+  private[graft] def distributed(edges: DataFrame, k: Int): DataFrame = {
     // loop constant keyed on the per-round join key (round-20)
     val e = LoopFrames.keyed(edges, "src")
-    val labels0 = Fixpoint.cut(e.select($"src".as("node")).distinct()
-      .select($"node", $"node".as("label")))
-    Fixpoint.run(labels0, k, cutEvery = 2, cutLast = true) { (labels, _) =>
-      // merge hint at the JOIN site — see LoopFrames.keyed's scaladoc
-      val nbrMin = e.hint("merge")
-        .join(labels.select($"node".as("src"), $"label".as("slabel")), "src")
-        .groupBy($"dst".as("node")).agg(min($"slabel").as("nbr"))
-      labels.join(nbrMin, Seq("node"), "left")
-        .select($"node", least($"label", coalesce($"nbr", $"label")).as("label"))
+    Fixpoint.run(Fixpoint.cut(init(e)), k, cutEvery = 2, cutLast = true) {
+      (labels, _) => round(e, labels)
     }.state
+  }
+
+  /** The same rounds on the driver: the node set is the distinct srcs
+    * (the distributed left join keeps it), and a node takes the least
+    * of its label and its in-neighbours' labels. */
+  private def local(edges: Array[(Long, Long)], k: Int): Seq[(Long, Long)] = {
+    var labels = scala.collection.mutable.LongMap.from(edges.map(e => (e._1, e._1)))
+    for (_ <- 1 to k) {
+      val nbr = scala.collection.mutable.LongMap.empty[Long]
+      edges.foreach { case (s, d) =>
+        val l = labels(s)
+        if (nbr.get(d).forall(l < _)) nbr(d) = l
+      }
+      labels = labels.map { case (n, l) => (n, math.min(l, nbr.getOrElse(n, l))) }
+    }
+    labels.toSeq.sortBy(_._1)
+  }
+
+  private def init(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).distinct().select(col("node"), col("node").as("label"))
+
+  /** The distributed output's schema, by analysis alone: every round
+    * after the first has the first's shape. */
+  private def schema(e: DataFrame, k: Int) =
+    (if (k <= 0) init(e) else round(e, init(e))).schema
+
+  private def round(e: DataFrame, labels: DataFrame): DataFrame = {
+    // merge hint at the JOIN site — see LoopFrames.keyed's scaladoc
+    val nbrMin = e.hint("merge")
+      .join(labels.select(col("node").as("src"), col("label").as("slabel")), "src")
+      .groupBy(col("dst").as("node")).agg(min(col("slabel")).as("nbr"))
+    labels.join(nbrMin, Seq("node"), "left")
+      .select(col("node"), least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
   }
 
   /** Round cap of [[resolve]]'s propagation loop: past it the
@@ -72,27 +107,37 @@ object Components {
     *            read. Nodes without an edge are not in the output.
     * @return (id, label), label = min id of the node's component. */
   def resolve(sym: DataFrame, maxIter: Int = MaxIter,
-              collectEdgeThreshold: Long = 5000000L): DataFrame = try {
+              collectEdgeThreshold: Long = DriverEdges.CollectThreshold): DataFrame = try {
     val spark = sym.sparkSession
     import spark.implicits._
-    val probeLimit = math.min(collectEdgeThreshold + 1, Int.MaxValue.toLong).toInt
-    if (sym.limit(probeLimit).count() <= collectEdgeThreshold) {
-      val fetched = sym.select($"a", $"b").as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      fetched.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      return fetched.map(_._1).distinct.map(id => (id, find(id))).toSeq
-        .toDF("id", "label")
+    DriverEdges.fetch(sym, "a", "b", collectEdgeThreshold) match {
+      case Some(fetched) => unionFind(fetched).toDF("id", "label")
+      case None => propagate(sym, maxIter)
     }
+  } finally sym.unpersist()
+
+  /** (id, min id of its component) for every edge endpoint. */
+  private def unionFind(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.map(_._1).distinct.map(id => (id, find(id))).toSeq
+  }
+
+  /** [[resolve]]'s distributed path: min-label propagation with pointer
+    * jumping over a keyed copy of `sym`. */
+  private def propagate(sym: DataFrame, maxIter: Int): DataFrame = {
+    val spark = sym.sparkSession
+    import spark.implicits._
     // keyed on the per-round join key: an unkeyed persisted frame is
     // re-shuffled by every propagation round (the LoopFrames rationale)
     val symK = LoopFrames.keyed(sym, "b")
@@ -120,7 +165,7 @@ object Components {
           "propagation rounds")
       res.state.select($"id", $"label")
     } finally symK.unpersist()
-  } finally sym.unpersist()
+  }
 
   /** DuckDB CTE chain replaying [[run]] on an `edges(src, dst)` CTE the
     * caller prepends: emits `nodes, l_0 … l_K`; select from `l_$k`. */

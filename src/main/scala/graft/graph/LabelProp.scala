@@ -19,6 +19,13 @@ import graft.operators.{Fixpoint, LoopFrames}
   * (the m13 lesson: multi-referenced CTEs inline exponentially in
   * engines without CTE materialization).
   *
+  * Size rule: an edge list of at most [[DriverEdges.CollectThreshold]]
+  * rows (the correlation graph of m15 has a few thousand) is fetched
+  * once and the K rounds run on the driver ([[DriverEdges.fixedRounds]]);
+  * a larger one runs the distributed rounds. Both paths give the same
+  * rows and schema: the rounds are integer counting, an argmax with
+  * ties to the smallest label, over the same edge multiset.
+  *
   * PRECONDITION (as [[PageRank.run]]): `edges` symmetric — every
   * undirected edge present in both directions — so the node set is
   * derivable from sources alone and no neighbor is invisible.
@@ -26,30 +33,62 @@ import graft.operators.{Fixpoint, LoopFrames}
 object LabelProp {
 
   /** K rounds over symmetric `(src, dst)` edges; returns
-    * `(node, label)`. The label frame is cut every other round
+    * `(node, label)`. */
+  def run(edges: DataFrame, k: Int): DataFrame =
+    DriverEdges.fixedRounds(edges, schema(edges, k))(distributed(_, k))(local(_, k))
+
+  /** The distributed rounds; the label frame is cut every other round
     * ([[Fixpoint]]). */
-  def run(edges: DataFrame, k: Int): DataFrame = {
+  private[graft] def distributed(edges: DataFrame, k: Int): DataFrame = {
     // loop constant keyed on the per-round join key (round-20): every
     // round equi-joins the edge table on src — shuffle+sort it once
     val e = LoopFrames.keyed(edges, "src")
-    val labels0 = e.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    Fixpoint.run(labels0, k, cutEvery = 2) { (labels, _) =>
-      // merge hint at the JOIN site (not baked into the keyed frame) —
-      // see LoopFrames.keyed's scaladoc
-      val cnt = e.hint("merge")
-        .join(labels.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      // argmax by (c desc, label asc) as a HASH aggregate (max of a
-      // lexicographic struct — the LouvainDist idiom, round-20):
-      // equivalent to the oracle's row_number ordering — (c, label)
-      // pairs are distinct per node, so the max is unique — without
-      // the per-round node-partitioned sort the window needed
-      cnt.groupBy(col("node"))
-        .agg(max_by(col("label"), struct(col("c"), negate(col("label"))))
-          .as("label"))
-    }.state
+    Fixpoint.run(init(e), k, cutEvery = 2)((labels, _) => round(e, labels)).state
+  }
+
+  /** The same rounds on the driver: every src starts as its own label;
+    * a round keeps the nodes that are the dst of an edge from a
+    * labelled src (the distributed inner join), counting each edge. */
+  private def local(edges: Array[(Long, Long)], k: Int): Seq[(Long, Long)] = {
+    var labels = scala.collection.mutable.LongMap.from(edges.map(e => (e._1, e._1)))
+    for (_ <- 1 to k) {
+      val counts = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+      edges.foreach { case (s, d) =>
+        labels.get(s).foreach(l => counts((d, l)) = counts.getOrElse((d, l), 0L) + 1)
+      }
+      val best = scala.collection.mutable.LongMap.empty[(Long, Long)] // node → (c, label)
+      counts.foreach { case ((d, l), c) =>
+        if (best.get(d).forall { case (bc, bl) => c > bc || (c == bc && l < bl) })
+          best(d) = (c, l)
+      }
+      labels = best.mapValuesNow(_._2)
+    }
+    labels.toSeq.sortBy(_._1)
+  }
+
+  private def init(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).distinct().withColumn("label", col("node"))
+
+  /** The distributed output's schema, by analysis alone: every round
+    * after the first has the first's shape. */
+  private def schema(e: DataFrame, k: Int) =
+    (if (k <= 0) init(e) else round(e, init(e))).schema
+
+  private def round(e: DataFrame, labels: DataFrame): DataFrame = {
+    // merge hint at the JOIN site (not baked into the keyed frame) —
+    // see LoopFrames.keyed's scaladoc
+    val cnt = e.hint("merge")
+      .join(labels.withColumnRenamed("node", "src"), "src")
+      .groupBy(col("dst").as("node"), col("label"))
+      .agg(count(lit(1)).as("c"))
+    // argmax by (c desc, label asc) as a HASH aggregate (max of a
+    // lexicographic struct — the LouvainDist idiom, round-20):
+    // equivalent to the oracle's row_number ordering — (c, label)
+    // pairs are distinct per node, so the max is unique — without
+    // the per-round node-partitioned sort the window needed
+    cnt.groupBy(col("node"))
+      .agg(max_by(col("label"), struct(col("c"), negate(col("label"))))
+        .as("label"))
   }
 
   /** Chained-CTE replay of [[run]] for a DuckDB oracle: expects an

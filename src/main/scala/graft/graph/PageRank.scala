@@ -35,9 +35,9 @@ object PageRank {
     val spark = edges.sparkSession
     import spark.implicits._
     if (validateSymmetry) {
-      val sinkOnly = edges.select($"dst".as("node"))
-        .except(edges.select($"src".as("node"))).limit(1).count()
-      require(sinkOnly == 0L,
+      val sinkFree = edges.select($"dst".as("node"))
+        .except(edges.select($"src".as("node"))).isEmpty
+      require(sinkFree,
         "PageRank.run requires dst ⊆ src (symmetric or at least " +
           "sink-free edges): a dst that never appears as src would be " +
           "dropped from the node set and its rank mass leaked")

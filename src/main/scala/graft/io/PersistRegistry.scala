@@ -1,6 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The engine's one session-scoped store: every memoized value and every
   * internally persisted frame lives here, so one [[clear]] releases a
@@ -11,6 +12,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (the df-capped shingle table in `Dedup.blockedNgramNearDup`, the
   *    normalized embeddings in `Similarity.nearDupPairs`), and memo
   *    builds use it for the frames they hand out.
+  *  - [[trackCut]] remembers the RDD behind a lineage cut
+  *    (`graft.operators.Fixpoint.cut`), whose blocks would otherwise
+  *    stay until the context cleaner collects the cut's frame.
   *  - [[memo]] computes a value once per (session, name, dir). Builds may
   *    nest (the verified pairs build the shingle signatures, k-means and
   *    the graph sketches build the feature frame or the corr graph), so
@@ -19,10 +23,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    and Bench builds and times as its own setup line; the store counts
   *    each stage's reads, which tells Bench which queries read it.
   *
-  * `clear(session)` unpersists the session's tracked frames and drops
-  * its memos, except a disk-backed stage's: a layout written to disk
-  * survives the clear, so re-reading it costs an existence check, not a
-  * rewrite. Without the clear, repeated invocations in a long-lived
+  * `clear(session)` unpersists the session's tracked frames and cuts,
+  * and drops its memos, except a disk-backed stage's: a layout written
+  * to disk survives the clear, so re-reading it costs an existence
+  * check, not a rewrite. Without the clear, repeated invocations in a long-lived
   * session (or Bench's warm + measured + re-time passes) accumulate
   * cached RDD blocks indefinitely. */
 object PersistRegistry {
@@ -43,6 +47,10 @@ object PersistRegistry {
   private val frames = scala.collection.mutable.Map[
     SparkSession, scala.collection.mutable.ArrayBuffer[DataFrame]]()
   private val readCounts = scala.collection.mutable.Map[(SparkSession, String), Long]()
+  // RDD ids, not frames: a held frame would keep a cut's blocks from the
+  // context cleaner, which frees them once the loop drops the frame
+  private val cuts = scala.collection.mutable.Map[
+    SparkSession, scala.collection.mutable.Set[Int]]()
 
   /** Persist `df` and remember it for a later [[clear]]. */
   def trackPersist(df: DataFrame): DataFrame = {
@@ -52,6 +60,18 @@ object PersistRegistry {
         scala.collection.mutable.ArrayBuffer.empty) += df
     }
     df
+  }
+
+  /** Remember the RDD behind the lineage cut `ds` for a later [[clear]]. */
+  def trackCut(ds: Dataset[_]): Unit = {
+    val ids = ds.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+    synchronized {
+      val held = cuts.getOrElseUpdate(ds.sparkSession, scala.collection.mutable.Set.empty)
+      held ++= ids
+      // a session that never clears keeps only ids the cleaner has not freed
+      if (held.size > 4096)
+        held.filterInPlace(ds.sparkSession.sparkContext.getPersistentRDDs.contains)
+    }
   }
 
   /** The value memoized for (session, name, dir), built on first read.
@@ -72,15 +92,18 @@ object PersistRegistry {
   private[io] def reads(session: SparkSession, counter: String): Long =
     synchronized { readCounts.getOrElse((session, counter), 0L) }
 
-  /** Unpersist every frame tracked for `session`, drop its memos except
-    * the disk-backed ones, and reset its read counts. */
+  /** Unpersist every frame tracked for `session` and every cut RDD it
+    * still holds, drop its memos except the disk-backed ones, and reset
+    * its read counts. */
   def clear(session: SparkSession): Unit = {
-    val tracked = synchronized {
+    val (tracked, cutIds) = synchronized {
       entries.filterInPlace { case ((s, _, _), e) => !(s eq session) || e.survivesClear }
       readCounts.filterInPlace { case ((s, _), _) => !(s eq session) }
-      frames.remove(session)
+      (frames.remove(session), cuts.remove(session))
     }
     tracked.foreach(_.foreach(_.unpersist()))
+    val live = session.sparkContext.getPersistentRDDs
+    cutIds.foreach(_.foreach(id => live.get(id).foreach(_.unpersist(blocking = false))))
   }
 }
 

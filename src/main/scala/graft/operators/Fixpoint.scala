@@ -40,8 +40,14 @@ import org.apache.spark.sql.functions.{coalesce, lit}
   */
 object Fixpoint {
 
-  /** The one lineage cut: eager, executor-local materialization. */
-  def cut[T](ds: Dataset[T]): Dataset[T] = ds.localCheckpoint()
+  /** The one lineage cut: eager, executor-local materialization. The
+    * store records the cut's RDD, so `PersistRegistry.clear` releases
+    * its blocks. */
+  def cut[T](ds: Dataset[T]): Dataset[T] = {
+    val out = ds.localCheckpoint()
+    graft.io.PersistRegistry.trackCut(out)
+    out
+  }
 
   /** When a loop stops before its round budget. */
   sealed trait Stop

@@ -16,8 +16,10 @@ import graft.operators.Fixpoint
   * frame's plan BE one full round over the keyed edge frame: the edge
   * side must show `InMemoryTableScan` with NO Exchange and NO Sort
   * above it inside the round's sort-merge join — only the node-sized
-  * state side shuffles. `LabelProp.run(e, 1)`, `HyperAnf.khopExact(e,
-  * 1)` and `HyperAnf.registerRounds(e, 1, p).last` have that property;
+  * state side shuffles. `LabelProp.distributed(e, 1)` (the path
+  * `LabelProp.run` takes above the driver-fetch threshold; this graph
+  * is below it), `HyperAnf.khopExact(e, 1)` and
+  * `HyperAnf.registerRounds(e, 1, p).last` have that property;
   * `Components.run` cuts its last round, so its round is replicated
   * below.
   *
@@ -51,7 +53,7 @@ object RoundPlans {
         ExchangeAudit.countShuffles(df.queryExecution.executedPlan))
     }
 
-    dump("round_labelprop", graft.graph.LabelProp.run(edges, 1))
+    dump("round_labelprop", graft.graph.LabelProp.distributed(edges, 1))
     // Components checkpoints its LAST round unconditionally, so its
     // returned plan is always truncated — the loop body is replicated
     // verbatim (Components.run's nbrMin+update over a checkpointed

@@ -9,7 +9,8 @@ import graft.graph.Components
   * (`run`): exact component recovery on a fixture, k = diameter
   * sufficiency on a path graph, and — the claim the g16 hash gate can't
   * see — that the declared query's round count reaches the FIXPOINT on
-  * the panel graph (so the output is true WCC, not k-hop minima). The
+  * the panel graph (so the output is true WCC, not k-hop minima), each
+  * on both of its paths ([[LoopParity]]). The
   * resolver (`resolve`, through `Dedup.components`): both of its paths
   * agree, and it fails past its round cap. */
 class ComponentsSpec extends AnyFunSuite {
@@ -21,7 +22,7 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("two components resolve to their min ids") {
     val edges = sym((1L, 2L), (2L, 3L), (10L, 11L))
-    val got = Components.run(edges, k = 3)
+    val got = LoopParity.components(edges, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
@@ -29,9 +30,9 @@ class ComponentsSpec extends AnyFunSuite {
   test("a path graph needs exactly diameter rounds") {
     // 1-2-3-4-5: label 1 reaches node 5 only at round 4
     val edges = sym((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-    val at3 = Components.run(edges, k = 3)
+    val at3 = LoopParity.components(edges, k = 3)
       .filter($"node" === 5L).head().getLong(1)
-    val at4 = Components.run(edges, k = 4)
+    val at4 = LoopParity.components(edges, k = 4)
       .filter($"node" === 5L).head().getLong(1)
     assert(at3 === 2L) // min id within 3 hops of node 5
     assert(at4 === 1L) // converged
@@ -53,8 +54,8 @@ class ComponentsSpec extends AnyFunSuite {
     val edges = und.select($"ka".as("src"), $"kb".as("dst"))
       .unionByName(und.select($"kb".as("src"), $"ka".as("dst")))
       .localCheckpoint()
-    val at7 = Components.run(edges, k = 7)
-    val at8 = Components.run(edges, k = 8)
+    val at7 = LoopParity.components(edges, k = 7)
+    val at8 = LoopParity.components(edges, k = 8)
     assert(at7.exceptAll(at8).isEmpty && at8.exceptAll(at7).isEmpty,
       "round 8 must equal round 7 — k=8 is claimed to be past the fixpoint")
   }
@@ -62,7 +63,7 @@ class ComponentsSpec extends AnyFunSuite {
   test("min-propagation moves the min label one hop per round on a 64-chain") {
     val chain = sym((1L to 63L).map(i => (i, i + 1)): _*)
     // node 64 still carries label 64-6=58 after 6 rounds, and needs all 63
-    val prop6 = Components.run(chain, k = 6)
+    val prop6 = LoopParity.components(chain, k = 6)
       .filter($"node" === 64L).head().getLong(1)
     assert(prop6 === 58L,
       "min-propagation at 6 rounds must NOT have converged on the chain")

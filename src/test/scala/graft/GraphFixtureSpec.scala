@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * the complement of their oracle hash checks (which prove
   * cross-engine equality, not truth): landmark BFS distances against
   * a reference BFS on a known graph, and label propagation against
-  * the hand-derived fixpoint of a two-community fixture. */
+  * the hand-derived fixpoint of a two-community fixture, on both of its
+  * paths ([[LoopParity]]). */
 class GraphFixtureSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -66,7 +67,7 @@ class GraphFixtureSpec extends AnyFunSuite {
     // rounds drive each triangle to its own minimum label
     val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L),
       (10L, 11L), (11L, 12L), (10L, 12L), (3L, 10L))
-    val labels = graft.graph.LabelProp.run(sym(pairs), k = 5)
+    val labels = LoopParity.labelProp(sym(pairs), k = 5)
       .as[(Long, Long)].collect().toMap
     // left triangle: min label 1 wins; right: node 10's own community
     assert(Set(1L, 2L, 3L).map(labels) === Set(1L),
@@ -87,7 +88,7 @@ class GraphFixtureSpec extends AnyFunSuite {
     // row_number(ORDER BY c DESC, label) did, or the oracle replay
     // diverges on every tie
     val pairs = Seq((1L, 5L), (2L, 5L))
-    val labels = graft.graph.LabelProp.run(sym(pairs), k = 1)
+    val labels = LoopParity.labelProp(sym(pairs), k = 1)
       .as[(Long, Long)].collect().toMap
     assert(labels(5L) === 1L, s"tie must resolve to smallest: $labels")
   }

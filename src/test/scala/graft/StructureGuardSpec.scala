@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (plain methods called through `graft.Kernel`), runs streams one
   * way (`StreamOps.drainToTable`, which alone picks the checkpoint
   * file manager), opens file streams one way (`Tables.stream`),
-  * persists query-path frames one way (`PersistRegistry.trackPersist`)
-  * and cuts lineage one way (`graft.operators.Fixpoint.cut`). Fails
+  * persists query-path frames one way (`PersistRegistry.trackPersist`),
+  * cuts lineage one way (`graft.operators.Fixpoint.cut`) and fetches a
+  * graph's edges to the driver one way (`graft.graph.DriverEdges`). Fails
   * when another pattern appears under src/main/scala, so none can grow
   * back. */
 class StructureGuardSpec extends AnyFunSuite {
@@ -98,6 +99,15 @@ class StructureGuardSpec extends AnyFunSuite {
     val hits = offenders("""localCheckpoint\(""", "Fixpoint.scala")
     assert(hits.isEmpty,
       hits.mkString("cut lineage with graft.operators.Fixpoint.cut instead:\n", "\n", ""))
+  }
+
+  test("graph code probes an edge count only in DriverEdges") {
+    // one size rule decides when a graph loop runs on the driver; a
+    // second probe would pick its own threshold, or collect unprobed
+    val hits = offenders("""\.limit\((?:[^()]|\([^()]*\))*\)\.count\(\)""",
+      "DriverEdges.scala").filter(_.contains("graft/graph/"))
+    assert(hits.isEmpty,
+      hits.mkString("fetch edges with graft.graph.DriverEdges.fetch instead:\n", "\n", ""))
   }
 
   test("MlPack runs the pairwise-corr build only in its two graph memos") {
